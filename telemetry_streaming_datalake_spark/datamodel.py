@@ -17,52 +17,25 @@ The driver's synthetic test data has no such tables, so this module
   events' January-2024 window; the last interval is open (RemovedOn
   NULL), exactly the shape the reference's temporal join expects.
 
-Each dimension has a DataFrame constructor *and* a DuckDB CTE string so
-``oracle_sql()`` runs against byte-identical dimension content.
+Each constant dimension has ONE ``VALUES`` literal shared by both
+engines: the DuckDB CTE selects from it for ``oracle_sql()``, and the
+DataFrame constructor runs the same literal through ``spark.sql`` (a
+``LocalTableScan``, so joining it starts no Python worker).
+``remote_history`` is derived from ``customer`` by twin expressions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 # --------------------------------------------------------------------------
 # metric mapping (metricmappings + aggtype + provider, flattened)
 # --------------------------------------------------------------------------
 
-_METRIC_MAPPING_ROWS = [
-    # raw_symbol, metric_id, provider_id, agg_type, category_id, provider_name
-    ("click", 100, 1, "SUM", 1, "web"),
-    ("view", 101, 1, "SUM", 1, "web"),
-    ("purchase", 102, 1, "SUM", 2, "web"),
-    ("signup", 103, 2, "LATEST", 2, "crm"),
-    ("error", 104, 2, "AVG", 3, "crm"),
-    # payload-derived metrics emitted by the silver name/value explode
-    # (from_json struct field and regex-extracted twin)
-    ("payload_k", 105, 3, "AVG", 4, "json"),
-    ("payload_k_re", 106, 3, "AVG", 4, "json"),
-]
-
-_METRIC_MAPPING_SCHEMA = StructType(
-    [
-        StructField("raw_symbol", StringType(), False),
-        StructField("metric_id", LongType(), False),
-        StructField("provider_id", LongType(), False),
-        StructField("agg_type", StringType(), False),
-        StructField("category_id", LongType(), False),
-        StructField("provider_name", StringType(), False),
-    ]
-)
-
-METRIC_MAPPING_CTE = """
-metric_mapping AS (
-    SELECT * FROM (VALUES
+# payload_k / payload_k_re are the payload-derived metrics emitted by the
+# silver name/value explode (from_json struct field and regex-extracted twin)
+_METRIC_MAPPING_VALUES = """(VALUES
         ('click',    100, 1, 'SUM',    1, 'web'),
         ('view',     101, 1, 'SUM',    1, 'web'),
         ('purchase', 102, 1, 'SUM',    2, 'web'),
@@ -70,52 +43,52 @@ metric_mapping AS (
         ('error',    104, 2, 'AVG',    3, 'crm'),
         ('payload_k',    105, 3, 'AVG', 4, 'json'),
         ('payload_k_re', 106, 3, 'AVG', 4, 'json')
-    ) AS t(raw_symbol, metric_id, provider_id, agg_type, category_id, provider_name)
+    ) AS t(raw_symbol, metric_id, provider_id, agg_type, category_id, provider_name)"""
+
+METRIC_MAPPING_CTE = f"""
+metric_mapping AS (
+    SELECT * FROM {_METRIC_MAPPING_VALUES}
 )
 """
 
 
 def metric_mapping(spark: SparkSession) -> DataFrame:
     """Tiny mapping dim — always joined with ``F.broadcast``."""
-    return spark.createDataFrame(_METRIC_MAPPING_ROWS, _METRIC_MAPPING_SCHEMA)
+    return spark.sql(
+        "SELECT raw_symbol, CAST(metric_id AS BIGINT) AS metric_id,"
+        " CAST(provider_id AS BIGINT) AS provider_id, agg_type,"
+        " CAST(category_id AS BIGINT) AS category_id, provider_name"
+        f" FROM {_METRIC_MAPPING_VALUES}"
+    )
 
 
 # --------------------------------------------------------------------------
 # custom metric mapping (custommetrics analog)
 # --------------------------------------------------------------------------
 
-_CUSTOM_METRIC_ROWS = [
-    # custom_metric_id, mapping_metric_id, mapping_type
-    (200, 100, "SUM"),  # total_engagement = click + view + purchase
-    (200, 101, "SUM"),
-    (200, 102, "SUM"),
-    (201, 102, "JOIN"),  # conversion pair: purchase vs click
-    (201, 100, "JOIN"),
-]
-
-_CUSTOM_METRIC_SCHEMA = StructType(
-    [
-        StructField("custom_metric_id", LongType(), False),
-        StructField("mapping_metric_id", LongType(), False),
-        StructField("mapping_type", StringType(), False),
-    ]
-)
-
-CUSTOM_METRIC_CTE = """
-custom_metric_mapping AS (
-    SELECT * FROM (VALUES
+# custom 200 = total_engagement (click + view + purchase);
+# custom 201 = conversion pair (purchase vs click)
+_CUSTOM_METRIC_VALUES = """(VALUES
         (200, 100, 'SUM'),
         (200, 101, 'SUM'),
         (200, 102, 'SUM'),
         (201, 102, 'JOIN'),
         (201, 100, 'JOIN')
-    ) AS t(custom_metric_id, mapping_metric_id, mapping_type)
+    ) AS t(custom_metric_id, mapping_metric_id, mapping_type)"""
+
+CUSTOM_METRIC_CTE = f"""
+custom_metric_mapping AS (
+    SELECT * FROM {_CUSTOM_METRIC_VALUES}
 )
 """
 
 
 def custom_metric_mapping(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(_CUSTOM_METRIC_ROWS, _CUSTOM_METRIC_SCHEMA)
+    return spark.sql(
+        "SELECT CAST(custom_metric_id AS BIGINT) AS custom_metric_id,"
+        " CAST(mapping_metric_id AS BIGINT) AS mapping_metric_id, mapping_type"
+        f" FROM {_CUSTOM_METRIC_VALUES}"
+    )
 
 
 # --------------------------------------------------------------------------

@@ -44,17 +44,25 @@ def _stage_parquet(src: str, landing: str, name: str) -> None:
     table may be a SINGLE file (the driver test lake) or a
     Spark-written DIRECTORY of part files (any real lake table, e.g.
     the 10x scale corpus) — a multi-file stage is exactly what a
-    multi-partition topic drop looks like to the file source."""
+    multi-partition topic drop looks like to the file source.
+
+    Each file is copied under a ``_``-prefixed name, which the file
+    source never lists, and renamed into place: a running query sees
+    the whole file or nothing, never a half-copied one."""
     import shutil
 
     if os.path.isdir(src):
-        for i, part in enumerate(sorted(os.listdir(src))):
-            if part.endswith(".parquet"):
-                shutil.copy(
-                    os.path.join(src, part), os.path.join(landing, f"{i}_{name}")
-                )
+        parts = [
+            (os.path.join(src, part), f"{i}_{name}")
+            for i, part in enumerate(sorted(os.listdir(src)))
+            if part.endswith(".parquet")
+        ]
     else:
-        shutil.copy(src, os.path.join(landing, name))
+        parts = [(src, name)]
+    for path, dest in parts:
+        tmp = os.path.join(landing, f"_{dest}.tmp")
+        shutil.copy(path, tmp)
+        os.replace(tmp, os.path.join(landing, dest))
 
 
 #: target bytes of drained input per state-shuffle partition.  Streaming

@@ -22,7 +22,13 @@ hop transforms (one logical plan, two trigger policies).
 Scale notes: each hop checkpoints independently (the recovery unit is
 the hop); pools map to the reference's per-feed isolation; trigger
 interval is the latency/throughput knob (120 s in the reference's
-bulk feeds, 30 s on the low-latency one).
+bulk feeds, 30 s on the low-latency one).  The bronze dedup's state
+partition count is fixed at the hop's FIRST start, by the same rule
+the drains use (landing-dir bytes, floored at 1 — a fresh runner gets
+one state store, so a trickle batch commits one store and writes one
+file); a restart keeps the checkpointed count.  A production feed
+whose dedup state outgrows one store pins the count before that first
+start with ``SPARK_GRAFT_STREAM_PARTS``.
 """
 
 from __future__ import annotations
@@ -35,11 +41,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from telemetry_streaming_datalake_spark.datamodel import metric_mapping, remote_history
-from telemetry_streaming_datalake_spark.ingest.bronze import parse_bronze
+from telemetry_streaming_datalake_spark.ingest.bronze import dedup_exact, parse_bronze
 from telemetry_streaming_datalake_spark.ingest.silver import to_silver
 from telemetry_streaming_datalake_spark.operators.temporal import enrich_gold
 from telemetry_streaming_datalake_spark.session import load_table, normalize_nano_ts
-from telemetry_streaming_datalake_spark.streaming.pipeline import DEDUP_WATERMARK
+from telemetry_streaming_datalake_spark.streaming.pipeline import (
+    DEDUP_WATERMARK,
+    _scaled_state_shuffle,
+    _stage_parquet,
+)
 
 #: hop names — the queryName() handles the manager reports
 BRONZE_QUERY = "bronze-hop"
@@ -77,16 +87,10 @@ class AlwaysOnRunner:
 
     # ---------------------------------------------------------- hops
 
-    def _feed_schema(self):
-        return load_table(self.spark, self.sf_dir, "events").schema
-
     def _bronze_stream(self) -> DataFrame:
-        raw = (
-            self.spark.readStream.schema(self._feed_schema())
-            .parquet(self.landing_dir)
-        )
-        raw = normalize_nano_ts(raw, "ts")
-        bronze = parse_bronze(raw)
+        feed_schema = load_table(self.spark, self.sf_dir, "events").schema
+        raw = self.spark.readStream.schema(feed_schema).parquet(self.landing_dir)
+        bronze = parse_bronze(normalize_nano_ts(raw, "ts"))
         return (
             bronze.withColumn("event_time", F.timestamp_seconds(F.col("unix_ts")))
             .withWatermark("event_time", DEDUP_WATERMARK)
@@ -94,35 +98,12 @@ class AlwaysOnRunner:
             .drop("event_time")
         )
 
-    def _silver_stream(self) -> DataFrame:
-        schema = parse_bronze(
-            normalize_nano_ts(
-                self.spark.read.schema(self._feed_schema()).parquet(
-                    self.landing_dir
-                ),
-                "ts",
-            )
-        ).schema
-        bronze = self.spark.readStream.schema(schema).parquet(self.bronze_dir)
-        return to_silver(bronze, metric_mapping(self.spark))
+    def _lake_stream(self, upstream: DataFrame, lake_dir: str) -> DataFrame:
+        """Stream an upstream hop's lake; the schema is the upstream
+        frame's, so no lake (empty or not) is ever footer-inferred."""
+        return self.spark.readStream.schema(upstream.schema).parquet(lake_dir)
 
-    def _gold_stream(self) -> DataFrame:
-        silver_schema = self._silver_stream_schema()
-        silver = self.spark.readStream.schema(silver_schema).parquet(
-            self.silver_dir
-        )
-        history = remote_history(
-            self.spark, load_table(self.spark, self.sf_dir, "customer")
-        )
-        return enrich_gold(silver, history)
-
-    def _silver_stream_schema(self):
-        return self._silver_stream().schema
-
-    def _gold_stream_schema(self):
-        return self._gold_stream().schema
-
-    def _start_serving(self) -> StreamingQuery:
+    def _start_serving(self, gold: DataFrame) -> StreamingQuery:
         """Hop 4 — the reference's serving edge (`Metric Stream to
         Cosmos/Step 06.b`): the gold lake streams into a foreachBatch
         that reduces each micro-batch to its per-key latest and lands
@@ -135,9 +116,6 @@ class AlwaysOnRunner:
             ParquetUpsertStore,
         )
 
-        gold = self.spark.readStream.schema(self._gold_stream_schema()).parquet(
-            self.gold_dir
-        )
         store = ParquetUpsertStore(self.spark, self.serving_dir, key="id")
 
         def upsert_latest(batch_df, batch_id):
@@ -186,27 +164,35 @@ class AlwaysOnRunner:
         return q
 
     def start(self) -> dict[str, StreamingQuery]:
-        """Start all three hops.  The downstream lakes must exist
-        before their consumers start (empty dirs are fine — schemas
-        are explicit), mirroring table-creation-before-stream in the
-        reference."""
-        os.makedirs(self.landing_dir, exist_ok=True)
-        os.makedirs(self.bronze_dir, exist_ok=True)
-        os.makedirs(self.silver_dir, exist_ok=True)
-        os.makedirs(self.gold_dir, exist_ok=True)
-        self._start(BRONZE_QUERY, "BronzePool", self._bronze_stream(), self.bronze_dir)
-        self._start(SILVER_QUERY, "SilverPool", self._silver_stream(), self.silver_dir)
-        self._start(GOLD_QUERY, "GoldPool", self._gold_stream(), self.gold_dir)
-        self._start_serving()
+        """Start all four hops, each frame built once and its schema
+        handed to the next hop's reader.  The downstream lakes must
+        exist before their consumers start (empty dirs are fine —
+        schemas are explicit), mirroring table-creation-before-stream
+        in the reference.  Only the bronze dedup is stateful, so only
+        its ``start()`` runs under the input-sized state partition
+        count; the session conf is restored before the next hop."""
+        for d in (self.landing_dir, self.bronze_dir, self.silver_dir, self.gold_dir):
+            os.makedirs(d, exist_ok=True)
+        bronze = self._bronze_stream()
+        with _scaled_state_shuffle(self.spark, self.landing_dir):
+            self._start(BRONZE_QUERY, "BronzePool", bronze, self.bronze_dir)
+        silver = to_silver(
+            self._lake_stream(bronze, self.bronze_dir), metric_mapping(self.spark)
+        )
+        self._start(SILVER_QUERY, "SilverPool", silver, self.silver_dir)
+        history = remote_history(
+            self.spark, load_table(self.spark, self.sf_dir, "customer")
+        )
+        gold = enrich_gold(self._lake_stream(silver, self.silver_dir), history)
+        self._start(GOLD_QUERY, "GoldPool", gold, self.gold_dir)
+        self._start_serving(self._lake_stream(gold, self.gold_dir))
         return dict(self.queries)
 
     def feed(self, src_parquet: str, name: str = "drop.parquet") -> None:
         """Drop a feed table into the landing dir (a producer publish);
-        single file or a part-file directory, like any lake table."""
-        from telemetry_streaming_datalake_spark.streaming.pipeline import (
-            _stage_parquet,
-        )
-
+        single file or a part-file directory, like any lake table.
+        Each file is published atomically (see :func:`_stage_parquet`),
+        so the file source never lists a half-copied drop."""
         _stage_parquet(src_parquet, self.landing_dir, name)
 
     def status(self) -> list[dict]:
@@ -309,20 +295,7 @@ def always_on_topology(
     phase 1 and fail the count (the recovery contract, now on the
     driver gate instead of pytest alone).
     """
-    import glob
-    import shutil
-
-    from telemetry_streaming_datalake_spark.datamodel import (
-        metric_mapping,
-        remote_history,
-    )
-    from telemetry_streaming_datalake_spark.ingest.bronze import (
-        dedup_exact,
-        parse_bronze,
-    )
-    from telemetry_streaming_datalake_spark.ingest.silver import to_silver
     from telemetry_streaming_datalake_spark.operators.latest import latest_metric
-    from telemetry_streaming_datalake_spark.operators.temporal import enrich_gold
 
     raw = load_table(spark, sf_dir, "events")
     ts_cut = raw.select(F.unix_timestamp("ts").alias("u")).approxQuantile(
@@ -332,11 +305,9 @@ def always_on_topology(
         raw.filter(F.unix_timestamp("ts") <= ts_cut),
         raw.filter(F.unix_timestamp("ts") > ts_cut),
     ]
-    feed_files = []
-    for i, half in enumerate(halves):
-        tmp_out = os.path.join(work_dir, f"half{i}")
-        half.coalesce(1).write.parquet(tmp_out)
-        feed_files.append(glob.glob(os.path.join(tmp_out, "part-*.parquet"))[0])
+    feed_dirs = [os.path.join(work_dir, f"half{i}") for i in range(len(halves))]
+    for half, out in zip(halves, feed_dirs):
+        half.coalesce(1).write.parquet(out)
 
     # batch twins -> expected drained counts per phase
     mapping = metric_mapping(spark)
@@ -353,7 +324,7 @@ def always_on_topology(
     r1 = AlwaysOnRunner(spark, sf_dir, work_dir, trigger_interval)
     try:
         r1.start()
-        shutil.copy(feed_files[0], os.path.join(r1.landing_dir, "feed_a.parquet"))
+        r1.feed(feed_dirs[0], "feed_a.parquet")
         got = r1.await_rows(r1.gold_dir, gold_a, timeout_s=180)
         assert got == gold_a, f"phase-1 gold drain: {got} != {gold_a}"
         got = r1.await_store_rows(keys_a, timeout_s=120)
@@ -364,7 +335,7 @@ def always_on_topology(
     r2 = AlwaysOnRunner(spark, sf_dir, work_dir, trigger_interval)
     try:
         r2.start()
-        shutil.copy(feed_files[1], os.path.join(r2.landing_dir, "feed_b.parquet"))
+        r2.feed(feed_dirs[1], "feed_b.parquet")
         got = r2.await_rows(r2.gold_dir, gold_full, timeout_s=180)
         assert got == gold_full, f"phase-2 gold drain: {got} != {gold_full}"
         got = r2.await_store_rows(keys_full, timeout_s=120)

@@ -288,8 +288,8 @@ class ParquetUpsertStore(ServingStoreWriter):
             writer.parquet(new_dir)
             self._publish(version)
             return
-        current = self.read()
         if self.partition_col:
+            current = self.read()
             # partitions this batch touches — bounded by batch size
             parts = {
                 str(r[0])
@@ -330,7 +330,9 @@ class ParquetUpsertStore(ServingStoreWriter):
             self._publish(version)
             return
         # unpartitioned: documented full winner rewrite, atomic via the
-        # same version swap
+        # same version swap.  Every version was written from a batch of
+        # this schema, so it is read with it: no footer-inference job.
+        current = self.spark.read.schema(batch_df.schema).parquet(cur)
         merged = self._winners(
             current.withColumn("_v", F.lit(0)).unionByName(incoming)
         )

@@ -1051,3 +1051,40 @@ def test_host_politeness_scalar_total_broadcast(spark):
     p = _plan(W.host_politeness_report(load_table(spark, SF, "documents")))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p
+
+
+@pytest.mark.parametrize(
+    "name, cte, schema",
+    [
+        (
+            "metric_mapping",
+            "METRIC_MAPPING_CTE",
+            "raw_symbol string not null, metric_id bigint not null,"
+            " provider_id bigint not null, agg_type string not null,"
+            " category_id bigint not null, provider_name string not null",
+        ),
+        (
+            "custom_metric_mapping",
+            "CUSTOM_METRIC_CTE",
+            "custom_metric_id bigint not null, mapping_metric_id bigint not null,"
+            " mapping_type string not null",
+        ),
+    ],
+)
+def test_constant_dims_are_local_relations_equal_to_their_ctes(spark, name, cte, schema):
+    """Each constant dimension is a LocalTableScan over the VALUES
+    literal its DuckDB CTE holds: no Python-worker RDD scan per use,
+    the exact column names/types/nullability, and the oracle's rows."""
+    import duckdb
+    from pyspark.sql.types import StructType
+
+    from telemetry_streaming_datalake_spark import datamodel as dm
+
+    df = getattr(dm, name)(spark)
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in executed and "ExistingRDD" not in executed
+    assert df.schema == StructType.fromDDL(schema)
+    oracle = duckdb.connect().execute(
+        f"WITH {getattr(dm, cte).strip()} SELECT * FROM {name}"
+    ).fetchall()
+    assert sorted(tuple(r) for r in df.collect()) == sorted(oracle)

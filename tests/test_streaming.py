@@ -660,6 +660,64 @@ def test_watermark_late_within_horizon_merges(spark, tmp_path):
     assert got[10] == 1
 
 
+def test_stream_state_parts_sizing_rule(tmp_path, monkeypatch):
+    """Input bytes -> state partitions: ceil(bytes / target), capped at
+    defaultParallelism, floored at 1; metadata files and missing paths
+    count nothing; SPARK_GRAFT_STREAM_PARTS pins it (floored at 1)."""
+    from types import SimpleNamespace
+
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=4))
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTS", raising=False)
+    monkeypatch.setattr(SP, "STREAM_STATE_TARGET_BYTES", 100)
+    d = tmp_path / "lake"
+    d.mkdir()
+    assert SP._stream_state_parts(fake, str(d), str(tmp_path / "missing")) == 1
+    (d / "a.parquet").write_bytes(b"x" * 150)
+    (d / "_SUCCESS").write_bytes(b"x" * 1000)
+    (d / ".a.parquet.crc").write_bytes(b"x" * 1000)
+    assert SP._stream_state_parts(fake, str(d)) == 2
+    (d / "b.parquet").write_bytes(b"x" * 51)
+    assert SP._stream_state_parts(fake, str(d)) == 3  # 201 bytes
+    assert SP._stream_state_parts(fake, str(d), str(d / "a.parquet")) == 4
+    (d / "c.parquet").write_bytes(b"x" * 1000)
+    assert SP._stream_state_parts(fake, str(d)) == 4  # capped
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", "7")
+    assert SP._stream_state_parts(fake, str(d)) == 7  # pin beats the cap
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", "0")
+    assert SP._stream_state_parts(fake, str(d)) == 1
+
+
+def test_runner_feed_publishes_atomically(tmp_path, monkeypatch):
+    """feed() copies only to names the file source skips, then renames
+    into place: a running query never lists a half-copied drop, and no
+    temp name is left behind (single file and part-file directory)."""
+    import shutil
+
+    from telemetry_streaming_datalake_spark.streaming import runner as RN
+
+    copied_to = []
+    real_copy = shutil.copy
+
+    def spy_copy(src, dst):
+        copied_to.append(os.path.basename(dst))
+        return real_copy(src, dst)
+
+    monkeypatch.setattr(shutil, "copy", spy_copy)
+    r = RN.AlwaysOnRunner(None, SF_DIR, str(tmp_path))
+    os.makedirs(r.landing_dir)
+    r.feed(os.path.join(SF_DIR, "events.parquet"), "one.parquet")
+    part_dir = tmp_path / "table"
+    part_dir.mkdir()
+    for f in ("part-0.parquet", "part-1.parquet", "_SUCCESS", ".part-0.parquet.crc"):
+        (part_dir / f).write_bytes(b"PAR1")
+    r.feed(str(part_dir), "two.parquet")
+    assert len(copied_to) == 3
+    assert all(n.startswith(("_", ".")) for n in copied_to)
+    landed = os.listdir(r.landing_dir)
+    assert len(landed) == 3 and "one.parquet" in landed
+    assert not any(n.startswith(("_", ".")) for n in landed)
+
+
 def test_always_on_runner_three_concurrent_queries(spark):
     """VERDICT r5 item 6: ≥3 concurrent named ProcessingTime queries,
     files fed while running, progress observed on every hop, clean
@@ -746,7 +804,7 @@ def test_serving_store_interface_replay_idempotency(spark):
     assert dict(want)["b"] == 9.0
 
 
-def test_always_on_runner_restart_recovery_exactly_once(spark):
+def test_always_on_runner_restart_recovery_exactly_once(spark, monkeypatch):
     """Checkpoint recovery: stop the topology, start a NEW runner on
     the same work dir, re-feed the SAME records — the restored
     watermark-dedup state must drop every duplicate, leaving bronze
@@ -754,6 +812,7 @@ def test_always_on_runner_restart_recovery_exactly_once(spark):
     checkpointLocation exists for."""
     import os
     import tempfile
+    import time
 
     from telemetry_streaming_datalake_spark.ingest import bronze as B
     from telemetry_streaming_datalake_spark.session import load_table
@@ -763,29 +822,41 @@ def test_always_on_runner_restart_recovery_exactly_once(spark):
     work = tempfile.mkdtemp(prefix="tsdl_runner2_")
     want = B.dedup_exact(B.parse_bronze(load_table(spark, sf, "events"))).count()
 
+    def first_read_state_parts(runner):
+        """Wait for the bronze hop's first batch that read rows to
+        finish; return its state partition count."""
+        deadline = time.monotonic() + 60
+        while time.monotonic() < deadline:
+            prog = runner.queries[RN.BRONZE_QUERY].recentProgress
+            read = [p for p in prog if p["numInputRows"] > 0]
+            if read:
+                return read[0]["stateOperators"][0]["numShufflePartitions"]
+            time.sleep(0.5)
+        raise AssertionError("the bronze hop read no rows within 60 s")
+
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTS", raising=False)
     r1 = RN.AlwaysOnRunner(spark, sf, work, trigger_interval="500 milliseconds")
     try:
         r1.start()
+        # the bronze state count came from the empty landing dir, and
+        # only the bronze start() saw it
+        assert spark.conf.get("spark.sql.shuffle.partitions") == conf
         r1.feed(os.path.join(sf, "events.parquet"), "drop_a.parquet")
         got1 = r1.await_rows(r1.bronze_dir, want, timeout_s=120)
         assert got1 == want
+        assert first_read_state_parts(r1) == 1
     finally:
         r1.stop()
 
+    # a pin set after the first start cannot re-shard checkpointed state
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", "3")
     r2 = RN.AlwaysOnRunner(spark, sf, work, trigger_interval="500 milliseconds")
     try:
         r2.start()
         # the same records again, as a "replayed" producer file
         r2.feed(os.path.join(sf, "events.parquet"), "drop_b.parquet")
-        import time
-
-        deadline = time.monotonic() + 60
-        while time.monotonic() < deadline:
-            st = {s_["name"]: s_ for s_ in r2.status()}
-            b = st.get(RN.BRONZE_QUERY, {})
-            if b.get("batches_seen") and b["batches_seen"] >= 1 and b.get("input_rows_last") == 0:
-                break
-            time.sleep(1.0)
+        assert first_read_state_parts(r2) == 1
         # every replayed row deduped against the RESTORED state
         assert spark.read.parquet(r2.bronze_dir).count() == want
     finally:
