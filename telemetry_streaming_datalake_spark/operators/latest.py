@@ -1,4 +1,4 @@
-"""Latest-value materialization and serving-store projection.
+"""Latest-value materialization for the serving store.
 
 Reference semantics: ``Metric Stream to Cosmos/Step 06.b Latest -
 Stream metric data to Cosmos DB.scala`` keeps, per (remoteId,
@@ -45,27 +45,6 @@ def latest_metric(gold: DataFrame) -> DataFrame:
     )
 
 
-def serving_kv(gold: DataFrame) -> DataFrame:
-    """Composite-id key-value projection (Cosmos-analog documents)."""
-    return gold.select(
-        F.concat_ws(
-            "|",
-            F.col("remote_id").cast("string"),
-            F.col("unix_ts").cast("string"),
-            F.col("metric_id").cast("string"),
-            F.col("provider_id").cast("string"),
-            F.col("category_id").cast("string"),
-        ).alias("id"),
-        "remote_id",
-        "unix_ts",
-        "metric_id",
-        "provider_id",
-        "category_id",
-        F.round(F.col("value_double").cast("double"), 6).alias("value_double"),
-        "value_string",
-    )
-
-
 def latest_oracle(gold_cte: str) -> str:
     """row_number formulation — same winner as the max(struct) because
     the ordering fields coincide (ts desc, event_id desc)."""
@@ -86,16 +65,3 @@ SELECT remote_id, metric_id, provider_id, unix_ts, event_id,
 FROM ranked WHERE rn = 1
 """
 
-
-def serving_kv_oracle(gold_cte: str) -> str:
-    return f"""
-WITH gold AS ({gold_cte})
-SELECT
-    CAST(remote_id AS VARCHAR) || '|' || CAST(unix_ts AS VARCHAR) || '|' ||
-    CAST(metric_id AS VARCHAR) || '|' || CAST(provider_id AS VARCHAR) || '|' ||
-    CAST(category_id AS VARCHAR) AS id,
-    remote_id, unix_ts, metric_id, provider_id, category_id,
-    round(CAST(value_double AS DOUBLE), 6) AS value_double,
-    value_string
-FROM gold
-"""

@@ -512,25 +512,6 @@ WHERE tq.quality_score >= thr.lang_threshold
 """
 
 
-def lang_id_oracle() -> str:
-    norm = _NORM_SQL
-    padded = f"(' ' || {norm} || ' ')"
-    hits = {
-        lang: "(" + " + ".join(_count_sql(padded, m) for m in markers) + ")"
-        for lang, markers in LANG_MARKERS.items()
-    }
-    best = "greatest(" + ", ".join(hits.values()) + ")"
-    cases = " ".join(
-        f"WHEN {hits[lang]} = {best} THEN '{lang}'" for lang in LANG_MARKERS
-    )
-    return f"""
-SELECT doc_id, lang,
-       {", ".join(f"CAST({hits[lang]} AS BIGINT) AS hits_{lang}" for lang in LANG_MARKERS)},
-       CASE WHEN {best} <= 0 THEN 'und' {cases} END AS lang_pred
-FROM documents
-"""
-
-
 def doc_fingerprint_oracle(window: int = 16) -> str:
     norm = _NORM_SQL
     n_shingles = f"greatest(length({norm}) - {window - 1}, 1)"

@@ -168,18 +168,12 @@ def bronze_from_kafka_analog(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the parquet source row-for-row (oracle = BRONZE_PARSE_ORACLE)."""
     import tempfile
 
+    from telemetry_streaming_datalake_spark.streaming.pipeline import drain
+
     work = tempfile.mkdtemp(prefix="tsdl_kafka_")
     wire = file_analog_wire_stream(spark, sf_dir, work)
     bronze = wire_to_bronze(wire)
     out = os.path.join(work, "bronze_out")
     ckpt = os.path.join(work, "ckpt")
-    (
-        bronze.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(bronze, ckpt, path=out)
     return spark.read.parquet(out)

@@ -14,6 +14,14 @@ are byte-identical to the batch path — the same ``parse_bronze`` /
 ``to_silver`` functions are applied to the streaming frame, which is
 exactly how Spark unifies batch and streaming (one logical plan API).
 
+Every hop, here and in the always-on runner, starts through ONE
+primitive, :func:`start_stream` (:func:`drain` is its availableNow
+form): file sink or ``foreachBatch``, checkpoint, trigger, and — for
+JVM-stateful hops only — an input-sized state-partition count that is
+set on the session around ``start()`` alone and restored before the
+call returns, so no drain holds a changed session conf while its
+batches (or any other query) run.
+
 Scale notes: the watermark bounds dropDuplicates state exactly like the
 reference's 48 h watermark (``Part1 ….scala:69``); sinks partition by
 ``datestamp``; the upsert sink rewrites only the partitions present in
@@ -25,15 +33,19 @@ from __future__ import annotations
 
 import math
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from telemetry_streaming_datalake_spark.ingest.bronze import dedup_exact, parse_bronze
 from telemetry_streaming_datalake_spark.ingest.silver import to_silver
 from telemetry_streaming_datalake_spark.operators.derived import floor_round
 from telemetry_streaming_datalake_spark.session import load_table, normalize_nano_ts
+from telemetry_streaming_datalake_spark.streaming.sinks import (
+    current_version_dir,
+    publish_version,
+)
 
 #: watermark delay for dedup state (reference uses 48 h)
 DEDUP_WATERMARK = "48 hours"
@@ -108,27 +120,71 @@ def _stream_state_parts(spark: SparkSession, *src_paths: str) -> int:
     return max(1, min(cap, -(-total // STREAM_STATE_TARGET_BYTES)))
 
 
-@contextmanager
-def _scaled_state_shuffle(spark: SparkSession, *src_paths: str):
-    """Run a JVM-stateful streaming drain (watermarked dedup, windowed
-    aggregate, stream-stream join) under an input-sized shuffle
-    partition count; restore the session conf afterwards.  Results are
-    partition-count-invariant (keyed state; rounded aggregates), only
-    the state-store commit fan-out changes.  Python-stateful
-    (``applyInPandasWithState``) and foreachBatch-ladder topologies
-    are deliberately NOT wrapped: their cost is per-row compute in the
-    batch bodies, which wants the full core count (A/B'd in
+def start_stream(
+    df: DataFrame,
+    checkpoint: str,
+    *,
+    path: str | None = None,
+    foreach_batch=None,
+    mode: str = "append",
+    fmt: str = "parquet",
+    partition_by: str | None = None,
+    state_src: tuple[str, ...] = (),
+    name: str | None = None,
+    processing_time: str | None = None,
+) -> StreamingQuery:
+    """Build and start one streaming query — the library's only
+    ``writeStream``.  The sink is ``foreach_batch`` when given, else a
+    ``fmt`` file sink at ``path``; the trigger is ``processing_time``
+    when given, else availableNow (see :func:`drain`).
+
+    ``state_src`` names the drained input path(s) of a JVM-stateful
+    query (watermarked dedup, windowed aggregate, stream-stream join):
+    the session's shuffle-partition count is set to the input-sized
+    :func:`_stream_state_parts` around ``start()`` ONLY and restored
+    before this returns.  The query keeps the count in force at
+    ``start()`` (it runs on its own session clone and bakes the count
+    into its checkpoint), so its state operators run scaled while the
+    session keeps its own value for every other query on it, the
+    ``foreachBatch`` body's queries on that session included.  Results are partition-count-invariant
+    (keyed state; rounded aggregates); only the state-store commit
+    fan-out changes.  Python-stateful (``applyInPandasWithState``) and
+    foreachBatch-ladder drains pass no ``state_src``: their cost is
+    per-row compute that wants the full core count (A/B'd in
     OPTIMIZATION_r15.md — cusum regressed 2.3×, the crawl trio ~1.2×,
     under a lowered count)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_stream_state_parts(spark, *src_paths)),
-    )
+    w = df.writeStream.outputMode(mode).option("checkpointLocation", checkpoint)
+    if foreach_batch is not None:
+        w = w.foreachBatch(foreach_batch)
+    else:
+        w = w.format(fmt).option("path", path)
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    if name:
+        w = w.queryName(name)
+    if processing_time:
+        w = w.trigger(processingTime=processing_time)
+    else:
+        w = w.trigger(availableNow=True)
+    if not state_src:
+        return w.start()
+    spark = df.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(_stream_state_parts(spark, *state_src)))
     try:
-        yield
+        return w.start()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        spark.conf.set(key, old)
+
+
+def drain(df: DataFrame, checkpoint: str, **kw) -> StreamingQuery:
+    """:func:`start_stream` with the availableNow trigger, run to
+    completion: every input file present at start is processed, the
+    query stops, and its (terminated) handle is returned."""
+    q = start_stream(df, checkpoint, **kw)
+    q.awaitTermination()
+    return q
 
 
 def _events_glob(spark: SparkSession, sf_dir: str, work_dir: str | None = None) -> DataFrame:
@@ -168,36 +224,6 @@ def streaming_bronze(spark: SparkSession, sf_dir: str, work_dir: str | None = No
     )
 
 
-def run_stream_to_parquet(
-    stream_df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    partition_by: str | None = "datestamp",
-    scale_src: tuple[str, ...] = (),
-) -> None:
-    """Append sink + checkpoint, availableNow (deterministic drain).
-
-    ``scale_src`` names the drained input path(s) for JVM-stateful
-    hops (watermarked dedup): when given, the drain runs under the
-    input-sized state partition count (:func:`_scaled_state_shuffle`).
-    Map-only hops leave it empty — their plans carry no exchange, so
-    the conf would be a no-op."""
-    writer = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    if scale_src:
-        with _scaled_state_shuffle(stream_df.sparkSession, *scale_src):
-            writer.start().awaitTermination()
-    else:
-        writer.start().awaitTermination()
-
-
 def streaming_silver_dedup(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
     """End-to-end streaming bronze→silver, drained with availableNow
     and read back as a batch frame.
@@ -208,9 +234,9 @@ def streaming_silver_dedup(spark: SparkSession, sf_dir: str, work_dir: str) -> D
     """
     out = os.path.join(work_dir, "bronze_out")
     ckpt = os.path.join(work_dir, "ckpt")
-    run_stream_to_parquet(
-        streaming_bronze(spark, sf_dir, work_dir), out, ckpt,
-        scale_src=(os.path.join(sf_dir, "events.parquet"),),
+    drain(
+        streaming_bronze(spark, sf_dir, work_dir), ckpt, path=out,
+        partition_by="datestamp", state_src=(os.path.join(sf_dir, "events.parquet"),),
     )
     cols = [
         "event_id", "serial", "metric", "value", "payload_k",
@@ -256,15 +282,10 @@ def streaming_upsert_rollup(spark: SparkSession, sf_dir: str, work_dir: str) -> 
     store_path = os.path.join(work_dir, "rollup_store")
     ckpt = os.path.join(work_dir, "upsert_ckpt")
     store = ParquetUpsertStore(spark, store_path, key="id", partition_col="datestamp")
-    with _scaled_state_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(store.apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    drain(
+        agg, ckpt, foreach_batch=store.apply_batch, mode="complete",
+        state_src=(os.path.join(sf_dir, "events.parquet"),),
+    )
     return store.read().select(
         "id", "metric", F.col("datestamp").cast("string").alias("datestamp"),
         "hourstamp", "n_events", "sum_value", "min_value", "max_value",
@@ -400,15 +421,7 @@ def streaming_counter_rate(
     )
     out = os.path.join(work_dir, "rate_out")
     ckpt = os.path.join(work_dir, "rate_ckpt")
-    (
-        rates.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(rates, ckpt, path=out)
     return spark.read.parquet(out)
 
 
@@ -466,13 +479,9 @@ def streaming_stateful_latest(
     # the file sink rejects update mode (append-only format), so the
     # update-mode emissions land through foreachBatch — the same edge
     # the reference uses for its Cosmos upsert writes
-    (
-        updated.writeStream.outputMode("update")
-        .foreachBatch(lambda batch, _id: batch.write.mode("append").parquet(out))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        updated, ckpt, mode="update",
+        foreach_batch=lambda batch, _id: batch.write.mode("append").parquet(out),
     )
     emissions = spark.read.parquet(out)
     final = emissions.groupBy("serial", "metric").agg(
@@ -529,7 +538,7 @@ def streaming_bronze_feed_b(spark: SparkSession, sf_dir: str, work_dir: str) -> 
     bronze_b = parse_bronze_feed_b(raw)
     out = os.path.join(work_dir, "feedb_out")
     ckpt = os.path.join(work_dir, "feedb_ckpt")
-    run_stream_to_parquet(bronze_b, out, ckpt)
+    drain(bronze_b, ckpt, path=out, partition_by="datestamp")
     return (
         spark.read.parquet(out)
         .withColumn("datestamp", F.col("datestamp").cast("string"))
@@ -561,7 +570,7 @@ def streaming_bronze_feed_c(spark: SparkSession, sf_dir: str, work_dir: str) -> 
     bronze_c = parse_bronze_feed_c(raw)
     out = os.path.join(work_dir, "feedc_out")
     ckpt = os.path.join(work_dir, "feedc_ckpt")
-    run_stream_to_parquet(bronze_c, out, ckpt)
+    drain(bronze_c, ckpt, path=out, partition_by="datestamp")
     return (
         spark.read.parquet(out)
         .withColumn("datestamp", F.col("datestamp").cast("string"))
@@ -587,17 +596,10 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str, work_dir: str) -> Dat
     sess = sessionize(raw)
     out = os.path.join(work_dir, "sessions_out")
     ckpt = os.path.join(work_dir, "sessions_ckpt")
-    with _scaled_state_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        (
-            sess.writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda batch, _id: batch.write.mode("overwrite").parquet(out)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    drain(
+        sess, ckpt, mode="complete", state_src=(os.path.join(sf_dir, "events.parquet"),),
+        foreach_batch=lambda batch, _id: batch.write.mode("overwrite").parquet(out),
+    )
     return spark.read.parquet(out)
 
 
@@ -619,11 +621,12 @@ def streaming_silver_two_hop(spark: SparkSession, sf_dir: str, work_dir: str) ->
     from telemetry_streaming_datalake_spark.datamodel import metric_mapping
 
     bronze_dir = os.path.join(work_dir, "bronze_lake")
-    run_stream_to_parquet(
+    drain(
         streaming_bronze(spark, sf_dir, work_dir),
-        bronze_dir,
         os.path.join(work_dir, "bronze_ckpt"),
-        scale_src=(os.path.join(sf_dir, "events.parquet"),),
+        path=bronze_dir,
+        partition_by="datestamp",
+        state_src=(os.path.join(sf_dir, "events.parquet"),),
     )
     bronze_schema = spark.read.parquet(bronze_dir).schema
     bronze_stream = (
@@ -638,8 +641,9 @@ def streaming_silver_two_hop(spark: SparkSession, sf_dir: str, work_dir: str) ->
     )
     silver_stream = to_silver(bronze_stream, metric_mapping(spark))
     silver_dir = os.path.join(work_dir, "silver_lake")
-    run_stream_to_parquet(
-        silver_stream, silver_dir, os.path.join(work_dir, "silver_ckpt")
+    drain(
+        silver_stream, os.path.join(work_dir, "silver_ckpt"),
+        path=silver_dir, partition_by="datestamp",
     )
     return (
         spark.read.parquet(silver_dir)
@@ -678,7 +682,10 @@ def streaming_gold_three_hop(spark: SparkSession, sf_dir: str, work_dir: str) ->
     history = remote_history(spark, load_table(spark, sf_dir, "customer"))
     gold_stream = enrich_gold(silver_stream, history)
     gold_dir = os.path.join(work_dir, "gold_lake")
-    run_stream_to_parquet(gold_stream, gold_dir, os.path.join(work_dir, "gold_ckpt"))
+    drain(
+        gold_stream, os.path.join(work_dir, "gold_ckpt"),
+        path=gold_dir, partition_by="datestamp",
+    )
     return (
         spark.read.parquet(gold_dir)
         .withColumn("datestamp", F.col("datestamp").cast("string"))
@@ -736,17 +743,10 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str, work_dir: str) ->
     # — complete mode emits the full aggregate each trigger (in
     # production the sink runs append and those windows flush as the
     # stream advances; the semantics checked here are identical)
-    with _scaled_state_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        (
-            windowed.writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda batch, _id: batch.write.mode("overwrite").parquet(out)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    drain(
+        windowed, ckpt, mode="complete", state_src=(os.path.join(sf_dir, "events.parquet"),),
+        foreach_batch=lambda batch, _id: batch.write.mode("overwrite").parquet(out),
+    )
     res = spark.read.parquet(out)
     return res.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),
@@ -836,16 +836,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str, work_dir: str) -> 
     )
     out = os.path.join(work_dir, "ssj_out")
     ckpt = os.path.join(work_dir, "ssj_ckpt")
-    with _scaled_state_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    drain(joined, ckpt, path=out, state_src=(os.path.join(sf_dir, "events.parquet"),))
     return spark.read.parquet(out)
 
 
@@ -912,15 +903,7 @@ def streaming_publish_jsonl(spark: SparkSession, sf_dir: str, work_dir: str) -> 
             )
         ).alias("value")
     )
-    (
-        wire.writeStream.format("text")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(wire, ckpt, path=out, fmt="text")
     lines = spark.read.text(out)
     return lines.select(F.from_json("value", PUBLISH_WIRE_SCHEMA).alias("r")).select("r.*")
 
@@ -981,13 +964,7 @@ def streaming_quarantine_split(spark: SparkSession, sf_dir: str, work_dir: str) 
         finally:
             routed.unpersist()
 
-    (
-        raw.writeStream.foreachBatch(split_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(raw, ckpt, foreach_batch=split_batch)
     cols = ["event_id", "serial", "metric", "value", "unix_ts", "datestamp", "reason", "route"]
     # explicit-schema recursive reads: an all-ok (or all-quarantine)
     # drain leaves the other lake with no parquet footers to infer from
@@ -1045,7 +1022,7 @@ def streaming_grouping_sets(
     each committed version carries the last applied batch id
     (``applied.json``) and replays of applied ids are skipped; the
     version itself publishes via the atomic ``CURRENT`` pointer swap
-    (``_commit_store_version``), so a crash mid-rewrite leaves the
+    (:func:`~.sinks.publish_version`), so a crash mid-rewrite leaves the
     previous version intact for the replay to merge into.  The
     partition-pruned variant is
     :class:`~.sinks.ParquetUpsertStore`, already proven by
@@ -1119,7 +1096,7 @@ def streaming_grouping_sets(
             "p_sum", "p_min", "p_max", "p_n",
         )
         spark_l = batch_df.sparkSession
-        cur_dir = _store_current_dir(store_path)
+        cur_dir = current_version_dir(store_path)
         if cur_dir is not None:
             with open(os.path.join(cur_dir, "applied.json")) as f:
                 last_applied = json.load(f)["last_applied"]
@@ -1128,9 +1105,8 @@ def streaming_grouping_sets(
             merged = spark_l.read.parquet(
                 os.path.join(cur_dir, "partials")
             ).unionByName(delta)
-            next_v = int(os.path.basename(cur_dir)[1:]) + 1
         else:
-            merged, next_v = delta, 0
+            merged = delta
         merged = merged.groupBy(*_GS_KEYS).agg(
             F.sum("p_sum").alias("p_sum"),
             F.min("p_min").alias("p_min"),
@@ -1143,16 +1119,10 @@ def streaming_grouping_sets(
             with open(os.path.join(new_dir, "applied.json"), "w") as f:
                 json.dump({"last_applied": int(batch_id)}, f)
 
-        _commit_store_version(store_path, next_v, populate)
+        publish_version(store_path, populate)
 
-    (
-        raw.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    st = spark.read.parquet(os.path.join(_store_current_dir(store_path), "partials"))
+    drain(raw, ckpt, foreach_batch=merge_batch)
+    st = spark.read.parquet(os.path.join(current_version_dir(store_path), "partials"))
     return st.select(
         "grain", "bucket", "remote_id", "metric_id", "provider_id", "category_id",
         floor_round(F.col("p_sum").cast("double"), 6).alias("sum_value"),
@@ -1238,16 +1208,11 @@ def streaming_corpus_gate(spark: SparkSession, sf_dir: str, work_dir: str) -> Da
     os.makedirs(rej_dir, exist_ok=True)
     ckpt = os.path.join(work_dir, "gate_ckpt")
 
-    (
-        raw.writeStream.foreachBatch(
-            lambda batch_df, batch_id: gate_and_land_batch(
-                batch_df, keep_dir, rej_dir, batch_id
-            )
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        raw, ckpt,
+        foreach_batch=lambda batch_df, batch_id: gate_and_land_batch(
+            batch_df, keep_dir, rej_dir, batch_id
+        ),
     )
     cols = [
         "doc_id", "source", "n_words", "mean_word_len", "alpha_word_frac",
@@ -1389,15 +1354,7 @@ def streaming_ewma(
     )
     out = os.path.join(work_dir, "ewma_out")
     ckpt = os.path.join(work_dir, "ewma_ckpt")
-    (
-        smoothed.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(smoothed, ckpt, path=out)
     return spark.read.parquet(out)
 
 
@@ -1449,10 +1406,9 @@ def streaming_ohlc(
         .drop("event_time")
     )
     silver_dir = os.path.join(work_dir, "ohlc_silver")
-    run_stream_to_parquet(
-        deduped, silver_dir, os.path.join(work_dir, "ohlc_silver_ckpt"),
-        partition_by=None,
-        scale_src=(os.path.join(sf_dir, "events.parquet"),),
+    drain(
+        deduped, os.path.join(work_dir, "ohlc_silver_ckpt"), path=silver_dir,
+        state_src=(os.path.join(sf_dir, "events.parquet"),),
     )
     silver = spark.readStream.schema(
         spark.read.parquet(silver_dir).schema
@@ -1472,17 +1428,10 @@ def streaming_ohlc(
     )
     out = os.path.join(work_dir, "ohlc_out")
     ckpt = os.path.join(work_dir, "ohlc_ckpt")
-    with _scaled_state_shuffle(spark, silver_dir):
-        (
-            windowed.writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda batch, _id: batch.write.mode("overwrite").parquet(out)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    drain(
+        windowed, ckpt, mode="complete", state_src=(silver_dir,),
+        foreach_batch=lambda batch, _id: batch.write.mode("overwrite").parquet(out),
+    )
     res = spark.read.parquet(out)
     return res.select(
         "serial",
@@ -1523,9 +1472,10 @@ def _merge_hll_store(spark: SparkSession, store: str, agg: DataFrame) -> None:
     sketch on a mid-write crash, and checkpoint replay only redelivers
     UNAPPLIED batches, so the store would be unrecoverable.  With the
     swap, a crash before the pointer moves leaves the old version
-    intact and the replayed batch re-merges into it; stale version
-    dirs are swept after a successful swap."""
-    cur_dir = _hll_current_dir(store)
+    intact and the replayed batch re-merges into it
+    (:func:`~.sinks.publish_version`, the protocol every versioned
+    store here shares)."""
+    cur_dir = current_version_dir(store)
     if cur_dir is not None:
         cur = spark.read.parquet(cur_dir)
         merged = (
@@ -1533,55 +1483,16 @@ def _merge_hll_store(spark: SparkSession, store: str, agg: DataFrame) -> None:
             .groupBy("metric", "datestamp")
             .agg(F.hll_union_agg("sketch").alias("sketch"))
         )
-        next_v = int(os.path.basename(cur_dir)[1:]) + 1
     else:
-        merged, next_v = agg, 0
-    _commit_store_version(
-        store,
-        next_v,
-        lambda new_dir: merged.write.mode("overwrite").parquet(new_dir),
+        merged = agg
+    publish_version(
+        store, lambda new_dir: merged.write.mode("overwrite").parquet(new_dir)
     )
-
-
-def _store_current_dir(store: str) -> str | None:
-    """Resolve a versioned store's committed directory, or None for an
-    empty store (a ``v*`` dir without a CURRENT pointer is an
-    uncommitted crash leftover and is correctly ignored).  Shared by
-    the HLL and CMS sketch stores."""
-    ptr = os.path.join(store, "CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        return os.path.join(store, f.read().strip())
-
-
-#: the HLL store's name for the shared resolver (kept for the tests
-#: and docstrings that refer to the store by family)
-_hll_current_dir = _store_current_dir
-
-
-def _commit_store_version(store: str, next_v: int, populate) -> None:
-    """The sketch stores' shared commit protocol: ``populate`` writes
-    version ``v{next_v}``'s payload, then the ``CURRENT`` pointer
-    swaps atomically (tmp + ``os.replace``) and stale version dirs
-    sweep.  A crash before the swap leaves the previous version (and
-    everything committed with it) current; one protocol, one place to
-    harden."""
-    import shutil
-
-    populate(os.path.join(store, f"v{next_v}"))
-    tmp = os.path.join(store, "CURRENT.tmp")
-    with open(tmp, "w") as f:
-        f.write(f"v{next_v}")
-    os.replace(tmp, os.path.join(store, "CURRENT"))
-    for d in os.listdir(store):
-        if d.startswith("v") and d != f"v{next_v}":
-            shutil.rmtree(os.path.join(store, d), ignore_errors=True)
 
 
 def read_hll_store(spark: SparkSession, store: str) -> DataFrame:
     """Read the committed contents of a sketch store."""
-    cur = _hll_current_dir(store)
+    cur = current_version_dir(store)
     if cur is None:
         raise FileNotFoundError(f"empty sketch store: {store}")
     return spark.read.parquet(cur)
@@ -1624,13 +1535,7 @@ def streaming_approx_distinct(
         )
         _merge_hll_store(spark, store, agg)
 
-    (
-        bronze.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(bronze, ckpt, foreach_batch=merge)
     estimates = read_hll_store(spark, store).select(
         "metric",
         F.col("datestamp").alias("bucket"),
@@ -1673,16 +1578,20 @@ def _round_half_up_int(x):
     |x| is large enough that ``x±0.5`` loses integer precision — for
     |x| < 2^40 the float error stack is < 2.5e-4, so rows within 1e-3
     of a boundary (plus all |x| ≥ 2^40) take the exact Decimal path.
+    NaN/±inf take it too, so they raise there instead of casting to
+    INT64_MIN on the fast path.
     (r15: the cusum state fn ran this per row via Decimal — 4 Decimal
     constructions per row dominated the drain's Python time.)"""
     import numpy as np
     from decimal import ROUND_HALF_UP, Decimal
 
-    out = np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype(
+    finite = np.isfinite(x)
+    xf = np.where(finite, x, 0.0)
+    out = np.where(xf >= 0, np.floor(xf + 0.5), np.ceil(xf - 0.5)).astype(
         np.int64
     )
-    frac = np.abs(x) % 1.0
-    risky = (np.abs(frac - 0.5) < 1e-3) | (np.abs(x) >= 2.0**40)
+    frac = np.abs(xf) % 1.0
+    risky = ~finite | (np.abs(frac - 0.5) < 1e-3) | (np.abs(x) >= 2.0**40)
     if risky.any():
         for i in np.nonzero(risky)[0]:
             out[i] = int(
@@ -1862,15 +1771,7 @@ def streaming_cusum(
     )
     out = os.path.join(work_dir, "cusum_out")
     ckpt = os.path.join(work_dir, "cusum_ckpt")
-    (
-        flagged.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(flagged, ckpt, path=out)
     return spark.read.parquet(out)
 
 
@@ -1913,10 +1814,9 @@ def streaming_slo_burn(
         .drop("event_time")
     )
     silver_dir = os.path.join(work_dir, "slo_silver")
-    run_stream_to_parquet(
-        deduped, silver_dir, os.path.join(work_dir, "slo_silver_ckpt"),
-        partition_by=None,
-        scale_src=(os.path.join(sf_dir, "events.parquet"),),
+    drain(
+        deduped, os.path.join(work_dir, "slo_silver_ckpt"), path=silver_dir,
+        state_src=(os.path.join(sf_dir, "events.parquet"),),
     )
     silver = spark.readStream.schema(
         spark.read.parquet(silver_dir).schema
@@ -1935,17 +1835,10 @@ def streaming_slo_burn(
     )
     out = os.path.join(work_dir, "slo_hourly_out")
     ckpt = os.path.join(work_dir, "slo_ckpt")
-    with _scaled_state_shuffle(spark, silver_dir):
-        (
-            windowed.writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda batch, _id: batch.write.mode("overwrite").parquet(out)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    drain(
+        windowed, ckpt, mode="complete", state_src=(silver_dir,),
+        foreach_batch=lambda batch, _id: batch.write.mode("overwrite").parquet(out),
+    )
     hourly = spark.read.parquet(out).select(
         F.unix_timestamp(F.col("window.start")).alias("hour_epoch"),
         "hourstamp",
@@ -1992,10 +1885,9 @@ def streaming_cdc_apply(
         .drop("event_time")
     )
     silver_dir = os.path.join(work_dir, "cdc_silver")
-    run_stream_to_parquet(
-        deduped, silver_dir, os.path.join(work_dir, "cdc_silver_ckpt"),
-        partition_by=None,
-        scale_src=(os.path.join(sf_dir, "events.parquet"),),
+    drain(
+        deduped, os.path.join(work_dir, "cdc_silver_ckpt"), path=silver_dir,
+        state_src=(os.path.join(sf_dir, "events.parquet"),),
     )
     silver = spark.readStream.schema(
         spark.read.parquet(silver_dir).schema
@@ -2003,27 +1895,16 @@ def streaming_cdc_apply(
     folded = cdc_ops(silver).groupBy("serial", "metric").agg(*cdc_agg_cols())
     out = os.path.join(work_dir, "cdc_state_out")
     ckpt = os.path.join(work_dir, "cdc_ckpt")
-    with _scaled_state_shuffle(spark, silver_dir):
-        (
-            folded.writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda batch, _id: batch.write.mode("overwrite").parquet(out)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    drain(
+        folded, ckpt, mode="complete", state_src=(silver_dir,),
+        foreach_batch=lambda batch, _id: batch.write.mode("overwrite").parquet(out),
+    )
     return cdc_project(spark.read.parquet(out))
 
 
 # --------------------------------------------------------------------------
 # streaming count-min frequency sketch (cell-wise-additive serving store)
 # --------------------------------------------------------------------------
-
-
-#: the CMS store resolves versions through the shared protocol
-_cms_current_dir = _store_current_dir
 
 
 def _merge_cms_store(spark: SparkSession, store: str, cells: DataFrame, batch_id: int) -> None:
@@ -2048,7 +1929,7 @@ def _merge_cms_store(spark: SparkSession, store: str, cells: DataFrame, batch_id
     """
     import json
 
-    cur_dir = _cms_current_dir(store)
+    cur_dir = current_version_dir(store)
     if cur_dir is not None:
         with open(os.path.join(cur_dir, "applied.json")) as f:
             last_applied = json.load(f)["last_applied"]
@@ -2060,21 +1941,20 @@ def _merge_cms_store(spark: SparkSession, store: str, cells: DataFrame, batch_id
             .groupBy("row_idx", "col_idx")
             .agg(F.sum("cell_count").alias("cell_count"))
         )
-        next_v = int(os.path.basename(cur_dir)[1:]) + 1
     else:
-        merged, next_v = cells, 0
+        merged = cells
 
     def populate(new_dir: str) -> None:
         merged.write.mode("overwrite").parquet(os.path.join(new_dir, "cells"))
         with open(os.path.join(new_dir, "applied.json"), "w") as f:
             json.dump({"last_applied": int(batch_id)}, f)
 
-    _commit_store_version(store, next_v, populate)
+    publish_version(store, populate)
 
 
 def read_cms_store(spark: SparkSession, store: str) -> DataFrame:
     """Read the committed cell relation of a CMS store."""
-    cur = _cms_current_dir(store)
+    cur = current_version_dir(store)
     if cur is None:
         raise FileNotFoundError(f"empty CMS store: {store}")
     return spark.read.parquet(os.path.join(cur, "cells"))
@@ -2128,16 +2008,15 @@ def streaming_freq_sketch(
     ckpt = os.path.join(work_dir, "cms_ckpt")
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _merge_cms_store(spark, store, cms_sketch(batch_df), batch_id)
+        # the store merge runs in the micro-batch's own session, i.e. at
+        # the query's state-partition count (the watermark's no-data
+        # batch re-merges the store here)
+        _merge_cms_store(batch_df.sparkSession, store, cms_sketch(batch_df), batch_id)
 
-    with _scaled_state_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        (
-            bronze.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    drain(
+        bronze, ckpt, foreach_batch=merge,
+        state_src=(os.path.join(sf_dir, "events.parquet"),),
+    )
     ground = dedup_exact(parse_bronze(load_table(spark, sf_dir, "events")))
     return freq_sketch_audit(ground, sketch=read_cms_store(spark, store))
 
@@ -2473,13 +2352,7 @@ def streaming_url_frontier(
             os.path.join(admit_dir, f"batch={batch_id}")
         )
 
-    (
-        raw.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(raw, ckpt, foreach_batch=_admit)
     out_schema = "doc_id long, source string, url string, canonical_url string"
     subdirs = [
         os.path.join(admit_dir, d)
@@ -2635,13 +2508,7 @@ def streaming_web_ingest(
             os.path.join(lake_dir, f"batch={batch_id}")
         )
 
-    (
-        raw.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(raw, ckpt, foreach_batch=_ingest)
     out_schema = (
         "doc_id long, source string, canonical_url string, "
         "html_md5 string, extracted_text string, n_blocks int"
@@ -2789,13 +2656,7 @@ def streaming_paragraph_dedup(
             os.path.join(out_dir, f"batch={batch_id}")
         )
 
-    (
-        raw.writeStream.foreachBatch(_clean)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(raw, ckpt, foreach_batch=_clean)
     out_schema = (
         "doc_id long, clean_text string, n_chunks int, n_dropped int"
     )
@@ -2878,15 +2739,7 @@ def streaming_change_feed(
             os.path.join(lake_dir, f"batch={batch_id}")
         )
 
-    (
-        spark.readStream.schema(feed_schema)
-        .parquet(feed_dir)
-        .writeStream.foreachBatch(_hop)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(spark.readStream.schema(feed_schema).parquet(feed_dir), ckpt, foreach_batch=_hop)
     subdirs = [
         os.path.join(lake_dir, d)
         for d in os.listdir(lake_dir)

@@ -22,13 +22,16 @@ hop transforms (one logical plan, two trigger policies).
 Scale notes: each hop checkpoints independently (the recovery unit is
 the hop); pools map to the reference's per-feed isolation; trigger
 interval is the latency/throughput knob (120 s in the reference's
-bulk feeds, 30 s on the low-latency one).  The bronze dedup's state
-partition count is fixed at the hop's FIRST start, by the same rule
-the drains use (landing-dir bytes, floored at 1 — a fresh runner gets
-one state store, so a trickle batch commits one store and writes one
-file); a restart keeps the checkpointed count.  A production feed
-whose dedup state outgrows one store pins the count before that first
-start with ``SPARK_GRAFT_STREAM_PARTS``.
+bulk feeds, 30 s on the low-latency one).  Every hop starts through
+``pipeline.start_stream``, the primitive the availableNow drains use.
+The bronze dedup passes its landing dir as ``state_src``, so its state
+partition count is fixed at the hop's FIRST start from the landing-dir
+bytes (floored at 1 — a fresh runner gets one state store, so a
+trickle batch commits one store and writes one file); the session conf
+holds that count only for the bronze ``start()`` call, and a restart
+keeps the checkpointed count.  A production feed whose dedup state
+outgrows one store pins the count before that first start with
+``SPARK_GRAFT_STREAM_PARTS``.
 """
 
 from __future__ import annotations
@@ -47,8 +50,8 @@ from telemetry_streaming_datalake_spark.operators.temporal import enrich_gold
 from telemetry_streaming_datalake_spark.session import load_table, normalize_nano_ts
 from telemetry_streaming_datalake_spark.streaming.pipeline import (
     DEDUP_WATERMARK,
-    _scaled_state_shuffle,
     _stage_parquet,
+    start_stream,
 )
 
 #: hop names — the queryName() handles the manager reports
@@ -125,39 +128,22 @@ class AlwaysOnRunner:
             )
             store.apply_batch(latest, batch_id)
 
-        self.spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", "ServingPool"
+        return self._start(
+            SERVING_QUERY, "ServingPool", gold, foreach_batch=upsert_latest
         )
-        q = (
-            gold.writeStream.queryName(SERVING_QUERY)
-            .foreachBatch(upsert_latest)
-            .option(
-                "checkpointLocation",
-                os.path.join(self.work_dir, f"ckpt_{SERVING_QUERY}"),
-            )
-            .trigger(processingTime=self.trigger)
-            .start()
-        )
-        self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
-        self.queries[SERVING_QUERY] = q
-        return q
 
     # ------------------------------------------------------- control
 
-    def _start(self, name: str, pool: str, df: DataFrame, out: str) -> StreamingQuery:
+    def _start(self, name: str, pool: str, df: DataFrame, **sink) -> StreamingQuery:
         # pool pinning exactly as the reference: local property at
         # start time; the query's micro-batch thread inherits it
         self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-        q = (
-            df.writeStream.queryName(name)
-            .format("parquet")
-            .option("path", out)
-            .option(
-                "checkpointLocation", os.path.join(self.work_dir, f"ckpt_{name}")
-            )
-            .outputMode("append")
-            .trigger(processingTime=self.trigger)
-            .start()
+        q = start_stream(
+            df,
+            os.path.join(self.work_dir, f"ckpt_{name}"),
+            name=name,
+            processing_time=self.trigger,
+            **sink,
         )
         self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
         self.queries[name] = q
@@ -169,22 +155,24 @@ class AlwaysOnRunner:
         exist before their consumers start (empty dirs are fine —
         schemas are explicit), mirroring table-creation-before-stream
         in the reference.  Only the bronze dedup is stateful, so only
-        its ``start()`` runs under the input-sized state partition
-        count; the session conf is restored before the next hop."""
+        its start passes ``state_src``: the input-sized state partition
+        count holds for that ``start()`` call alone."""
         for d in (self.landing_dir, self.bronze_dir, self.silver_dir, self.gold_dir):
             os.makedirs(d, exist_ok=True)
         bronze = self._bronze_stream()
-        with _scaled_state_shuffle(self.spark, self.landing_dir):
-            self._start(BRONZE_QUERY, "BronzePool", bronze, self.bronze_dir)
+        self._start(
+            BRONZE_QUERY, "BronzePool", bronze,
+            path=self.bronze_dir, state_src=(self.landing_dir,),
+        )
         silver = to_silver(
             self._lake_stream(bronze, self.bronze_dir), metric_mapping(self.spark)
         )
-        self._start(SILVER_QUERY, "SilverPool", silver, self.silver_dir)
+        self._start(SILVER_QUERY, "SilverPool", silver, path=self.silver_dir)
         history = remote_history(
             self.spark, load_table(self.spark, self.sf_dir, "customer")
         )
         gold = enrich_gold(self._lake_stream(silver, self.silver_dir), history)
-        self._start(GOLD_QUERY, "GoldPool", gold, self.gold_dir)
+        self._start(GOLD_QUERY, "GoldPool", gold, path=self.gold_dir)
         self._start_serving(self._lake_stream(gold, self.gold_dir))
         return dict(self.queries)
 

@@ -29,6 +29,45 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 
+def current_version_dir(store: str) -> str | None:
+    """The committed ``v{n}`` directory of a versioned store, or None
+    for an empty store.  A ``v*`` dir the ``CURRENT`` pointer does not
+    name is an uncommitted crash leftover (or the previous version,
+    kept for lazy readers) and is never resolved."""
+    ptr = os.path.join(store, "CURRENT")
+    if not os.path.exists(ptr):
+        return None
+    with open(ptr) as fh:
+        return os.path.join(store, fh.read().strip())
+
+
+def publish_version(store: str, populate) -> None:
+    """The one commit protocol of every versioned store (upsert, HLL,
+    CMS, grouping sets): ``populate(new_dir)`` writes the next
+    version's payload into ``v{n+1}``, then the ``CURRENT`` pointer
+    (``v{n+1}``, relative to the store root) swaps atomically (tmp +
+    ``os.replace``).  A crash before the swap leaves the previous
+    version, and everything committed with it, current; the orphan is
+    overwritten by the next publish.  The sweep keeps the new and the
+    previous version (in-flight lazy readers of the prior snapshot
+    stay valid) and removes everything else."""
+    import shutil
+
+    cur = current_version_dir(store)
+    version = 0 if cur is None else int(os.path.basename(cur)[1:]) + 1
+    populate(os.path.join(store, f"v{version}"))
+    tmp = os.path.join(store, "CURRENT.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(f"v{version}")
+    os.replace(tmp, os.path.join(store, "CURRENT"))
+    for d in os.listdir(store):
+        if d.startswith("v") and d[1:].isdigit() and int(d[1:]) not in (
+            version,
+            version - 1,
+        ):
+            shutil.rmtree(os.path.join(store, d), ignore_errors=True)
+
+
 class ServingStoreWriter(abc.ABC):
     """The foreachBatch serving-sink contract a real KV client drops
     into (the reference's Cosmos ``ItemOverwrite`` strategy is one
@@ -53,24 +92,6 @@ class ServingStoreWriter(abc.ABC):
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Land one micro-batch.  MUST be safe to call twice with the
         same (content, batch_id) pair."""
-
-
-def attach_serving_sink(
-    agg_stream: DataFrame,
-    writer: ServingStoreWriter,
-    checkpoint_dir: str,
-    output_mode: str = "complete",
-) -> None:
-    """Shared writeStream plumbing for any serving-store writer:
-    foreachBatch + checkpoint + deterministic availableNow drain."""
-    (
-        agg_stream.writeStream.outputMode(output_mode)
-        .foreachBatch(writer.apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 class InMemoryKVServingStore(ServingStoreWriter):
@@ -200,9 +221,10 @@ class ParquetUpsertStore(ServingStoreWriter):
     (tmp + ``os.replace``) — the pre-r8 layout overwrote the store
     directory in place, so a query stop or crash mid-apply could leave
     the store EMPTY with no replay able to restore the lost rows (the
-    checkpoint only re-delivers unapplied batches).  With the swap, an
-    aborted apply leaves an orphan ``v{n}`` that the next apply's
-    sweep removes, and readers always see the last committed state.
+    checkpoint only re-delivers unapplied batches).  With the swap
+    (:func:`publish_version`, shared with the sketch and grouping-sets
+    stores), an aborted apply leaves an orphan ``v{n}`` that the next
+    apply overwrites, and readers always see the last committed state.
     The previous version is kept until the next successful apply so
     in-flight lazy readers of the prior snapshot stay valid.
     """
@@ -223,32 +245,7 @@ class ParquetUpsertStore(ServingStoreWriter):
 
     def current_data_dir(self) -> str | None:
         """The committed version directory (None for an empty store)."""
-        ptr = os.path.join(self.path, "CURRENT")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as fh:
-            return os.path.join(self.path, fh.read().strip())
-
-    def _publish(self, version: int) -> None:
-        import shutil
-
-        tmp = os.path.join(self.path, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(f"v{version}")
-        os.replace(tmp, os.path.join(self.path, "CURRENT"))
-        # sweep everything older than the PREVIOUS version (kept for
-        # in-flight readers) plus any aborted-apply orphans newer than
-        # the committed one
-        for d in os.listdir(self.path):
-            if d.startswith("v") and d[1:].isdigit() and int(d[1:]) not in (
-                version,
-                version - 1,
-            ):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    def _next_version(self) -> int:
-        cur = self.current_data_dir()
-        return 0 if cur is None else int(os.path.basename(cur)[1:]) + 1
+        return current_version_dir(self.path)
 
     # ------------------------------------------------------------ read
 
@@ -277,16 +274,18 @@ class ParquetUpsertStore(ServingStoreWriter):
     # ----------------------------------------------------------- write
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        incoming = batch_df.withColumn("_v", F.lit(1))
         cur = self.current_data_dir()
-        version = self._next_version()
-        new_dir = os.path.join(self.path, f"v{version}")
+        publish_version(
+            self.path, lambda new_dir: self._write_version(batch_df, cur, new_dir)
+        )
+
+    def _write_version(self, batch_df: DataFrame, cur: str | None, new_dir: str) -> None:
+        incoming = batch_df.withColumn("_v", F.lit(1))
         if cur is None:
             writer = incoming.drop("_v").write.mode("overwrite")
             if self.partition_col:
                 writer = writer.partitionBy(self.partition_col)
             writer.parquet(new_dir)
-            self._publish(version)
             return
         if self.partition_col:
             current = self.read()
@@ -327,7 +326,6 @@ class ParquetUpsertStore(ServingStoreWriter):
                         os.path.join(src_dir, fname),
                         os.path.join(dst_dir, fname),
                     )
-            self._publish(version)
             return
         # unpartitioned: documented full winner rewrite, atomic via the
         # same version swap.  Every version was written from a batch of
@@ -337,18 +335,3 @@ class ParquetUpsertStore(ServingStoreWriter):
             current.withColumn("_v", F.lit(0)).unionByName(incoming)
         )
         merged.write.mode("overwrite").parquet(new_dir)
-        self._publish(version)
-
-
-def stream_upsert_rollup(
-    spark: SparkSession,
-    agg_stream: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    partition_col: str | None = "datestamp",
-) -> None:
-    """Stream a (complete-mode) aggregate into the upsert store via
-    foreachBatch — the Step 05 pattern: update-mode agg + MERGE.
-    Any :class:`ServingStoreWriter` slots into the same plumbing."""
-    store = ParquetUpsertStore(spark, store_path, partition_col=partition_col)
-    attach_serving_sink(agg_stream, store, checkpoint_dir)

@@ -687,6 +687,91 @@ def test_stream_state_parts_sizing_rule(tmp_path, monkeypatch):
     assert SP._stream_state_parts(fake, str(d)) == 1
 
 
+def test_drain_scopes_state_parts_to_start(spark, tmp_path, monkeypatch):
+    """drain(..., state_src=...) runs the query's state operator at the
+    input-sized count, yet the session conf keeps its own value inside
+    foreach_batch and after the call; a drain with no state_src never
+    sets the conf at all."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.shuffle.partitions"
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTS", raising=False)
+    landing = str(tmp_path / "landing")
+    spark.createDataFrame(
+        [(1, "a", "2024-01-01 00:00:00"), (2, "a", "2024-01-01 00:00:01"),
+         (3, "b", "2024-01-01 00:00:02")],
+        "id long, k string, ts string",
+    ).withColumn("ts", F.to_timestamp("ts")).coalesce(1).write.parquet(landing)
+    schema = spark.read.parquet(landing).schema
+
+    def dedup_stream():
+        return (
+            spark.readStream.schema(schema).parquet(landing)
+            .withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark(["k"])
+        )
+
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, k, v):
+        sets.append(k)
+        real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    before = spark.conf.get(key)
+    want = SP._stream_state_parts(spark, landing)
+    real_set(spark.conf, key, str(want + 2))  # a session value != the scaled one
+    try:
+        seen, rows = [], []
+
+        def body(batch_df, _id):
+            seen.append(spark.conf.get(key))
+            rows.extend(batch_df.collect())
+
+        q = SP.drain(
+            dedup_stream(), str(tmp_path / "ckpt_a"), foreach_batch=body,
+            state_src=(landing,),
+        )
+        parts = [
+            p["stateOperators"][0]["numShufflePartitions"]
+            for p in q.recentProgress
+            if p["stateOperators"]
+        ]
+        assert parts and set(parts) == {want}
+        assert seen and set(seen) == {str(want + 2)}
+        assert spark.conf.get(key) == str(want + 2)
+        assert sorted(r.k for r in rows) == ["a", "b"]
+
+        sets.clear()
+        seen.clear()
+        q = SP.drain(dedup_stream(), str(tmp_path / "ckpt_b"), foreach_batch=body)
+        assert key not in sets
+        assert set(seen) == {str(want + 2)}
+        assert {
+            p["stateOperators"][0]["numShufflePartitions"]
+            for p in q.recentProgress
+            if p["stateOperators"]
+        } == {want + 2}
+    finally:
+        real_set(spark.conf, key, before)
+
+
+def test_round_half_up_int_rejects_non_finite():
+    """NaN and ±inf raise instead of casting to INT64_MIN; finite values
+    keep Spark's HALF_UP results, fast path and Decimal path alike."""
+    import numpy as np
+    import pytest
+
+    got = SP._round_half_up_int(
+        np.array([0.5, -0.5, 1.4999, 2.5, -2.5, 3.2, -3.7, 1e12 + 0.5, 0.0])
+    )
+    assert got.tolist() == [1, -1, 1, 3, -3, 3, -4, 1_000_000_000_001, 0]
+    for bad in (np.nan, np.inf, -np.inf):
+        with pytest.raises((ValueError, ArithmeticError)):
+            SP._round_half_up_int(np.array([1.0, bad]))
+
+
 def test_runner_feed_publishes_atomically(tmp_path, monkeypatch):
     """feed() copies only to names the file source skips, then renames
     into place: a running query never lists a half-copied drop, and no
@@ -1154,7 +1239,8 @@ def test_hll_store_merge_is_replay_idempotent(spark, tmp_path):
 def test_hll_store_crash_mid_write_keeps_previous_version(spark, tmp_path):
     """A version dir written WITHOUT the pointer swap (crash before
     commit) must be invisible: reads return the previous committed
-    store, and the next merge ignores the orphan and sweeps it."""
+    store, and the next merge ignores the orphan and overwrites it
+    (the previous version is kept for lazy readers)."""
     import os as _os
 
     from telemetry_streaming_datalake_spark.streaming.pipeline import (
@@ -1183,12 +1269,10 @@ def test_hll_store_crash_mid_write_keeps_previous_version(spark, tmp_path):
     assert read_hll_store(spark, store).select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0] == committed
-    # replayed batch merges into the COMMITTED version, orphan is swept
+    # replayed batch merges into the COMMITTED version, orphan is overwritten
     _merge_hll_store(spark, store, sketch_of([f"t{i}" for i in range(10)]))
     versions = sorted(d for d in _os.listdir(store) if d.startswith("v"))
-    assert versions == [_os.path.basename(
-        _os.path.join(store, open(_os.path.join(store, "CURRENT")).read().strip())
-    )]
+    assert versions == ["v0", "v1"]
     final = read_hll_store(spark, store).select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0]
@@ -1197,12 +1281,12 @@ def test_hll_store_crash_mid_write_keeps_previous_version(spark, tmp_path):
 
 
 def test_resilient_store_attaches_to_real_stream(spark, tmp_path):
-    """ResilientKVServingStore drops into the shared writeStream
-    plumbing (attach_serving_sink) and lands a streamed aggregate with
-    a transient per-item fault retried in-flight."""
+    """ResilientKVServingStore drops into the shared stream-start
+    primitive (drain) and lands a streamed aggregate with a transient
+    per-item fault retried in-flight."""
+    from telemetry_streaming_datalake_spark.streaming.pipeline import drain
     from telemetry_streaming_datalake_spark.streaming.sinks import (
         ResilientKVServingStore,
-        attach_serving_sink,
     )
 
     src_dir = tmp_path / "feed"
@@ -1227,7 +1311,10 @@ def test_resilient_store_attaches_to_real_stream(spark, tmp_path):
         real_write(k, v)
 
     store._write_item = flaky
-    attach_serving_sink(stream, store, str(tmp_path / "ckpt"))
+    drain(
+        stream, str(tmp_path / "ckpt"), foreach_batch=store.apply_batch,
+        mode="complete",
+    )
     assert store.data["a"]["total"] == 3.0
     assert store.data["b"]["total"] == 5.0
     assert not store.dead_letters

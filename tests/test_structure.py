@@ -1,0 +1,68 @@
+"""Structural guard: one stream-start primitive, one pointer commit.
+
+Every library streaming query starts through
+``streaming.pipeline.start_stream`` (``drain`` is its availableNow
+form), the only place the session's shuffle-partition count changes at
+runtime; every versioned store commits through
+``streaming.sinks.publish_version``.  This test fails when a second
+``writeStream`` chain, conf window or ``CURRENT`` writer appears.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PKG = Path(__file__).resolve().parents[1] / "telemetry_streaming_datalake_spark"
+
+
+def _owners(pred) -> set[tuple[str, str]]:
+    """(module path, qualified def name) of every AST node matching
+    ``pred`` anywhere in the library ("" for module level)."""
+    hits = set()
+
+    def walk(node, rel, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                walk(child, rel, scope + (child.name,))
+                continue
+            if pred(child):
+                hits.add((rel, ".".join(scope)))
+            walk(child, rel, scope)
+
+    for path in sorted(PKG.rglob("*.py")):
+        walk(ast.parse(path.read_text()), path.relative_to(PKG).as_posix(), ())
+    return hits
+
+
+def _attr(name):
+    return lambda n: isinstance(n, ast.Attribute) and n.attr == name
+
+
+def _const(*values):
+    return lambda n: isinstance(n, ast.Constant) and n.value in values
+
+
+def test_one_stream_start_primitive():
+    assert _owners(_attr("writeStream")) == {("streaming/pipeline.py", "start_stream")}
+    assert _owners(_attr("awaitTermination")) == {
+        ("streaming/pipeline.py", "drain"),
+        ("streaming/runner.py", "AlwaysOnRunner.stop"),
+    }
+
+
+def test_shuffle_partitions_set_only_by_the_primitive():
+    # the session builder sets the initial value; only start_stream
+    # changes it on a live session, and only around start()
+    assert _owners(_const("spark.sql.shuffle.partitions")) == {
+        ("session.py", "get_spark"),
+        ("streaming/pipeline.py", "start_stream"),
+    }
+
+
+def test_current_pointer_written_only_by_publish():
+    assert _owners(_const("CURRENT.tmp")) == {("streaming/sinks.py", "publish_version")}
+    assert _owners(_const("CURRENT")) <= {
+        ("streaming/sinks.py", "current_version_dir"),
+        ("streaming/sinks.py", "publish_version"),
+    }
