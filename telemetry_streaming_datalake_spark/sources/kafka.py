@@ -116,8 +116,9 @@ def file_analog_wire_stream(
     uniform hash of the payload (what a key-less producer's round-robin
     looks like after the fact), ``offset`` is deterministic per record.
     """
-    path = stage_events_jsonl(spark, sf_dir, work_dir)
-    lines = spark.readStream.format("text").load(path)
+    from telemetry_streaming_datalake_spark.streaming.pipeline import landing_stream
+
+    lines = landing_stream(spark, stage_events_jsonl(spark, sf_dir, work_dir), fmt="text")
     return lines.select(
         F.lit(None).cast("binary").alias("key"),
         F.col("value").cast("binary").alias("value"),

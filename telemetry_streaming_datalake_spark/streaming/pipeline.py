@@ -22,6 +22,17 @@ set on the session around ``start()`` alone and restored before the
 call returns, so no drain holds a changed session conf while its
 batches (or any other query) run.
 
+Every hop also READS and DEDUPS through one set of hop builders, which
+the always-on runner builds its hops from too: :func:`landing_stream`
+is the library's only ``readStream`` (a lake-to-lake hop passes the
+upstream frame's schema, so no lake is footer-inferred);
+:func:`events_stream` stages and streams the events feed typed like
+the batch loader; :func:`bronze_dedup` is the reference's per-feed
+watermark + hash-key dedup recipe; :func:`deduped_lake_stream` drains
+it to a lake and streams that lake back for the twins whose aggregate
+must be the query's one stateful operator; :func:`read_batch_lake`
+reads back the batchId-scoped lakes ``foreachBatch`` sinks land.
+
 Scale notes: the watermark bounds dropDuplicates state exactly like the
 reference's 48 h watermark (``Part1 ….scala:69``); sinks partition by
 ``datestamp``; the upsert sink rewrites only the partitions present in
@@ -187,41 +198,102 @@ def drain(df: DataFrame, checkpoint: str, **kw) -> StreamingQuery:
     return q
 
 
-def _events_glob(spark: SparkSession, sf_dir: str, work_dir: str | None = None) -> DataFrame:
-    """Stage the feed file into a landing directory and stream it —
-    the file source watches directories (like a Kafka topic watches
-    partitions), so this mirrors real file-drop ingestion."""
-    import tempfile
+def landing_stream(
+    spark: SparkSession,
+    path: str,
+    schema=None,
+    *,
+    fmt: str = "parquet",
+    max_files: int | None = None,
+) -> DataFrame:
+    """Stream a landing directory or an upstream hop's lake — the
+    library's only ``readStream`` (the real broker reader,
+    ``sources.kafka.kafka_read_stream``, aside).  A lake-to-lake hop
+    passes the upstream frame's schema, so no lake (empty or not) is
+    footer-inferred; ``max_files`` bounds files per micro-batch."""
+    reader = spark.readStream.format(fmt)
+    if schema is not None:
+        reader = reader.schema(schema)
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return reader.load(path)
 
-    src = os.path.join(sf_dir, "events.parquet")
-    landing = os.path.join(work_dir or tempfile.mkdtemp(prefix="tsdl_land_"), "landing")
-    os.makedirs(landing, exist_ok=True)
-    _stage_parquet(src, landing, "events.parquet")
-    schema = spark.read.parquet(src).schema
-    return spark.readStream.schema(schema).parquet(landing)
+
+def events_stream(
+    spark: SparkSession, sf_dir: str, work_dir: str, max_files: int | None = None
+) -> DataFrame:
+    """The events feed as a stream over ``work_dir/landing``, typed
+    like :func:`load_table` (``ts`` a timestamp, exactly the batch
+    loader's values), as the always-on runner reads its landing dir.
+
+    The feed file is staged into the landing dir first — the file
+    source watches directories (like a Kafka topic watches
+    partitions), so this mirrors real file-drop ingestion.  With
+    ``max_files`` the caller has staged several feed files there and
+    each micro-batch takes at most that many, so state must carry
+    across batches."""
+    landing = os.path.join(work_dir, "landing")
+    if not max_files:
+        os.makedirs(landing, exist_ok=True)
+        _stage_parquet(os.path.join(sf_dir, "events.parquet"), landing, "events.parquet")
+    schema = load_table(spark, sf_dir, "events").schema
+    return landing_stream(spark, landing, schema, max_files=max_files)
 
 
-def streaming_bronze(spark: SparkSession, sf_dir: str, work_dir: str | None = None) -> DataFrame:
-    """Streaming bronze: parse + watermarked exactly-once dedup.
+def bronze_dedup(bronze: DataFrame) -> DataFrame:
+    """The reference's per-feed Bronze recipe on parsed rows: watermark
+    on event time, drop ``unique_hash_key`` duplicates.
 
-    Same dataflow as the reference's query1
-    (kafka → parse → watermark → dropDuplicates → partitioned append).
-    The raw nanosecond LongType ``ts`` is converted exactly like the
-    batch loader so batch and stream agree bit-for-bit.
-    """
-    raw = _events_glob(spark, sf_dir, work_dir)
-    raw = normalize_nano_ts(raw, "ts")
-    bronze = parse_bronze(raw)
-    # dropDuplicatesWithinWatermark: dedup state really IS evicted once
-    # an event's time passes the watermark (plain dropDuplicates on a
-    # key subset without the event-time column keeps state forever —
-    # the reference's own pattern has that leak)
+    ``dropDuplicatesWithinWatermark``: dedup state really IS evicted
+    once an event's time passes the watermark (plain dropDuplicates on
+    a key subset without the event-time column keeps state forever —
+    the reference's own pattern has that leak)."""
     return (
         bronze.withColumn("event_time", F.timestamp_seconds(F.col("unix_ts")))
         .withWatermark("event_time", DEDUP_WATERMARK)
         .dropDuplicatesWithinWatermark(["unique_hash_key"])
         .drop("event_time")
     )
+
+
+def read_batch_lake(spark: SparkSession, lake_dir: str, schema) -> DataFrame:
+    """Read back a lake that ``foreachBatch`` lands under batchId-scoped
+    subdirectories (``batch-N``/``batch=N``).  The schema is explicit,
+    so a lake that got no rows — a drain of zero batches, or a split
+    whose other side took every row — reads as an empty frame instead
+    of failing schema inference; ``recursiveFileLookup`` reads every
+    batch dir as plain files (no ``batch`` partition column)."""
+    return spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(lake_dir)
+
+
+def streaming_bronze(
+    spark: SparkSession, sf_dir: str, work_dir: str, max_files: int | None = None
+) -> DataFrame:
+    """Streaming bronze: parse + watermarked exactly-once dedup.
+
+    Same dataflow as the reference's query1
+    (kafka → parse → watermark → dropDuplicates → partitioned append),
+    and the always-on runner's bronze hop (pinned plan-equal in
+    ``tests/test_plans.py``).
+    """
+    return bronze_dedup(parse_bronze(events_stream(spark, sf_dir, work_dir, max_files)))
+
+
+def deduped_lake_stream(
+    spark: SparkSession, sf_dir: str, work_dir: str, name: str, max_files: int | None = None
+) -> tuple[DataFrame, str]:
+    """Hop 1 of the twins whose batch oracle takes ``dedup_exact``
+    input but whose aggregate must be the query's ONE stateful
+    operator: drain :func:`streaming_bronze` into ``work_dir/<name>_silver``
+    and stream that lake back with the bronze frame's schema.
+    Returns the silver stream and its lake dir."""
+    bronze = streaming_bronze(spark, sf_dir, work_dir, max_files)
+    lake = os.path.join(work_dir, f"{name}_silver")
+    drain(
+        bronze, f"{lake}_ckpt", path=lake,
+        state_src=(os.path.join(sf_dir, "events.parquet"),),
+    )
+    return landing_stream(spark, lake, bronze.schema), lake
 
 
 def streaming_silver_dedup(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
@@ -264,9 +336,7 @@ def streaming_upsert_rollup(spark: SparkSession, sf_dir: str, work_dir: str) -> 
     """
     from telemetry_streaming_datalake_spark.streaming.sinks import ParquetUpsertStore
 
-    raw = _events_glob(spark, sf_dir, work_dir)
-    raw = normalize_nano_ts(raw, "ts")
-    bronze = parse_bronze(raw)
+    bronze = parse_bronze(events_stream(spark, sf_dir, work_dir))
     agg = bronze.groupBy("metric", "datestamp", "hourstamp").agg(
         F.count(F.lit(1)).alias("n_events"),
         # rounded at the edge like the batch rollups: summation order
@@ -374,8 +444,6 @@ def _rate_state_fn(key, pdfs, state):
                 # floor-form rounding (see derived.floor_round): Python
                 # round() is banker's — a decimal-midpoint rate would
                 # diverge from the batch/oracle HALF-UP form
-                import math
-
                 rate = math.floor((val - last_val) / dt * 1e6 + 0.5) / 1e6 + 0.0
                 out.append([key[0], key[1], ts, val, dt, rate])
             last_ts, last_id, last_val = ts, int(r.event_id), val
@@ -400,18 +468,7 @@ def streaming_counter_rate(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if max_files_per_trigger:
-        path = os.path.join(work_dir, "landing")
-        schema = spark.read.parquet(path).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
-        )
-    else:
-        raw = _events_glob(spark, sf_dir, work_dir)
-    raw = normalize_nano_ts(raw, "ts")
-    bronze = parse_bronze(raw)
+    bronze = parse_bronze(events_stream(spark, sf_dir, work_dir, max_files_per_trigger))
     rates = bronze.groupBy("serial", "metric").applyInPandasWithState(
         _rate_state_fn,
         RATE_OUTPUT_SCHEMA,
@@ -452,21 +509,7 @@ def streaming_stateful_latest(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if max_files_per_trigger:
-        # multi-batch mode: the caller staged work_dir/landing with
-        # several feed files; the bounded trigger forces one
-        # micro-batch per file so state must carry across batches
-        path = os.path.join(work_dir, "landing")
-        schema = spark.read.parquet(path).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
-        )
-    else:
-        raw = _events_glob(spark, sf_dir, work_dir)
-    raw = normalize_nano_ts(raw, "ts")
-    bronze = parse_bronze(raw)
+    bronze = parse_bronze(events_stream(spark, sf_dir, work_dir, max_files_per_trigger))
     updated = bronze.groupBy("serial", "metric").applyInPandasWithState(
         _latest_state_fn,
         STATEFUL_OUTPUT_SCHEMA,
@@ -534,7 +577,7 @@ def streaming_bronze_feed_b(spark: SparkSession, sf_dir: str, work_dir: str) -> 
     pack_feed_b(load_table(spark, sf_dir, "events")).coalesce(1).write.mode(
         "overwrite"
     ).text(landing)
-    raw = spark.readStream.text(landing).withColumnRenamed("value", "raw")
+    raw = landing_stream(spark, landing, fmt="text").withColumnRenamed("value", "raw")
     bronze_b = parse_bronze_feed_b(raw)
     out = os.path.join(work_dir, "feedb_out")
     ckpt = os.path.join(work_dir, "feedb_ckpt")
@@ -566,7 +609,7 @@ def streaming_bronze_feed_c(spark: SparkSession, sf_dir: str, work_dir: str) -> 
     pack_feed_c(load_table(spark, sf_dir, "events")).coalesce(1).write.mode(
         "overwrite"
     ).text(landing)
-    raw = spark.readStream.text(landing).withColumnRenamed("value", "raw")
+    raw = landing_stream(spark, landing, fmt="text").withColumnRenamed("value", "raw")
     bronze_c = parse_bronze_feed_c(raw)
     out = os.path.join(work_dir, "feedc_out")
     ckpt = os.path.join(work_dir, "feedc_ckpt")
@@ -591,9 +634,7 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str, work_dir: str) -> Dat
     (``tests/test_streaming.py``)."""
     from telemetry_streaming_datalake_spark.operators.sessions import sessionize
 
-    raw = _events_glob(spark, sf_dir, work_dir)
-    raw = normalize_nano_ts(raw, "ts")
-    sess = sessionize(raw)
+    sess = sessionize(events_stream(spark, sf_dir, work_dir))
     out = os.path.join(work_dir, "sessions_out")
     ckpt = os.path.join(work_dir, "sessions_ckpt")
     drain(
@@ -601,6 +642,29 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str, work_dir: str) -> Dat
         foreach_batch=lambda batch, _id: batch.write.mode("overwrite").parquet(out),
     )
     return spark.read.parquet(out)
+
+
+def _silver_hops(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
+    """Hops 1+2 of the lake topology, drained: the feed lands in the
+    date-partitioned ``bronze_lake``, which streams through ``to_silver``
+    into the date-partitioned ``silver_lake``.  Each lake streams with
+    its upstream frame's schema (the always-on runner's hop builders,
+    pinned plan-equal in ``tests/test_plans.py``), so ``datestamp``
+    reads back as the engine's string.  Returns the silver frame."""
+    from telemetry_streaming_datalake_spark.datamodel import metric_mapping
+
+    bronze = streaming_bronze(spark, sf_dir, work_dir)
+    bronze_dir = os.path.join(work_dir, "bronze_lake")
+    drain(
+        bronze, os.path.join(work_dir, "bronze_ckpt"), path=bronze_dir,
+        partition_by="datestamp", state_src=(os.path.join(sf_dir, "events.parquet"),),
+    )
+    silver = to_silver(landing_stream(spark, bronze_dir, bronze.schema), metric_mapping(spark))
+    drain(
+        silver, os.path.join(work_dir, "silver_ckpt"),
+        path=os.path.join(work_dir, "silver_lake"), partition_by="datestamp",
+    )
+    return silver
 
 
 def streaming_silver_two_hop(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
@@ -618,35 +682,9 @@ def streaming_silver_two_hop(spark: SparkSession, sf_dir: str, work_dir: str) ->
     Both hops checkpoint independently — the recovery unit is the hop,
     as in the reference topology.
     """
-    from telemetry_streaming_datalake_spark.datamodel import metric_mapping
-
-    bronze_dir = os.path.join(work_dir, "bronze_lake")
-    drain(
-        streaming_bronze(spark, sf_dir, work_dir),
-        os.path.join(work_dir, "bronze_ckpt"),
-        path=bronze_dir,
-        partition_by="datestamp",
-        state_src=(os.path.join(sf_dir, "events.parquet"),),
-    )
-    bronze_schema = spark.read.parquet(bronze_dir).schema
-    bronze_stream = (
-        spark.readStream.schema(bronze_schema)
-        .option("basePath", bronze_dir)
-        .parquet(os.path.join(bronze_dir, "*"))
-    )
-    # partition-column datestamp comes back as DATE; restore the
-    # engine's string form before the shared transform
-    bronze_stream = bronze_stream.withColumn(
-        "datestamp", F.col("datestamp").cast("string")
-    )
-    silver_stream = to_silver(bronze_stream, metric_mapping(spark))
-    silver_dir = os.path.join(work_dir, "silver_lake")
-    drain(
-        silver_stream, os.path.join(work_dir, "silver_ckpt"),
-        path=silver_dir, partition_by="datestamp",
-    )
+    _silver_hops(spark, sf_dir, work_dir)
     return (
-        spark.read.parquet(silver_dir)
+        spark.read.parquet(os.path.join(work_dir, "silver_lake"))
         .withColumn("datestamp", F.col("datestamp").cast("string"))
         .select(
             "event_id", "serial", "metric", "value", "payload_k", "unix_ts",
@@ -670,20 +708,14 @@ def streaming_gold_three_hop(spark: SparkSession, sf_dir: str, work_dir: str) ->
     from telemetry_streaming_datalake_spark.datamodel import remote_history
     from telemetry_streaming_datalake_spark.operators.temporal import enrich_gold
 
-    silver_dir = os.path.join(work_dir, "silver_lake")
-    streaming_silver_two_hop(spark, sf_dir, work_dir)  # hops 1+2
-    silver_schema = spark.read.parquet(silver_dir).schema
-    silver_stream = (
-        spark.readStream.schema(silver_schema)
-        .option("basePath", silver_dir)
-        .parquet(os.path.join(silver_dir, "*"))
-        .withColumn("datestamp", F.col("datestamp").cast("string"))
-    )
+    silver = _silver_hops(spark, sf_dir, work_dir)
     history = remote_history(spark, load_table(spark, sf_dir, "customer"))
-    gold_stream = enrich_gold(silver_stream, history)
+    gold = enrich_gold(
+        landing_stream(spark, os.path.join(work_dir, "silver_lake"), silver.schema), history
+    )
     gold_dir = os.path.join(work_dir, "gold_lake")
     drain(
-        gold_stream, os.path.join(work_dir, "gold_ckpt"),
+        gold, os.path.join(work_dir, "gold_ckpt"),
         path=gold_dir, partition_by="datestamp",
     )
     return (
@@ -723,9 +755,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str, work_dir: str) ->
     (each event contributes to the windows starting at ``h`` and
     ``h-1`` hours).
     """
-    raw = _events_glob(spark, sf_dir, work_dir)
-    raw = normalize_nano_ts(raw, "ts")
-    bronze = parse_bronze(raw)
+    bronze = parse_bronze(events_stream(spark, sf_dir, work_dir))
     windowed = (
         bronze.withColumn("event_time", F.timestamp_seconds(F.col("unix_ts")))
         .withWatermark("event_time", SLIDE_WATERMARK)
@@ -791,18 +821,12 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str, work_dir: str) -> 
     readStreams.  Drained with availableNow, the pairs equal the batch
     inner interval join — the SQL oracle.
     """
-    import shutil
-
     land = os.path.join(work_dir, "ssj_landing")
     os.makedirs(land, exist_ok=True)
     _stage_parquet(os.path.join(sf_dir, "events.parquet"), land, "events.parquet")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-
-    def feed() -> DataFrame:
-        return normalize_nano_ts(spark.readStream.schema(schema).parquet(land), "ts")
-
+    schema = load_table(spark, sf_dir, "events").schema
     clicks = (
-        feed()
+        landing_stream(spark, land, schema)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_event_id"),
@@ -812,7 +836,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str, work_dir: str) -> 
         .withWatermark("click_time", "48 hours")
     )
     errors = (
-        feed()
+        landing_stream(spark, land, schema)
         .filter(F.col("event_type") == "error")
         .select(
             F.col("user_id").alias("e_user_id"),
@@ -943,7 +967,7 @@ def streaming_quarantine_split(spark: SparkSession, sf_dir: str, work_dir: str) 
     os.makedirs(ok_dir, exist_ok=True)
     os.makedirs(dlq_dir, exist_ok=True)
     mapping = dm.metric_mapping(spark)
-    raw = normalize_nano_ts(_events_glob(spark, sf_dir, work_dir), "ts")
+    raw = events_stream(spark, sf_dir, work_dir)
 
     def split_batch(batch_df: DataFrame, batch_id: int) -> None:
         sub = f"batch-{batch_id:08d}"
@@ -966,25 +990,11 @@ def streaming_quarantine_split(spark: SparkSession, sf_dir: str, work_dir: str) 
 
     drain(raw, ckpt, foreach_batch=split_batch)
     cols = ["event_id", "serial", "metric", "value", "unix_ts", "datestamp", "reason", "route"]
-    # explicit-schema recursive reads: an all-ok (or all-quarantine)
-    # drain leaves the other lake with no parquet footers to infer from
-    static0 = normalize_nano_ts(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet")).limit(0), "ts"
+    # an all-ok (or all-quarantine) drain leaves the other lake empty
+    q_schema = bronze_quarantine(raw, mapping).schema
+    return read_batch_lake(spark, ok_dir, q_schema).select(*cols).unionByName(
+        read_batch_lake(spark, dlq_dir, q_schema).select(*cols)
     )
-    q_schema = bronze_quarantine(static0, mapping).schema
-    ok = (
-        spark.read.schema(q_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(ok_dir)
-        .select(*cols)
-    )
-    dlq = (
-        spark.read.schema(q_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(dlq_dir)
-        .select(*cols)
-    )
-    return ok.unionByName(dlq)
 
 
 # --------------------------------------------------------------------------
@@ -1037,19 +1047,7 @@ def streaming_grouping_sets(
     from telemetry_streaming_datalake_spark.ingest.bronze import dedup_exact
     from telemetry_streaming_datalake_spark.operators.temporal import enrich_gold
 
-    if max_files_per_trigger:
-        # pre-staged landing dir (tests split the feed for multi-batch
-        # merge coverage — same contract as streaming_counter_rate)
-        path = os.path.join(work_dir, "landing")
-        schema = spark.read.parquet(path).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
-        )
-    else:
-        raw = _events_glob(spark, sf_dir, work_dir)
-    raw = normalize_nano_ts(raw, "ts")
+    raw = events_stream(spark, sf_dir, work_dir, max_files_per_trigger)
     mapping = metric_mapping(spark)
     history = remote_history(spark, load_table(spark, sf_dir, "customer"))
     store_path = os.path.join(work_dir, "gs_store")
@@ -1192,15 +1190,13 @@ def streaming_corpus_gate(spark: SparkSession, sf_dir: str, work_dir: str) -> Da
     contract :class:`..streaming.sinks.InMemoryKVServingStore` keeps
     via applied-batch tracking.
     """
-    import shutil
-    import tempfile
+    from telemetry_streaming_datalake_spark.operators.text import gopher_filter
 
     src = os.path.join(sf_dir, "documents.parquet")
     landing = os.path.join(work_dir, "docs_landing")
     os.makedirs(landing, exist_ok=True)
     _stage_parquet(src, landing, "documents.parquet")
-    schema = spark.read.parquet(src).schema
-    raw = spark.readStream.schema(schema).parquet(landing)
+    raw = landing_stream(spark, landing, spark.read.parquet(src).schema)
 
     keep_dir = os.path.join(work_dir, "corpus_keep")
     rej_dir = os.path.join(work_dir, "corpus_reject")
@@ -1220,24 +1216,11 @@ def streaming_corpus_gate(spark: SparkSession, sf_dir: str, work_dir: str) -> Da
         "pass_stopwords", "keep",
     ]
     # either lake may be empty (all-keep or all-reject corpora write no
-    # parquet footers to the other side) — explicit-schema reads keep
-    # both frames typed and the union total without schema inference
-    from telemetry_streaming_datalake_spark.operators.text import gopher_filter
-
-    gate_schema = gopher_filter(spark.read.schema(schema).parquet(landing).limit(0)).schema
-    keep = (
-        spark.read.schema(gate_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(keep_dir)
-        .select(*cols)
+    # parquet footers to the other side)
+    gate_schema = gopher_filter(raw).schema
+    return read_batch_lake(spark, keep_dir, gate_schema).select(*cols).unionByName(
+        read_batch_lake(spark, rej_dir, gate_schema).select(*cols)
     )
-    rej = (
-        spark.read.schema(gate_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(rej_dir)
-        .select(*cols)
-    )
-    return keep.unionByName(rej)
 
 
 # --------------------------------------------------------------------------
@@ -1333,18 +1316,7 @@ def streaming_ewma(
     cross-batch tail carry (``tests/test_streaming.py``)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if max_files_per_trigger:
-        path = os.path.join(work_dir, "landing")
-        schema = spark.read.parquet(path).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
-        )
-    else:
-        raw = _events_glob(spark, sf_dir, work_dir)
-    raw = normalize_nano_ts(raw, "ts")
-    bronze = parse_bronze(raw)
+    bronze = parse_bronze(events_stream(spark, sf_dir, work_dir, max_files_per_trigger))
     smoothed = bronze.groupBy("serial", "metric").applyInPandasWithState(
         _ewma_state_fn,
         EWMA_OUTPUT_SCHEMA,
@@ -1387,32 +1359,9 @@ def streaming_ohlc(
     operator, and the intermediate table is the silver layer a serving
     pipeline would persist anyway.
     """
-    if max_files_per_trigger:
-        path = os.path.join(work_dir, "landing")
-        schema = spark.read.parquet(path).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
-        )
-    else:
-        raw = _events_glob(spark, sf_dir, work_dir)
-    raw = normalize_nano_ts(raw, "ts")
-    bronze = parse_bronze(raw)
-    deduped = (
-        bronze.withColumn("event_time", F.timestamp_seconds(F.col("unix_ts")))
-        .withWatermark("event_time", DEDUP_WATERMARK)
-        .dropDuplicatesWithinWatermark(["unique_hash_key"])
-        .drop("event_time")
+    silver, silver_dir = deduped_lake_stream(
+        spark, sf_dir, work_dir, "ohlc", max_files_per_trigger
     )
-    silver_dir = os.path.join(work_dir, "ohlc_silver")
-    drain(
-        deduped, os.path.join(work_dir, "ohlc_silver_ckpt"), path=silver_dir,
-        state_src=(os.path.join(sf_dir, "events.parquet"),),
-    )
-    silver = spark.readStream.schema(
-        spark.read.parquet(silver_dir).schema
-    ).parquet(silver_dir)
     windowed = (
         silver.withColumn("event_time", F.timestamp_seconds(F.col("unix_ts")))
         .withWatermark("event_time", DEDUP_WATERMARK)
@@ -1514,18 +1463,7 @@ def streaming_approx_distinct(
     contract — estimates themselves are engine-specific and stay out
     of the hash-compared relation.
     """
-    if max_files_per_trigger:
-        path = os.path.join(work_dir, "landing")
-        schema = spark.read.parquet(path).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
-        )
-    else:
-        raw = _events_glob(spark, sf_dir, work_dir)
-    raw = normalize_nano_ts(raw, "ts")
-    bronze = parse_bronze(raw)
+    bronze = parse_bronze(events_stream(spark, sf_dir, work_dir, max_files_per_trigger))
     store = os.path.join(work_dir, "hll_store")
     ckpt = os.path.join(work_dir, "hll_ckpt")
 
@@ -1735,18 +1673,12 @@ def streaming_cusum(
 
     from telemetry_streaming_datalake_spark.operators.derived import floor_round
 
-    if max_files_per_trigger:
-        path = os.path.join(work_dir, "landing")
-        schema = spark.read.parquet(path).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
-        )
-        base = spark.read.parquet(path)
-    else:
-        raw = _events_glob(spark, sf_dir, work_dir)
-        base = load_table(spark, sf_dir, "events")
+    raw = events_stream(spark, sf_dir, work_dir, max_files_per_trigger)
+    base = (
+        spark.read.parquet(os.path.join(work_dir, "landing"))
+        if max_files_per_trigger
+        else load_table(spark, sf_dir, "events")
+    )
     # moments over DEDUPED bronze — the batch twin freezes its control
     # limits on dedup_exact input, and a duplicated reading here would
     # shift mean/std away from the oracle's
@@ -1760,9 +1692,7 @@ def streaming_cusum(
         )
         .collect()
     }
-    raw = normalize_nano_ts(raw, "ts")
-    bronze = parse_bronze(raw)
-    flagged = bronze.groupBy("serial", "metric").applyInPandasWithState(
+    flagged = parse_bronze(raw).groupBy("serial", "metric").applyInPandasWithState(
         _cusum_state_fn_factory(moments),
         CUSUM_OUTPUT_SCHEMA,
         _CUSUM_STATE_SCHEMA,
@@ -1805,22 +1735,7 @@ def streaming_slo_burn(
     """
     from telemetry_streaming_datalake_spark.operators.detect import slo_rolling
 
-    raw = normalize_nano_ts(_events_glob(spark, sf_dir, work_dir), "ts")
-    bronze = parse_bronze(raw)
-    deduped = (
-        bronze.withColumn("event_time", F.timestamp_seconds(F.col("unix_ts")))
-        .withWatermark("event_time", DEDUP_WATERMARK)
-        .dropDuplicatesWithinWatermark(["unique_hash_key"])
-        .drop("event_time")
-    )
-    silver_dir = os.path.join(work_dir, "slo_silver")
-    drain(
-        deduped, os.path.join(work_dir, "slo_silver_ckpt"), path=silver_dir,
-        state_src=(os.path.join(sf_dir, "events.parquet"),),
-    )
-    silver = spark.readStream.schema(
-        spark.read.parquet(silver_dir).schema
-    ).parquet(silver_dir)
+    silver, silver_dir = deduped_lake_stream(spark, sf_dir, work_dir, "slo")
     windowed = (
         silver.withColumn("event_time", F.timestamp_seconds(F.col("unix_ts")))
         .withWatermark("event_time", DEDUP_WATERMARK)
@@ -1876,22 +1791,7 @@ def streaming_cdc_apply(
         cdc_project,
     )
 
-    raw = normalize_nano_ts(_events_glob(spark, sf_dir, work_dir), "ts")
-    bronze = parse_bronze(raw)
-    deduped = (
-        bronze.withColumn("event_time", F.timestamp_seconds(F.col("unix_ts")))
-        .withWatermark("event_time", DEDUP_WATERMARK)
-        .dropDuplicatesWithinWatermark(["unique_hash_key"])
-        .drop("event_time")
-    )
-    silver_dir = os.path.join(work_dir, "cdc_silver")
-    drain(
-        deduped, os.path.join(work_dir, "cdc_silver_ckpt"), path=silver_dir,
-        state_src=(os.path.join(sf_dir, "events.parquet"),),
-    )
-    silver = spark.readStream.schema(
-        spark.read.parquet(silver_dir).schema
-    ).parquet(silver_dir)
+    silver, silver_dir = deduped_lake_stream(spark, sf_dir, work_dir, "cdc")
     folded = cdc_ops(silver).groupBy("serial", "metric").agg(*cdc_agg_cols())
     out = os.path.join(work_dir, "cdc_state_out")
     ckpt = os.path.join(work_dir, "cdc_ckpt")
@@ -1986,35 +1886,23 @@ def streaming_freq_sketch(
         freq_sketch_audit,
     )
 
-    if max_files_per_trigger:
-        path = os.path.join(work_dir, "landing")
-        schema = spark.read.parquet(path).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(path)
-        )
-    else:
-        raw = _events_glob(spark, sf_dir, work_dir)
-    raw = normalize_nano_ts(raw, "ts")
-    bronze = (
-        parse_bronze(raw)
-        .withColumn("event_time", F.timestamp_seconds(F.col("unix_ts")))
-        .withWatermark("event_time", DEDUP_WATERMARK)
-        .dropDuplicatesWithinWatermark(["unique_hash_key"])
-        .drop("event_time")
-    )
     store = os.path.join(work_dir, "cms_store")
     ckpt = os.path.join(work_dir, "cms_ckpt")
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        # the store merge runs in the micro-batch's own session, i.e. at
-        # the query's state-partition count (the watermark's no-data
-        # batch re-merges the store here)
-        _merge_cms_store(batch_df.sparkSession, store, cms_sketch(batch_df), batch_id)
+        # pinned sketch-sized cells: the emptiness check and the merge
+        # share ONE run of the batch's stateful dedup, and the
+        # watermark's no-data batch (no cells) leaves the store as it
+        # is instead of re-reading it into a new version.  The merge
+        # runs in the micro-batch's own session, i.e. at the query's
+        # state-partition count
+        cells = cms_sketch(batch_df).localCheckpoint(eager=True)
+        if not cells.isEmpty():
+            _merge_cms_store(batch_df.sparkSession, store, cells, batch_id)
 
     drain(
-        bronze, ckpt, foreach_batch=merge,
+        streaming_bronze(spark, sf_dir, work_dir, max_files_per_trigger), ckpt,
+        foreach_batch=merge,
         state_src=(os.path.join(sf_dir, "events.parquet"),),
     )
     ground = dedup_exact(parse_bronze(load_table(spark, sf_dir, "events")))
@@ -2305,12 +2193,7 @@ def streaming_url_frontier(
     from telemetry_streaming_datalake_spark.operators import web as WB
 
     landing = _stage_frontier_landing(spark, sf_dir, work_dir, n_files)
-    schema = spark.read.parquet(landing).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    raw = landing_stream(spark, landing, spark.read.parquet(landing).schema, max_files=1)
     seen_dir = os.path.join(work_dir, "frontier_seen")
     admit_dir = os.path.join(work_dir, "frontier_admit")
     os.makedirs(seen_dir, exist_ok=True)
@@ -2353,15 +2236,9 @@ def streaming_url_frontier(
         )
 
     drain(raw, ckpt, foreach_batch=_admit)
-    out_schema = "doc_id long, source string, url string, canonical_url string"
-    subdirs = [
-        os.path.join(admit_dir, d)
-        for d in os.listdir(admit_dir)
-        if d.startswith("batch=")
-    ]
-    if not subdirs:  # empty landing drains zero batches — empty, not an error
-        return spark.createDataFrame([], out_schema)
-    return spark.read.schema(out_schema).parquet(*subdirs)
+    return read_batch_lake(
+        spark, admit_dir, "doc_id long, source string, url string, canonical_url string"
+    )
 
 
 def streaming_web_ingest(
@@ -2399,12 +2276,7 @@ def streaming_web_ingest(
     from telemetry_streaming_datalake_spark.operators.text import gopher_filter
 
     landing = _stage_frontier_landing(spark, sf_dir, work_dir, n_files)
-    schema = spark.read.parquet(landing).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    raw = landing_stream(spark, landing, spark.read.parquet(landing).schema, max_files=1)
     seen_dir = os.path.join(work_dir, "ingest_seen")
     lake_dir = os.path.join(work_dir, "ingest_lake")
     os.makedirs(seen_dir, exist_ok=True)
@@ -2509,18 +2381,11 @@ def streaming_web_ingest(
         )
 
     drain(raw, ckpt, foreach_batch=_ingest)
-    out_schema = (
+    return read_batch_lake(
+        spark, lake_dir,
         "doc_id long, source string, canonical_url string, "
-        "html_md5 string, extracted_text string, n_blocks int"
+        "html_md5 string, extracted_text string, n_blocks int",
     )
-    subdirs = [
-        os.path.join(lake_dir, d)
-        for d in os.listdir(lake_dir)
-        if d.startswith("batch=")
-    ]
-    if not subdirs:  # empty landing drains zero batches — empty, not an error
-        return spark.createDataFrame([], out_schema)
-    return spark.read.schema(out_schema).parquet(*subdirs)
 
 
 def streaming_web_ingest_oracle(src: str = "documents") -> str:
@@ -2573,12 +2438,7 @@ def streaming_paragraph_dedup(
     from telemetry_streaming_datalake_spark.operators import dedup as DD
 
     landing = _stage_frontier_landing(spark, sf_dir, work_dir, n_files)
-    schema = spark.read.parquet(landing).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
+    raw = landing_stream(spark, landing, spark.read.parquet(landing).schema, max_files=1)
     seen_dir = os.path.join(work_dir, "para_seen")
     out_dir = os.path.join(work_dir, "para_clean")
     os.makedirs(seen_dir, exist_ok=True)
@@ -2657,17 +2517,9 @@ def streaming_paragraph_dedup(
         )
 
     drain(raw, ckpt, foreach_batch=_clean)
-    out_schema = (
-        "doc_id long, clean_text string, n_chunks int, n_dropped int"
+    return read_batch_lake(
+        spark, out_dir, "doc_id long, clean_text string, n_chunks int, n_dropped int"
     )
-    subdirs = [
-        os.path.join(out_dir, d)
-        for d in os.listdir(out_dir)
-        if d.startswith("batch=")
-    ]
-    if not subdirs:
-        return spark.createDataFrame([], out_schema)
-    return spark.read.schema(out_schema).parquet(*subdirs)
 
 
 def streaming_change_feed(
@@ -2723,7 +2575,6 @@ def streaming_change_feed(
         store.read_changes(high_water).drop("_commit_version").write.mode(
             "overwrite"
         ).parquet(feed_dir)
-    feed_schema = spark.read.parquet(feed_dir).schema
 
     lake_dir = os.path.join(work_dir, "silver_lake")
     os.makedirs(lake_dir, exist_ok=True)
@@ -2739,19 +2590,11 @@ def streaming_change_feed(
             os.path.join(lake_dir, f"batch={batch_id}")
         )
 
-    drain(spark.readStream.schema(feed_schema).parquet(feed_dir), ckpt, foreach_batch=_hop)
-    subdirs = [
-        os.path.join(lake_dir, d)
-        for d in os.listdir(lake_dir)
-        if d.startswith("batch=")
-    ]
-    if not subdirs:
-        # an EMPTY delta (no commits past the high-water mark) drains
-        # zero batches — the hop's empty relation, not a read error
-        return to_silver(
-            spark.createDataFrame([], feed_schema), mapping
-        ).limit(0)
-    return spark.read.parquet(*subdirs)
+    feed = landing_stream(spark, feed_dir, spark.read.parquet(feed_dir).schema)
+    drain(feed, ckpt, foreach_batch=_hop)
+    # an EMPTY delta (no commits past the high-water mark) drains zero
+    # batches — the hop's empty relation, not a read error
+    return read_batch_lake(spark, lake_dir, to_silver(feed, mapping).schema)
 
 
 def streaming_change_feed_oracle(bronze_sql: str, cutoff: int = 1705276800) -> str:

@@ -17,7 +17,10 @@ reason the reference splits pools per feed), exposes
 ``StreamingQueryManager`` status, and stops cleanly.  The availableNow variants in
 ``pipeline.py`` remain the deterministic-drain twins the correctness
 gate checks; the runner is the long-running deployment of the SAME
-hop transforms (one logical plan, two trigger policies).
+hop builders (``landing_stream``, ``bronze_dedup``, ``to_silver``,
+``enrich_gold``) — one logical plan, two trigger policies, pinned by
+``tests/test_plans.py::test_runner_hops_share_the_drain_plans``
+(each hop's optimized plan equals its drain twin's, source path aside).
 
 Scale notes: each hop checkpoints independently (the recovery unit is
 the hop); pools map to the reference's per-feed isolation; trigger
@@ -47,10 +50,11 @@ from telemetry_streaming_datalake_spark.datamodel import metric_mapping, remote_
 from telemetry_streaming_datalake_spark.ingest.bronze import dedup_exact, parse_bronze
 from telemetry_streaming_datalake_spark.ingest.silver import to_silver
 from telemetry_streaming_datalake_spark.operators.temporal import enrich_gold
-from telemetry_streaming_datalake_spark.session import load_table, normalize_nano_ts
+from telemetry_streaming_datalake_spark.session import load_table
 from telemetry_streaming_datalake_spark.streaming.pipeline import (
-    DEDUP_WATERMARK,
     _stage_parquet,
+    bronze_dedup,
+    landing_stream,
     start_stream,
 )
 
@@ -89,22 +93,6 @@ class AlwaysOnRunner:
         self.queries: dict[str, StreamingQuery] = {}
 
     # ---------------------------------------------------------- hops
-
-    def _bronze_stream(self) -> DataFrame:
-        feed_schema = load_table(self.spark, self.sf_dir, "events").schema
-        raw = self.spark.readStream.schema(feed_schema).parquet(self.landing_dir)
-        bronze = parse_bronze(normalize_nano_ts(raw, "ts"))
-        return (
-            bronze.withColumn("event_time", F.timestamp_seconds(F.col("unix_ts")))
-            .withWatermark("event_time", DEDUP_WATERMARK)
-            .dropDuplicatesWithinWatermark(["unique_hash_key"])
-            .drop("event_time")
-        )
-
-    def _lake_stream(self, upstream: DataFrame, lake_dir: str) -> DataFrame:
-        """Stream an upstream hop's lake; the schema is the upstream
-        frame's, so no lake (empty or not) is ever footer-inferred."""
-        return self.spark.readStream.schema(upstream.schema).parquet(lake_dir)
 
     def _start_serving(self, gold: DataFrame) -> StreamingQuery:
         """Hop 4 — the reference's serving edge (`Metric Stream to
@@ -150,30 +138,30 @@ class AlwaysOnRunner:
         return q
 
     def start(self) -> dict[str, StreamingQuery]:
-        """Start all four hops, each frame built once and its schema
-        handed to the next hop's reader.  The downstream lakes must
-        exist before their consumers start (empty dirs are fine —
-        schemas are explicit), mirroring table-creation-before-stream
-        in the reference.  Only the bronze dedup is stateful, so only
+        """Start all four hops from the pipeline's hop builders, each
+        frame built once and its schema handed to the next hop's
+        reader.  The downstream lakes must exist before their consumers
+        start (empty dirs are fine — schemas are explicit), mirroring
+        table-creation-before-stream in the reference.  Only the bronze dedup is stateful, so only
         its start passes ``state_src``: the input-sized state partition
         count holds for that ``start()`` call alone."""
         for d in (self.landing_dir, self.bronze_dir, self.silver_dir, self.gold_dir):
             os.makedirs(d, exist_ok=True)
-        bronze = self._bronze_stream()
+        spark = self.spark
+        feed_schema = load_table(spark, self.sf_dir, "events").schema
+        bronze = bronze_dedup(parse_bronze(landing_stream(spark, self.landing_dir, feed_schema)))
         self._start(
             BRONZE_QUERY, "BronzePool", bronze,
             path=self.bronze_dir, state_src=(self.landing_dir,),
         )
         silver = to_silver(
-            self._lake_stream(bronze, self.bronze_dir), metric_mapping(self.spark)
+            landing_stream(spark, self.bronze_dir, bronze.schema), metric_mapping(spark)
         )
         self._start(SILVER_QUERY, "SilverPool", silver, path=self.silver_dir)
-        history = remote_history(
-            self.spark, load_table(self.spark, self.sf_dir, "customer")
-        )
-        gold = enrich_gold(self._lake_stream(silver, self.silver_dir), history)
+        history = remote_history(spark, load_table(spark, self.sf_dir, "customer"))
+        gold = enrich_gold(landing_stream(spark, self.silver_dir, silver.schema), history)
         self._start(GOLD_QUERY, "GoldPool", gold, path=self.gold_dir)
-        self._start_serving(self._lake_stream(gold, self.gold_dir))
+        self._start_serving(landing_stream(spark, self.gold_dir, gold.schema))
         return dict(self.queries)
 
     def feed(self, src_parquet: str, name: str = "drop.parquet") -> None:

@@ -1088,3 +1088,51 @@ def test_constant_dims_are_local_relations_equal_to_their_ctes(spark, name, cte,
         f"WITH {getattr(dm, cte).strip()} SELECT * FROM {name}"
     ).fetchall()
     assert sorted(tuple(r) for r in df.collect()) == sorted(oracle)
+
+
+def test_runner_hops_share_the_drain_plans(spark, tmp_path, monkeypatch):
+    """One logical plan, two trigger policies: the always-on runner's
+    bronze, silver and gold hops build the same optimized logical plan
+    as their availableNow twins (``streaming_bronze``, the two-hop
+    silver, the three-hop gold) — both come from the pipeline's hop
+    builders, so only the source path differs (the sink is not part of
+    the frame).  Nothing runs: the runner's ``start_stream`` and the
+    pipeline's ``drain`` are replaced by recorders, and the drain
+    recorder leaves an empty parquet file with the frame's schema where
+    its sink would land, so the next hop's reader and the final
+    read-back resolve."""
+    import re
+
+    from telemetry_streaming_datalake_spark.streaming import pipeline as SP
+    from telemetry_streaming_datalake_spark.streaming import runner as RN
+
+    started = {}
+    monkeypatch.setattr(
+        RN, "start_stream", lambda df, _ckpt, **kw: started.setdefault(kw["name"], df)
+    )
+    RN.AlwaysOnRunner(spark, SF, str(tmp_path / "run")).start()
+
+    drained = []
+
+    def record(df, _ckpt, **kw):
+        drained.append(df)
+        spark.createDataFrame([], df.schema).write.parquet(kw["path"])
+
+    monkeypatch.setattr(SP, "drain", record)
+    SP.streaming_gold_three_hop(spark, SF, str(tmp_path / "drain"))
+
+    def plan(df, root: str) -> str:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain(True)  # a streaming frame's plans come from explain
+        text = buf.getvalue().split("== Optimized Logical Plan ==")[1]
+        text = text.split("== Physical Plan ==")[0].replace(str(tmp_path / root), "<work>")
+        text = re.sub(r"#\d+L?", "#", text)  # expression ids
+        # the watermark node's per-build id
+        return re.sub(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<id>", text)
+
+    hops = (RN.BRONZE_QUERY, RN.SILVER_QUERY, RN.GOLD_QUERY)
+    assert len(drained) == len(hops)
+    for hop, twin in zip(hops, drained):
+        assert "StreamingRelation" in plan(twin, "drain")
+        assert plan(started[hop], "run") == plan(twin, "drain"), hop

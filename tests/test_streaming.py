@@ -1488,6 +1488,24 @@ def test_streaming_cms_cells_equal_batch_sketch_across_batches(spark, tmp_path):
     assert merged == direct
 
 
+def test_streaming_cms_skips_the_no_data_batch(spark, tmp_path, monkeypatch):
+    """A single-file drain runs the data batch and then the watermark's
+    no-data batch; the empty one has no cells, so the store publishes
+    exactly one version (no re-read of the store into a copy)."""
+    published = []
+    real = SP.publish_version
+
+    def spy(store, populate):
+        published.append(store)
+        return real(store, populate)
+
+    monkeypatch.setattr(SP, "publish_version", spy)
+    out = SP.streaming_freq_sketch(spark, SF_DIR, str(tmp_path))
+    rows = out.collect()
+    assert rows and all(r.within_contract for r in rows)
+    assert len(published) == 1
+
+
 def test_cms_store_replay_is_skipped_by_ledger(spark, tmp_path):
     """Cell-wise addition is NOT idempotent (unlike HLL register
     union), so a checkpoint-replayed batch id must be skipped by the

@@ -1,11 +1,15 @@
-"""Structural guard: one stream-start primitive, one pointer commit.
+"""Structural guard: one stream-start primitive, one hop library, one
+pointer commit.
 
 Every library streaming query starts through
 ``streaming.pipeline.start_stream`` (``drain`` is its availableNow
 form), the only place the session's shuffle-partition count changes at
-runtime; every versioned store commits through
+runtime; every hop reads through ``streaming.pipeline.landing_stream``
+(the real broker reader aside) and dedups through ``bronze_dedup``;
+every versioned store commits through
 ``streaming.sinks.publish_version``.  This test fails when a second
-``writeStream`` chain, conf window or ``CURRENT`` writer appears.
+``writeStream`` chain, ``readStream``, watermarked dedup, conf window
+or ``CURRENT`` writer appears.
 """
 
 from __future__ import annotations
@@ -48,6 +52,16 @@ def test_one_stream_start_primitive():
     assert _owners(_attr("awaitTermination")) == {
         ("streaming/pipeline.py", "drain"),
         ("streaming/runner.py", "AlwaysOnRunner.stop"),
+    }
+
+
+def test_one_hop_library():
+    assert _owners(_attr("readStream")) == {
+        ("streaming/pipeline.py", "landing_stream"),
+        ("sources/kafka.py", "kafka_read_stream"),
+    }
+    assert _owners(_attr("dropDuplicatesWithinWatermark")) == {
+        ("streaming/pipeline.py", "bronze_dedup"),
     }
 
 
