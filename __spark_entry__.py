@@ -11,7 +11,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from telemetry_streaming_datalake_spark.session import load_table, load_tables
+from telemetry_streaming_datalake_spark.session import load_table, load_tables, scratch_dir
 from telemetry_streaming_datalake_spark import datamodel as dm
 from telemetry_streaming_datalake_spark.ingest import bronze as B
 from telemetry_streaming_datalake_spark.ingest import feeds as FB
@@ -296,182 +296,18 @@ def _stage_delay_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _streaming_silver_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_stream_")
-    return SP.streaming_silver_dedup(spark, sf_dir, work)
-
-
-def _streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_sess_")
-    return SP.streaming_sessionize(spark, sf_dir, work)
+def _in_scratch(run):
+    """Registry entry for ``run(spark, sf_dir, work_dir)``: each call
+    gets a fresh work dir, named after ``run``, under the process
+    scratch root, which is removed when the process exits."""
+    return lambda s, d: run(s, d, scratch_dir(f"{run.__name__}_"))
 
 
-def _streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_upsert_")
-    return SP.streaming_upsert_rollup(spark, sf_dir, work)
-
-
-def _streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_state_")
-    return SP.streaming_stateful_latest(spark, sf_dir, work)
-
-
-def _streaming_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_rate_")
-    return SP.streaming_counter_rate(spark, sf_dir, work)
-
-
-def _streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_slide_")
-    return SP.streaming_sliding_counts(spark, sf_dir, work)
-
-
-def _streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_ssj_")
-    return SP.streaming_interval_join(spark, sf_dir, work)
-
-
-def _streaming_url_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_frontier_")
-    return SP.streaming_url_frontier(spark, sf_dir, work)
-
-
-def _streaming_web_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_webingest_")
-    return SP.streaming_web_ingest(spark, sf_dir, work)
-
-
-def _streaming_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_para_")
-    return SP.streaming_paragraph_dedup(spark, sf_dir, work)
-
-
-def _streaming_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_changefeed_")
-    return SP.streaming_change_feed(spark, sf_dir, work)
-
-
-def _streaming_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_dlq_")
-    return SP.streaming_quarantine_split(spark, sf_dir, work)
-
-
-def _time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_tt_")
+def _time_travel(spark: SparkSession, sf_dir: str, work: str) -> DataFrame:
     return VS.time_travel_demo(
         spark, B.dedup_exact(_bronze(spark, sf_dir)), work,
         MERGE_CUTOFF_UNIX, PURGE_CUTOFF,
     )
-
-
-def _streaming_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_2hop_")
-    return SP.streaming_silver_two_hop(spark, sf_dir, work)
-
-
-def _streaming_three_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_3hop_")
-    return SP.streaming_gold_three_hop(spark, sf_dir, work)
-
-
-def _streaming_gs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_gs_")
-    return SP.streaming_grouping_sets(spark, sf_dir, work)
-
-
-def _streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_sewma_")
-    return SP.streaming_ewma(spark, sf_dir, work)
-
-
-def _streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_sohlc_")
-    return SP.streaming_ohlc(spark, sf_dir, work)
-
-
-def _streaming_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_shll_")
-    return SP.streaming_approx_distinct(spark, sf_dir, work)
-
-
-def _streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_scusum_")
-    return SP.streaming_cusum(spark, sf_dir, work)
-
-
-def _always_on_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_aot_")
-    return RN.always_on_topology(spark, sf_dir, work)
-
-
-def _streaming_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_cgate_")
-    return SP.streaming_corpus_gate(spark, sf_dir, work)
-
-
-def _streaming_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_sburn_")
-    return SP.streaming_slo_burn(spark, sf_dir, work)
-
-
-def _streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_scdc_")
-    return SP.streaming_cdc_apply(spark, sf_dir, work)
-
-
-def _streaming_freq_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="tsdl_scms_")
-    return SP.streaming_freq_sketch(spark, sf_dir, work)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -515,7 +351,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # batch `sessionize` key — the streaming drain runs the
         # IDENTICAL gaps-and-islands oracle (the slo_burn / cdc_apply /
         # cusum retirement precedent; batch operator + pytest remain)
-        "streaming_sessionize": _streaming_sessionize,
+        "streaming_sessionize": _in_scratch(SP.streaming_sessionize),
         # tokenizer round-trip auditor: decode(encode(x)) == x pinned
         # per language over the shipped fixed vocab, plus the OOV token
         # mass — pairs with lang_id_model's language axis (VERDICT r10
@@ -569,7 +405,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # retiring `paragraph_dedup` -> this key, IDENTICAL oracle,
         # the gopher_filter->streaming_corpus_gate batch->stream
         # precedent; batch operator + path-equality pytests remain)
-        "streaming_paragraph_dedup": _streaming_paragraph_dedup,
+        "streaming_paragraph_dedup": _in_scratch(SP.streaming_paragraph_dedup),
         # WARC/1.0 record walk with octet-verified Content-Length
         # (funded by retiring `bronze_kafka` -> `bronze_parse`, whose
         # oracle it shared verbatim — the bronze_orc/csv/jsonl
@@ -610,7 +446,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # dedup oracle it shared verbatim; the publish sink round-trip
         # is pinned at tests/test_streaming.py
         # `test_streaming_publish_jsonl_roundtrip_equals_batch_dedup`)
-        "streaming_url_frontier": _streaming_url_frontier,
+        "streaming_url_frontier": _in_scratch(SP.streaming_url_frontier),
         # the WHOLE web front door drained as a stream: frontier ->
         # robots -> WARC parse -> extraction over the PARSED body ->
         # quality gate (VERDICT r12 #3; funded by retiring
@@ -618,12 +454,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # composes latest_oracle verbatim under the serving id —
         # strictly stronger: the drained stop+restart topology; the
         # batch operator + pytests remain)
-        "streaming_web_ingest": _streaming_web_ingest,
+        "streaming_web_ingest": _in_scratch(SP.streaming_web_ingest),
         # silver hop driven FROM the versioned store's change feed —
         # the reference's startingVersion chaining run end-to-end
         # (VERDICT r12 #4; funded by retiring `html_extract` ->
         # `web_ingest_manifest` per the manifest note above)
-        "streaming_change_feed": _streaming_change_feed,
+        "streaming_change_feed": _in_scratch(SP.streaming_change_feed),
         # --- r14 registrations (VERDICT r13 #4): the two r13
         # pytest-only web extras get their standing driver rows.
         # Funded by retiring `pack_sequences` -> `packing_efficiency`
@@ -704,9 +540,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # twins (drained == batch parity is pinned in tests, so each
         # oracle is its batch twin's SQL verbatim) + the two new LLM
         # operators, displacement-funded per SURVEY §2b ---
-        "streaming_slo_burn": _streaming_slo_burn,
-        "streaming_cdc_apply": _streaming_cdc_apply,
-        "streaming_freq_sketch": _streaming_freq_sketch,
+        "streaming_slo_burn": _in_scratch(SP.streaming_slo_burn),
+        "streaming_cdc_apply": _in_scratch(SP.streaming_cdc_apply),
+        "streaming_freq_sketch": _in_scratch(SP.streaming_freq_sketch),
         # r9 third-continuation addition (funded by retiring
         # `bronze_jsonl`, whose oracle is BRONZE_PARSE_ORACLE verbatim
         # — the bronze_orc/bronze_csv connector-twin precedent; the
@@ -744,13 +580,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "centroid_confusion": lambda s, d: SIM.centroid_confusion(
             load_table(s, d, "embeddings")
         ),
-        "streaming_sliding_counts": _streaming_sliding,
-        "streaming_interval_join": _streaming_interval_join,
-        "streaming_counter_rate": _streaming_rate,
+        "streaming_sliding_counts": _in_scratch(SP.streaming_sliding_counts),
+        "streaming_interval_join": _in_scratch(SP.streaming_interval_join),
+        "streaming_counter_rate": _in_scratch(SP.streaming_counter_rate),
         # --- block B: r2-stale streaming trio ---
-        "streaming_silver_dedup": _streaming_silver_dedup,
-        "streaming_upsert": _streaming_upsert,
-        "streaming_stateful_latest": _streaming_stateful,
+        "streaming_silver_dedup": _in_scratch(SP.streaming_silver_dedup),
+        "streaming_upsert": _in_scratch(SP.streaming_upsert_rollup),
+        "streaming_stateful_latest": _in_scratch(SP.streaming_stateful_latest),
         # --- r8 continuation additions (now rotation-scheduled via
         # _R15_ORDER like every non-r11 key) ---
         "trend_report": lambda s, d: DV.trend_report(B.dedup_exact(_bronze(s, d))),
@@ -829,7 +665,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         "mixture_weights": lambda s, d: CP.mixture_weights(load_table(s, d, "documents")),
         "kmeans_refine": lambda s, d: SIM.kmeans_refine(load_table(s, d, "embeddings")),
-        "streaming_quarantine_split": _streaming_quarantine,
+        "streaming_quarantine_split": _in_scratch(SP.streaming_quarantine_split),
         "table_profile": lambda s, d: DT.table_profile(_bronze(s, d)),
         # --- block E: outside the round-5 window (driver row comes with
         # the round-6 rotation; locally crosscheck-green + pytest now) ---
@@ -857,7 +693,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             load_table(s, d, "documents")
         ),
         "incremental_dedup": lambda s, d: DD.incremental_dedup(s, d),
-        "streaming_corpus_gate": _streaming_corpus_gate,
+        "streaming_corpus_gate": _in_scratch(SP.streaming_corpus_gate),
         "ann_recall_report": lambda s, d: SIM.ann_recall_report(
             load_table(s, d, "embeddings"), ANN_QUERY_IDS
         ),
@@ -931,7 +767,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "approx_distinct_audit": lambda s, d: R.approx_distinct_audit(
             B.dedup_exact(_bronze(s, d))
         ),
-        "time_travel_read": _time_travel,
+        "time_travel_read": _in_scratch(_time_travel),
         "compaction_plan": lambda s, d: RT.compaction_plan(
             B.dedup_exact(_bronze(s, d))
         ),
@@ -947,7 +783,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "event_transitions": lambda s, d: CO.event_transitions(
             load_table(s, d, "events")
         ),
-        "streaming_grouping_sets": _streaming_gs,
+        "streaming_grouping_sets": _in_scratch(SP.streaming_grouping_sets),
         "bpe_merges": lambda s, d: TX.bpe_merges(load_table(s, d, "documents")),
         "metric_correlation": lambda s, d: DV.metric_correlation(
             B.dedup_exact(_bronze(s, d))
@@ -969,10 +805,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             load_table(s, d, "documents"),
             payloads=MM.media_payload_fixture(s, d, "png"),
         ),
-        "streaming_ewma": _streaming_ewma,
-        "streaming_ohlc": _streaming_ohlc,
-        "streaming_approx_distinct": _streaming_approx_distinct,
-        "streaming_cusum": _streaming_cusum,
+        "streaming_ewma": _in_scratch(SP.streaming_ewma),
+        "streaming_ohlc": _in_scratch(SP.streaming_ohlc),
+        "streaming_approx_distinct": _in_scratch(SP.streaming_approx_distinct),
+        "streaming_cusum": _in_scratch(SP.streaming_cusum),
         "approx_percentile_audit": lambda s, d: DV.approx_percentile_audit(
             B.dedup_exact(_bronze(s, d))
         ),
@@ -985,7 +821,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cumulative_metric": lambda s, d: DV.cumulative_metric(
             B.dedup_exact(_bronze(s, d))
         ),
-        "streaming_three_hop": _streaming_three_hop,
+        "streaming_three_hop": _in_scratch(SP.streaming_gold_three_hop),
         # --- block E: r4-green tail (rotates back into the window next round) ---
         # --- medallion pipeline (SURVEY §2 #2-4, 7-15, 17-21, 23-25) ---
         "bronze_parse": _bronze,
@@ -1002,7 +838,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "custom_metric_join": lambda s, d: CM.custom_metric_join(
             _gold(s, d), dm.custom_metric_mapping(s)
         ),
-        "always_on_topology": _always_on_topology,
+        "always_on_topology": _in_scratch(RN.always_on_topology),
         "gap_detect": lambda s, d: DT.gap_detect(_silver(s, d)),
         "serving_latest_monitor": lambda s, d: DT.serving_latest_monitor(
             L.latest_metric(_gold(s, d))

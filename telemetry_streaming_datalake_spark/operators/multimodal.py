@@ -930,6 +930,7 @@ def media_payload_fixture(spark, sf_dir: str, kind: str) -> DataFrame:
     scaffolding standing in for real crawled media.  Correctness is
     unchanged: payloads are deterministic in the text, so the parquet
     roundtrip is bit-exact (pytest-pinned)."""
+    import os
     import tempfile
 
     from telemetry_streaming_datalake_spark.operators.dedup import (
@@ -937,7 +938,9 @@ def media_payload_fixture(spark, sf_dir: str, kind: str) -> DataFrame:
     )
     from telemetry_streaming_datalake_spark.session import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
+    # the key read is plain parquet (documents has no nano-timestamp
+    # column): it writes none of the caller's confs
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     key = (*_corpus_cache_key(sf_dir, docs), kind)
     if key not in _MEDIA_FIXTURE_CACHE:
         attach = {"png": attach_png_payload, "avi": attach_avi_payload}[kind]
@@ -948,13 +951,12 @@ def media_payload_fixture(spark, sf_dir: str, kind: str) -> DataFrame:
         # (ERROR CodeGenerator in every log; VERDICT r14 #7).  Outside
         # WSCG each Project compiles per-expression with row-based
         # method splitting, which fits — so the one-time fixture build
-        # runs with WSCG off and actually-compiled code.
-        old = spark.conf.get("spark.sql.codegen.wholeStage")
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        try:
-            attach(docs).write.mode("overwrite").parquet(d)
-        finally:
-            spark.conf.set("spark.sql.codegen.wholeStage", old)
+        # runs with WSCG off and actually-compiled code, in its own
+        # session (same context, own SQL conf; load_table re-applies
+        # the required confs), so the caller's conf is never touched.
+        build = spark.newSession()
+        build.conf.set("spark.sql.codegen.wholeStage", "false")
+        attach(load_table(build, sf_dir, "documents")).write.mode("overwrite").parquet(d)
         _MEDIA_FIXTURE_CACHE[key] = d
     return spark.read.parquet(_MEDIA_FIXTURE_CACHE[key])
 

@@ -18,7 +18,10 @@ second/micro boundaries are never off by one).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +68,21 @@ def get_spark(app_name: str = "telemetry-streaming-datalake") -> SparkSession:
     spark = builder.getOrCreate()
     _ensure_confs(spark)
     return spark
+
+
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh work dir under this process's scratch root: one
+    ``tsdl_*`` dir in ``tempfile.gettempdir()`` (so ``TMPDIR`` is
+    honoured), made on first use and removed with everything under it
+    when the process exits."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix=f"tsdl_{os.getpid()}_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
 def _ensure_confs(spark: SparkSession) -> None:

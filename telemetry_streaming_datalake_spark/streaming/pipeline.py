@@ -56,6 +56,7 @@ from telemetry_streaming_datalake_spark.session import load_table, normalize_nan
 from telemetry_streaming_datalake_spark.streaming.sinks import (
     current_version_dir,
     publish_version,
+    version_batch_id,
 )
 
 #: watermark delay for dedup state (reference uses 48 h)
@@ -1029,17 +1030,13 @@ def streaming_grouping_sets(
     The store commits like the CMS sketch store (and for the same
     reason): sum/count partials are additive, NOT idempotent, so a
     checkpoint replay of an already-merged batch would double-count —
-    each committed version carries the last applied batch id
-    (``applied.json``) and replays of applied ids are skipped; the
-    version itself publishes via the atomic ``CURRENT`` pointer swap
-    (:func:`~.sinks.publish_version`), so a crash mid-rewrite leaves the
-    previous version intact for the replay to merge into.  The
-    partition-pruned variant is
+    :func:`_fold_store` publishes each version with its batch id
+    (:func:`~.sinks.publish_version`), which skips a replayed id, and a
+    crash mid-rewrite leaves the previous version intact for the
+    replay to merge into.  The partition-pruned variant is
     :class:`~.sinks.ParquetUpsertStore`, already proven by
     ``streaming_upsert``.
     """
-    import json
-
     from telemetry_streaming_datalake_spark.datamodel import (
         metric_mapping,
         remote_history,
@@ -1093,31 +1090,12 @@ def streaming_grouping_sets(
             "remote_id", "metric_id", "provider_id", "category_id",
             "p_sum", "p_min", "p_max", "p_n",
         )
-        spark_l = batch_df.sparkSession
-        cur_dir = current_version_dir(store_path)
-        if cur_dir is not None:
-            with open(os.path.join(cur_dir, "applied.json")) as f:
-                last_applied = json.load(f)["last_applied"]
-            if int(batch_id) <= last_applied:
-                return  # replay of an applied batch: adds are not idempotent
-            merged = spark_l.read.parquet(
-                os.path.join(cur_dir, "partials")
-            ).unionByName(delta)
-        else:
-            merged = delta
-        merged = merged.groupBy(*_GS_KEYS).agg(
+        _fold_store(store_path, "partials", delta, batch_id, _GS_KEYS, [
             F.sum("p_sum").alias("p_sum"),
             F.min("p_min").alias("p_min"),
             F.max("p_max").alias("p_max"),
             F.sum("p_n").alias("p_n"),
-        )
-
-        def populate(new_dir: str) -> None:
-            merged.write.mode("overwrite").parquet(os.path.join(new_dir, "partials"))
-            with open(os.path.join(new_dir, "applied.json"), "w") as f:
-                json.dump({"last_applied": int(batch_id)}, f)
-
-        publish_version(store_path, populate)
+        ])
 
     drain(raw, ckpt, foreach_batch=merge_batch)
     st = spark.read.parquet(os.path.join(current_version_dir(store_path), "partials"))
@@ -1136,6 +1114,25 @@ def streaming_grouping_sets(
             F.col("category_id").cast("string"),
         ).alias("id"),
     )
+
+
+def _fold_store(store: str, part: str, delta: DataFrame, batch_id: int, keys, aggs) -> None:
+    """Fold ``delta`` into an additive store's ``part`` relation (keyed
+    re-aggregate of stored ∪ delta) as a version committed with
+    ``batch_id``: a replayed id is skipped, so adds land exactly once."""
+
+    def populate(cur: str | None, new_dir: str) -> None:
+        merged = delta
+        if cur is not None:
+            merged = (
+                delta.sparkSession.read.parquet(os.path.join(cur, part))
+                .unionByName(delta)
+                .groupBy(*keys)
+                .agg(*aggs)
+            )
+        merged.write.mode("overwrite").parquet(os.path.join(new_dir, part))
+
+    publish_version(store, populate, batch_id=batch_id)
 
 
 # --------------------------------------------------------------------------
@@ -1412,31 +1409,27 @@ def _merge_hll_store(spark: SparkSession, store: str, agg: DataFrame) -> None:
     bookkeeping: HLL union is idempotent (A ∪ A = A — a sketch records
     register maxima), so a checkpoint restart that re-delivers a
     micro-batch merges the same sketch again with zero effect — the
-    one foreachBatch sink here that needs no applied-batch tracking
+    one foreachBatch sink here that publishes without a batch id
     (pinned in ``tests/test_streaming.py``).
 
-    Durability: each merge writes a NEW ``v{n}`` directory and then
-    atomically swaps a ``CURRENT`` pointer file (tmp + ``os.replace``)
-    — an in-place overwrite would destroy every previously merged
-    sketch on a mid-write crash, and checkpoint replay only redelivers
-    UNAPPLIED batches, so the store would be unrecoverable.  With the
-    swap, a crash before the pointer moves leaves the old version
-    intact and the replayed batch re-merges into it
-    (:func:`~.sinks.publish_version`, the protocol every versioned
-    store here shares)."""
-    cur_dir = current_version_dir(store)
-    if cur_dir is not None:
-        cur = spark.read.parquet(cur_dir)
-        merged = (
-            cur.unionByName(agg)
-            .groupBy("metric", "datestamp")
-            .agg(F.hll_union_agg("sketch").alias("sketch"))
-        )
-    else:
+    Durability: each merge lands in a NEW version behind the atomic
+    ``CURRENT`` swap (:func:`~.sinks.publish_version`) — an in-place
+    overwrite would destroy every merged sketch on a mid-write crash,
+    and replay only redelivers UNAPPLIED batches; with the swap the
+    replayed batch re-merges into the intact old version."""
+
+    def populate(cur: str | None, new_dir: str) -> None:
         merged = agg
-    publish_version(
-        store, lambda new_dir: merged.write.mode("overwrite").parquet(new_dir)
-    )
+        if cur is not None:
+            merged = (
+                spark.read.parquet(cur)
+                .unionByName(agg)
+                .groupBy("metric", "datestamp")
+                .agg(F.hll_union_agg("sketch").alias("sketch"))
+            )
+        merged.write.mode("overwrite").parquet(new_dir)
+
+    publish_version(store, populate)
 
 
 def read_hll_store(spark: SparkSession, store: str) -> DataFrame:
@@ -1807,7 +1800,7 @@ def streaming_cdc_apply(
 # --------------------------------------------------------------------------
 
 
-def _merge_cms_store(spark: SparkSession, store: str, cells: DataFrame, batch_id: int) -> None:
+def _merge_cms_store(store: str, cells: DataFrame, batch_id: int) -> None:
     """Fold a micro-batch's CMS cell partials into the serving store:
     merge = cell-wise ADD (``cms_sketch`` counts are additive), so the
     stored sketch after any batch chopping equals the single batch
@@ -1817,39 +1810,14 @@ def _merge_cms_store(spark: SparkSession, store: str, cells: DataFrame, batch_id
     The load-bearing difference from the HLL store: union of HLL
     register maxima is IDEMPOTENT (replays merge with zero effect),
     but cell-wise addition is NOT — a replayed batch would double-
-    count.  Each committed version therefore carries the LAST applied
-    batch id (``applied.json`` inside the version dir, committed by
-    the same atomic ``CURRENT`` pointer swap), and a batch id ≤ it is
-    skipped — foreachBatch ids are monotonic per checkpoint and replay
-    only ever re-delivers the latest unfinished batch, so one id is
-    the whole ledger (bounded, unlike a full history set).  Crash
-    before the swap: the old version and its id stay current,
-    checkpoint replay re-delivers the batch, the merge re-runs —
-    exactly-once effect either way.
+    count, so each version commits with its batch id and a replayed
+    id is skipped (:func:`_fold_store`).  Crash before the swap: the
+    old version and its id stay current and the replay re-merges.
     """
-    import json
-
-    cur_dir = current_version_dir(store)
-    if cur_dir is not None:
-        with open(os.path.join(cur_dir, "applied.json")) as f:
-            last_applied = json.load(f)["last_applied"]
-        if int(batch_id) <= last_applied:
-            return  # replay of an applied batch: adds are not idempotent
-        cur = spark.read.parquet(os.path.join(cur_dir, "cells"))
-        merged = (
-            cur.unionByName(cells)
-            .groupBy("row_idx", "col_idx")
-            .agg(F.sum("cell_count").alias("cell_count"))
-        )
-    else:
-        merged = cells
-
-    def populate(new_dir: str) -> None:
-        merged.write.mode("overwrite").parquet(os.path.join(new_dir, "cells"))
-        with open(os.path.join(new_dir, "applied.json"), "w") as f:
-            json.dump({"last_applied": int(batch_id)}, f)
-
-    publish_version(store, populate)
+    _fold_store(
+        store, "cells", cells, batch_id, ["row_idx", "col_idx"],
+        [F.sum("cell_count").alias("cell_count")],
+    )
 
 
 def read_cms_store(spark: SparkSession, store: str) -> DataFrame:
@@ -1898,7 +1866,7 @@ def streaming_freq_sketch(
         # state-partition count
         cells = cms_sketch(batch_df).localCheckpoint(eager=True)
         if not cells.isEmpty():
-            _merge_cms_store(batch_df.sparkSession, store, cells, batch_id)
+            _merge_cms_store(store, cells, batch_id)
 
     drain(
         streaming_bronze(spark, sf_dir, work_dir, max_files_per_trigger), ckpt,
@@ -1928,17 +1896,9 @@ def _seen_bucket_col(key_col: str = "canonical_url"):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(SEEN_BUCKETS)).cast("int")
 
 
-def _seen_complete_compactions(seen_dir: str) -> list[int]:
-    """Compacted store versions with a _SUCCESS marker (a dir without
-    one is a crashed write — its inputs are still intact, so it is
-    simply rewritten; never read)."""
-    out = []
-    for d in os.listdir(seen_dir):
-        if d.startswith("compacted_v=") and os.path.exists(
-            os.path.join(seen_dir, d, "_SUCCESS")
-        ):
-            out.append(int(d.split("=", 1)[1]))
-    return sorted(out)
+def _seen_read(spark: SparkSession, base: str, paths: list, key_col: str) -> DataFrame:
+    """(key, bucket) rows of bucket-partitioned seen-store dirs."""
+    return spark.read.option("basePath", base).parquet(*paths).select(key_col, "bucket")
 
 
 def _seen_compact(
@@ -1947,49 +1907,36 @@ def _seen_compact(
     batch_id: int,
     key_col: str = "canonical_url",
 ) -> None:
-    """Fold the previous compacted store + every ``batch=j`` (j <
-    batch_id) delta dir into ``compacted_v={batch_id}``, then delete
-    the folded inputs — the LSM fold the `compaction_plan` operator
-    prices for lake tables, applied to cross-batch state.
+    """Fold the compacted store + every ``batch=j`` (j < batch_id)
+    delta dir into the next version of ``<seen_dir>/compacted``,
+    committed with ``batch_id`` as its fold id, then delete the folded
+    deltas — the LSM fold the `compaction_plan` operator prices for
+    lake tables, applied to cross-batch state.
 
     Replay-safe by construction: inputs are only COMMITTED batches
     (j < batch_id, and foreachBatch commits batch j before j+1 starts),
     so a replayed fold is deterministic; deletion runs strictly AFTER
-    the overwrite-committed write (_SUCCESS), and a complete
-    ``compacted_v={batch_id}`` means a prior attempt already finished
-    (its inputs may be gone) — only the idempotent deletion sweep
-    re-runs."""
+    the version commits, and a replay of a committed fold (its inputs
+    may be partly gone) is skipped by :func:`~.sinks.publish_version`
+    — only the idempotent deletion sweep re-runs.  The deltas are
+    deleted only when the current fold is THIS one: a batch replayed
+    after checkpoint loss behind a later fold skips its fold and keeps
+    them, since :func:`_seen_probe` then reads every delta.  Old
+    compacted versions go through the publish's own sweep."""
     import shutil
 
-    target = os.path.join(seen_dir, f"compacted_v={batch_id}")
-    if not os.path.exists(os.path.join(target, "_SUCCESS")):
-        prior = [
-            v for v in _seen_complete_compactions(seen_dir) if v < batch_id
-        ]
-        frames = []
-        if prior:
-            cdir = os.path.join(seen_dir, f"compacted_v={prior[-1]}")
-            frames.append(
-                spark.read.option("basePath", cdir)
-                .parquet(cdir)
-                .select(key_col, "bucket")
-            )
-        deltas = [
-            os.path.join(seen_dir, d)
-            for d in os.listdir(seen_dir)
-            if d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id
-        ]
-        if deltas:
-            frames.append(
-                spark.read.option("basePath", seen_dir)
-                .parquet(*deltas)
-                .select(key_col, "bucket")
-            )
-        if not frames:
-            return
-        folded = frames[0]
-        for f in frames[1:]:
-            folded = folded.unionByName(f)
+    deltas = [
+        os.path.join(seen_dir, d)
+        for d in os.listdir(seen_dir)
+        if d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id
+    ]
+    if not deltas:
+        return
+
+    def populate(cur: str | None, new_dir: str) -> None:
+        folded = _seen_read(spark, seen_dir, deltas, key_col)
+        if cur is not None:
+            folded = _seen_read(spark, cur, [cur], key_col).unionByName(folded)
         # no distinct: per-batch admissions are disjoint by the
         # anti-join's own contract, so the fold is a pure union.
         # repartition("bucket") before the partitioned write (guide §6
@@ -2000,12 +1947,15 @@ def _seen_compact(
         # lands in ONE task → one file per bucket, bounded store-wide.
         folded.repartition("bucket").write.partitionBy("bucket").mode(
             "overwrite"
-        ).parquet(target)
-    for d in os.listdir(seen_dir):
-        if d.startswith("compacted_v=") and int(d.split("=", 1)[1]) < batch_id:
-            shutil.rmtree(os.path.join(seen_dir, d))
-        elif d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id:
-            shutil.rmtree(os.path.join(seen_dir, d))
+        ).parquet(new_dir)
+
+    comp = os.path.join(seen_dir, "compacted")
+    if (
+        publish_version(comp, populate, batch_id=batch_id)
+        or version_batch_id(current_version_dir(comp)) == batch_id
+    ):
+        for d in deltas:
+            shutil.rmtree(d)
 
 
 def _seen_probe(
@@ -2013,7 +1963,6 @@ def _seen_probe(
     seen_dir: str,
     batch_id: int,
     key_col: str = "canonical_url",
-    touched_src: DataFrame | None = None,
 ) -> DataFrame:
     """Anti-join ``cand`` (must carry ``key_col`` + ``bucket``; extra
     columns pass through the left_anti join unchanged) against every
@@ -2024,57 +1973,64 @@ def _seen_probe(
     per-batch probe I/O is O(touched buckets), not O(total admitted).
     The own-batch dir is never read (replay idempotency — a replayed
     batch anti-joining its own prior output would admit nothing and
-    erase its admissions).
-
-    ``touched_src`` (optional) names a frame carrying ``bucket`` whose
-    key set equals ``cand``'s, for callers whose ``cand`` is an
-    UNPINNED aggregate: collecting the touched buckets from ``cand``
-    would execute that aggregate once here and again when the caller
-    pins the probed result — deriving them from an already-
-    checkpointed upstream frame keeps the aggregate at one execution
-    per batch (ADVICE r14)."""
+    erase its admissions)."""
     s = cand.sparkSession
-    comp = [v for v in _seen_complete_compactions(seen_dir) if v <= batch_id]
-    comp_v = comp[-1] if comp else None
-    resid = []
-    for d in os.listdir(seen_dir):
-        if not d.startswith("batch="):
-            continue
-        j = int(d.split("=", 1)[1])
-        # batches < comp_v are folded into (and deleted after) the
-        # compacted store; leftover dirs from a crash mid-sweep are
-        # subsumed by it, so reading them would only duplicate work
-        if j != batch_id and (comp_v is None or j >= comp_v):
-            resid.append(os.path.join(seen_dir, d))
-    frames = []
-    if comp_v is not None:
-        cdir = os.path.join(seen_dir, f"compacted_v={comp_v}")
-        frames.append(
-            s.read.option("basePath", cdir)
-            .parquet(cdir)
-            .select(key_col, "bucket")
-        )
+    comp = current_version_dir(os.path.join(seen_dir, "compacted"))
+    fold = -1 if comp is None else version_batch_id(comp)
+    if fold > batch_id:  # replayed batch behind a later fold: deltas only
+        comp, fold = None, -1
+    # batches < fold are folded into (and deleted after) the compacted
+    # store; leftover dirs from a crash mid-sweep are subsumed by it,
+    # so reading them would only duplicate work
+    resid = [
+        os.path.join(seen_dir, d)
+        for d in os.listdir(seen_dir)
+        if d.startswith("batch=") and int(d[6:]) != batch_id and int(d[6:]) >= fold
+    ]
+    frames = [_seen_read(s, comp, [comp], key_col)] if comp is not None else []
     if resid:
-        frames.append(
-            s.read.option("basePath", seen_dir)
-            .parquet(*resid)
-            .select(key_col, "bucket")
-        )
+        frames.append(_seen_read(s, seen_dir, resid, key_col))
     if not frames:
         return cand
     # bounded collect: ≤ SEEN_BUCKETS ints, never corpus-sized
-    touched = [
-        r[0]
-        for r in (touched_src if touched_src is not None else cand)
-        .select("bucket")
-        .distinct()
-        .collect()
-    ]
+    touched = [r[0] for r in cand.select("bucket").distinct().collect()]
     pruned = [f.filter(F.col("bucket").isin(touched)) for f in frames]
     seen = pruned[0]
     for f in pruned[1:]:
         seen = seen.unionByName(f)
     return cand.join(seen.select(key_col), key_col, "left_anti")
+
+
+def _seen_admit(
+    keys: DataFrame,
+    seen_dir: str,
+    batch_id: int,
+    compact_every: int,
+    key_col: str = "canonical_url",
+) -> DataFrame:
+    """The seen-store admission step of the frontier, web ingest and
+    paragraph dedup: every ``compact_every`` batches fold the deltas
+    (:func:`_seen_compact`), anti-join ``keys`` against every prior
+    batch (:func:`_seen_probe`), land the admitted keys as this
+    batch's ``batch=N/bucket=B`` delta, and return the pinned
+    admissions with ``bucket``.  ``keys`` is pinned before the probe
+    (it feeds the touched-bucket collect and the anti-join, so an
+    aggregate behind it runs once per batch) and the probed result
+    after it (it feeds the delta write and the caller's sinks)."""
+    os.makedirs(seen_dir, exist_ok=True)
+    if batch_id > 0 and batch_id % compact_every == 0:
+        _seen_compact(keys.sparkSession, seen_dir, batch_id, key_col)
+    cand = keys.withColumn("bucket", _seen_bucket_col(key_col)).localCheckpoint(eager=True)
+    fresh = _seen_probe(cand, seen_dir, batch_id, key_col)
+    if fresh is not cand:
+        fresh = fresh.localCheckpoint(eager=True)
+    # delta write keyed on the partition column (guide §6): one file
+    # per touched bucket instead of (tasks × buckets) — the probe's
+    # listing/open cost is bounded at any batch size
+    fresh.select(key_col, "bucket").repartition("bucket").write.partitionBy(
+        "bucket"
+    ).mode("overwrite").parquet(os.path.join(seen_dir, f"batch={batch_id}"))
+    return fresh
 
 
 #: (source fingerprint, n_files) → staged doc_id-range split dir (the
@@ -2182,8 +2138,8 @@ def streaming_url_frontier(
     instead of growing with crawl length.  Replay-idempotent: the
     probe never reads ``batch={batch_id}`` itself (anti-joining its
     own prior output would admit zero rows and erase the admissions),
-    and compaction only folds committed batches behind a _SUCCESS
-    guard.
+    and compaction only folds committed batches into a version that
+    commits with its batch id (a replayed fold is skipped).
 
     Landing staging lives in :func:`_stage_frontier_landing` (test/
     driver scaffolding); the operator itself is readStream →
@@ -2196,14 +2152,10 @@ def streaming_url_frontier(
     raw = landing_stream(spark, landing, spark.read.parquet(landing).schema, max_files=1)
     seen_dir = os.path.join(work_dir, "frontier_seen")
     admit_dir = os.path.join(work_dir, "frontier_admit")
-    os.makedirs(seen_dir, exist_ok=True)
     os.makedirs(admit_dir, exist_ok=True)
     ckpt = os.path.join(work_dir, "frontier_ckpt")
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        if batch_id > 0 and batch_id % compact_every == 0:
-            _seen_compact(s, seen_dir, batch_id)
         # skew-safe admission: `url_keepers` collapses a viral
         # canonical URL map-side via min-struct partial aggregation
         # (the window form's 100 TB failure mode is a single-reducer
@@ -2212,25 +2164,7 @@ def streaming_url_frontier(
         # admission set, so the 66-rule canonical chain is analyzed
         # and evaluated once per batch (r14 opt; equality with
         # url_canonicalize's keeper rows pytest-pinned)
-        keepers = WB.url_keepers(batch_df)
-        # pin the shuffle-bearing canonicalize+dedup chain: it feeds
-        # both the touched-bucket collect and the anti-join
-        cand = (
-            keepers.withColumn("bucket", _seen_bucket_col())
-            .localCheckpoint(eager=True)
-        )
-        admitted = _seen_probe(cand, seen_dir, batch_id)
-        if admitted is not cand:
-            # the probed frame feeds BOTH sinks below — pin once
-            admitted = admitted.localCheckpoint(eager=True)
-        # delta write keyed on the partition column (guide §6): one
-        # file per touched bucket instead of (tasks × buckets) — the
-        # probe's listing/open cost is bounded at any batch size
-        admitted.select("canonical_url", "bucket").repartition(
-            "bucket"
-        ).write.partitionBy("bucket").mode("overwrite").parquet(
-            os.path.join(seen_dir, f"batch={batch_id}")
-        )
+        admitted = _seen_admit(WB.url_keepers(batch_df), seen_dir, batch_id, compact_every)
         admitted.drop("bucket").write.mode("overwrite").parquet(
             os.path.join(admit_dir, f"batch={batch_id}")
         )
@@ -2268,10 +2202,10 @@ def streaming_web_ingest(
     tests/test_streaming.py).  Cross-batch dedup keeps first-batch-
     wins == earliest-doc_id via the staged landing order, exactly the
     frontier's contract — including its hash-bucketed, periodically
-    compacted seen-store (:func:`_seen_probe`/:func:`_seen_compact`:
-    partition-pruned probes, bounded dir count); replays are
-    idempotent for the same reason (own-batch seen dir excluded from
-    the anti-join, _SUCCESS-guarded compaction)."""
+    compacted seen-store (:func:`_seen_admit`: partition-pruned
+    probes, bounded dir count); replays are idempotent for the same
+    reason (own-batch seen dir excluded from the anti-join, a replayed
+    fold skipped by its committed batch id)."""
     from telemetry_streaming_datalake_spark.operators import web as WB
     from telemetry_streaming_datalake_spark.operators.text import gopher_filter
 
@@ -2279,33 +2213,17 @@ def streaming_web_ingest(
     raw = landing_stream(spark, landing, spark.read.parquet(landing).schema, max_files=1)
     seen_dir = os.path.join(work_dir, "ingest_seen")
     lake_dir = os.path.join(work_dir, "ingest_lake")
-    os.makedirs(seen_dir, exist_ok=True)
     os.makedirs(lake_dir, exist_ok=True)
     ckpt = os.path.join(work_dir, "ingest_ckpt")
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        if batch_id > 0 and batch_id % compact_every == 0:
-            _seen_compact(s, seen_dir, batch_id)
         # skew-safe admission via the join-free min-struct keeper agg
         # (viral-URL single-reducer straggler at crawl scale — see
         # streaming_url_frontier._admit for the full rationale)
-        cand = (
-            WB.url_keepers(batch_df)
-            .select("doc_id", "canonical_url")
-            .withColumn("bucket", _seen_bucket_col())
-            .localCheckpoint(eager=True)
-        )
-        probed = _seen_probe(cand, seen_dir, batch_id)
-        if probed is not cand:
-            probed = probed.localCheckpoint(eager=True)
-        # one file per touched bucket, not (tasks × buckets) — guide §6
-        probed.select("canonical_url", "bucket").repartition(
-            "bucket"
-        ).write.partitionBy("bucket").mode("overwrite").parquet(
-            os.path.join(seen_dir, f"batch={batch_id}")
-        )
-        admitted = probed.drop("bucket")
+        admitted = _seen_admit(
+            WB.url_keepers(batch_df).select("doc_id", "canonical_url"),
+            seen_dir, batch_id, compact_every,
+        ).drop("bucket")
         allowed = (
             WB.robots_gate(admitted)
             .filter(F.col("robots_allowed"))
@@ -2423,8 +2341,8 @@ def streaming_paragraph_dedup(
     key_by_hash=True)` production path — a viral boilerplate chunk
     collapses map-side), drops every chunk whose hash ANY prior batch
     already claimed (the frontier's bucketed chunk-hash store:
-    :func:`_seen_probe` keyed on ``chunk_md5``, partition-pruned to
-    touched buckets, :func:`_seen_compact`-folded), and re-emits the
+    :func:`_seen_admit` keyed on ``chunk_md5``, partition-pruned to
+    touched buckets, periodically folded), and re-emits the
     batch's documents with surviving chunks re-joined in order
     (`para_reassemble`).
 
@@ -2433,22 +2351,18 @@ def streaming_paragraph_dedup(
     winner and the drained rewrite equals `paragraph_dedup` EXACTLY
     (identical oracle; equality pytest-pinned).  Replay-idempotent
     via the store contract itself: the probe never reads the
-    own-batch dir, compaction is _SUCCESS-guarded, and both sinks are
-    batchId-scoped overwrites."""
+    own-batch dir, a replayed fold is skipped by its committed batch
+    id, and both sinks are batchId-scoped overwrites."""
     from telemetry_streaming_datalake_spark.operators import dedup as DD
 
     landing = _stage_frontier_landing(spark, sf_dir, work_dir, n_files)
     raw = landing_stream(spark, landing, spark.read.parquet(landing).schema, max_files=1)
     seen_dir = os.path.join(work_dir, "para_seen")
     out_dir = os.path.join(work_dir, "para_clean")
-    os.makedirs(seen_dir, exist_ok=True)
     os.makedirs(out_dir, exist_ok=True)
     ckpt = os.path.join(work_dir, "para_ckpt")
 
     def _clean(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        if batch_id > 0 and batch_id % compact_every == 0:
-            _seen_compact(s, seen_dir, batch_id, key_col="chunk_md5")
         # pin the explode once: it feeds the winner agg and the
         # reassembly
         chunks = (
@@ -2464,34 +2378,13 @@ def streaming_paragraph_dedup(
         # the probed frame makes the former winners join redundant.
         # `bucket` is recomputed post-agg (functionally dependent on
         # chunk_md5), keeping the winner shuffle at key+struct width.
-        winners = (
-            chunks.groupBy("chunk_md5")
-            .agg(F.min(F.struct("doc_id", "idx")).alias("__w"))
-            .withColumn("bucket", _seen_bucket_col("chunk_md5"))
+        winners = chunks.groupBy("chunk_md5").agg(
+            F.min(F.struct("doc_id", "idx")).alias("__w")
         )
         # hashes NO prior batch claimed; every fresh hash present in
         # this batch is claimed by its batch-local winner, so the
-        # fresh set IS the store delta.  touched_src=chunks (pinned):
-        # the probe's touched-bucket collect would otherwise execute
-        # the UNPINNED winner aggregate once here and again in the
-        # eager checkpoint below — chunks carries the same chunk_md5
-        # set, so its bucket set is identical and the distinct
-        # collapses map-side to ≤ SEEN_BUCKETS rows (ADVICE r14)
-        fresh = _seen_probe(
-            winners,
-            seen_dir,
-            batch_id,
-            key_col="chunk_md5",
-            touched_src=chunks.withColumn(
-                "bucket", _seen_bucket_col("chunk_md5")
-            ),
-        ).localCheckpoint(eager=True)
-        # one file per touched bucket, not (tasks × buckets) — guide §6
-        fresh.select("chunk_md5", "bucket").repartition(
-            "bucket"
-        ).write.partitionBy("bucket").mode("overwrite").parquet(
-            os.path.join(seen_dir, f"batch={batch_id}")
-        )
+        # fresh set IS the store delta
+        fresh = _seen_admit(winners, seen_dir, batch_id, compact_every, key_col="chunk_md5")
         ranked = chunks.join(
             fresh.select("chunk_md5", "__w").withColumn(
                 "__fresh", F.lit(True)

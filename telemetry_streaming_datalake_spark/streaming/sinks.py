@@ -29,11 +29,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 
+#: the batch-id record inside a version dir; ``_``-prefixed, so Spark
+#: and pyarrow readers of the version never list it
+_BATCH_ID = "_batch_id"
+
+
 def current_version_dir(store: str) -> str | None:
     """The committed ``v{n}`` directory of a versioned store, or None
-    for an empty store.  A ``v*`` dir the ``CURRENT`` pointer does not
-    name is an uncommitted crash leftover (or the previous version,
-    kept for lazy readers) and is never resolved."""
+    for an empty store (for readers; writers get it from
+    :func:`publish_version`).  A ``v*`` dir ``CURRENT`` does not name
+    is a crash leftover or the previous version, never resolved."""
     ptr = os.path.join(store, "CURRENT")
     if not os.path.exists(ptr):
         return None
@@ -41,21 +46,45 @@ def current_version_dir(store: str) -> str | None:
         return os.path.join(store, fh.read().strip())
 
 
-def publish_version(store: str, populate) -> None:
+def version_batch_id(version_dir: str) -> int | None:
+    """The batch id committed with a version (None if published without)."""
+    try:
+        with open(os.path.join(version_dir, _BATCH_ID)) as fh:
+            return int(fh.read())
+    except FileNotFoundError:
+        return None
+
+
+def publish_version(store: str, populate, *, batch_id: int | None = None) -> bool:
     """The one commit protocol of every versioned store (upsert, HLL,
-    CMS, grouping sets): ``populate(new_dir)`` writes the next
-    version's payload into ``v{n+1}``, then the ``CURRENT`` pointer
-    (``v{n+1}``, relative to the store root) swaps atomically (tmp +
-    ``os.replace``).  A crash before the swap leaves the previous
-    version, and everything committed with it, current; the orphan is
-    overwritten by the next publish.  The sweep keeps the new and the
-    previous version (in-flight lazy readers of the prior snapshot
-    stay valid) and removes everything else."""
+    CMS, grouping sets, the seen store's compacted part):
+    ``populate(cur, new_dir)`` gets the committed version dir (None
+    when empty) and writes the next version into ``v{n+1}``; then the
+    ``CURRENT`` pointer swaps atomically (tmp + ``os.replace``).  A
+    crash before the swap leaves the previous version current; the
+    orphan is overwritten by the next publish.  The sweep keeps the new
+    and the previous version (for in-flight lazy readers).
+
+    ``batch_id`` makes a non-idempotent store exactly-once under
+    checkpoint replay (Delta's ``txn`` action): an id <= the one
+    committed with the current version is skipped (returns False);
+    otherwise the id is written into the new version before the swap,
+    so one ``os.replace`` commits payload and id together.
+    foreachBatch ids are monotonic per checkpoint and replay only
+    re-delivers the latest unfinished batch, so one id is the whole
+    ledger."""
     import shutil
 
     cur = current_version_dir(store)
+    done = None if cur is None else version_batch_id(cur)
+    if batch_id is not None and done is not None and batch_id <= done:
+        return False
     version = 0 if cur is None else int(os.path.basename(cur)[1:]) + 1
-    populate(os.path.join(store, f"v{version}"))
+    new_dir = os.path.join(store, f"v{version}")
+    populate(cur, new_dir)
+    if batch_id is not None:
+        with open(os.path.join(new_dir, _BATCH_ID), "w") as fh:
+            fh.write(str(int(batch_id)))
     tmp = os.path.join(store, "CURRENT.tmp")
     with open(tmp, "w") as fh:
         fh.write(f"v{version}")
@@ -66,6 +95,7 @@ def publish_version(store: str, populate) -> None:
             version - 1,
         ):
             shutil.rmtree(os.path.join(store, d), ignore_errors=True)
+    return True
 
 
 class ServingStoreWriter(abc.ABC):
@@ -82,8 +112,8 @@ class ServingStoreWriter(abc.ABC):
       leave the store exactly as applying it once.  Key-overwrite
       semantics give this for free when the batch content is
       deterministic; writers with non-idempotent effects must track
-      ``batch_id`` high-water marks themselves (see
-      :class:`InMemoryKVServingStore`).
+      ``batch_id`` high-water marks (see :class:`InMemoryKVServingStore`;
+      the lake stores pass it to :func:`publish_version`).
     """
 
     key: str = "id"
@@ -222,11 +252,13 @@ class ParquetUpsertStore(ServingStoreWriter):
     directory in place, so a query stop or crash mid-apply could leave
     the store EMPTY with no replay able to restore the lost rows (the
     checkpoint only re-delivers unapplied batches).  With the swap
-    (:func:`publish_version`, shared with the sketch and grouping-sets
-    stores), an aborted apply leaves an orphan ``v{n}`` that the next
-    apply overwrites, and readers always see the last committed state.
-    The previous version is kept until the next successful apply so
-    in-flight lazy readers of the prior snapshot stay valid.
+    (:func:`publish_version`, shared with the sketch, grouping-sets and
+    seen stores), an aborted apply leaves an orphan ``v{n}`` that the
+    next apply overwrites, and readers always see the last committed
+    state.  The previous version is kept until the next successful
+    apply so in-flight lazy readers of the prior snapshot stay valid.
+    ItemOverwrite is replay-idempotent, so the store publishes without
+    a batch id and ``CURRENT`` and the version dirs hold nothing else.
     """
 
     def __init__(
@@ -274,9 +306,8 @@ class ParquetUpsertStore(ServingStoreWriter):
     # ----------------------------------------------------------- write
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        cur = self.current_data_dir()
         publish_version(
-            self.path, lambda new_dir: self._write_version(batch_df, cur, new_dir)
+            self.path, lambda cur, new_dir: self._write_version(batch_df, cur, new_dir)
         )
 
     def _write_version(self, batch_df: DataFrame, cur: str | None, new_dir: str) -> None:

@@ -126,3 +126,34 @@ def test_rotation_helper_orders_stalest_first():
     checked = [k for k in keys if k in greens]
     if never and checked:
         assert max(ranks[k] for k in never) < min(ranks[k] for k in checked)
+
+
+def test_registry_work_dirs_are_removed_at_exit(tmp_path):
+    """Registry streaming keys run in work dirs under one per-process
+    scratch root in TMPDIR: a process that ran two of them made that
+    root, and after it exits no ``tsdl_*`` entry is left."""
+    import os
+    import subprocess
+    import sys
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    code = (
+        "import os, tempfile\n"
+        "import __spark_entry__ as E\n"
+        "from telemetry_streaming_datalake_spark.session import get_spark\n"
+        "s = get_spark('scratch-check')\n"
+        "for k in ('streaming_grouping_sets', 'streaming_freq_sketch'):\n"
+        f"    assert E.queries()[k](s, {SF!r}).count() > 0\n"
+        "assert any(n.startswith('tsdl_') for n in os.listdir(tempfile.gettempdir()))\n"
+    )
+    env = dict(
+        os.environ, TMPDIR=str(tmp), SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, env=env,
+        capture_output=True, text=True, timeout=900,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert [n for n in os.listdir(tmp) if n.startswith("tsdl_")] == []

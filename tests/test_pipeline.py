@@ -471,3 +471,34 @@ def test_media_payload_fixture_roundtrip_bit_exact(spark):
     a = MM.media_payload_fixture(spark, sf, "png")
     b = MM.media_payload_fixture(spark, sf, "png")
     assert a.inputFiles() == b.inputFiles()
+
+
+def test_media_payload_fixture_build_never_writes_caller_conf(spark, monkeypatch):
+    """A cold fixture build turns whole-stage codegen off on a session
+    of its own: the caller's session conf is never written (neither
+    the WSCG switch nor load_table's required confs), so a concurrent
+    query on the caller's session never runs with WSCG off."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from telemetry_streaming_datalake_spark.operators import multimodal as MM
+    from tests.conftest import SF_DIR
+
+    writes = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def spy_set(self, key, value):
+        if self is spark.conf:
+            writes.append(key)
+        return real_set(self, key, value)
+
+    def spy_unset(self, key):
+        if self is spark.conf:
+            writes.append(key)
+        return real_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", spy_unset)
+    monkeypatch.setattr(MM, "_MEDIA_FIXTURE_CACHE", {})
+    assert MM.media_payload_fixture(spark, SF_DIR, "png").count() > 0
+    assert len(MM._MEDIA_FIXTURE_CACHE) == 1  # a cold build ran
+    assert writes == []

@@ -2,6 +2,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from telemetry_streaming_datalake_spark.ingest import bronze as B
@@ -1004,8 +1005,6 @@ def test_resilient_store_persistent_fault_converges_on_replay(spark):
     data loss: successes are landed, the batch stays unapplied, and the
     replayed batch converges once the fault clears (ItemOverwrite makes
     re-landing successes harmless)."""
-    import pytest as _pytest
-
     from telemetry_streaming_datalake_spark.streaming.sinks import (
         ResilientKVServingStore,
     )
@@ -1021,7 +1020,7 @@ def test_resilient_store_persistent_fault_converges_on_replay(spark):
 
     store._write_item = faulty
     batch = spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], "id string, v long")
-    with _pytest.raises(RuntimeError, match="not marked applied"):
+    with pytest.raises(RuntimeError, match="not marked applied"):
         store.apply_batch(batch, 7)
     assert set(store.data) == {"a", "c"}  # error isolated, no loss
     assert 7 not in store.applied_batches
@@ -1495,9 +1494,9 @@ def test_streaming_cms_skips_the_no_data_batch(spark, tmp_path, monkeypatch):
     published = []
     real = SP.publish_version
 
-    def spy(store, populate):
+    def spy(store, populate, **kw):
         published.append(store)
-        return real(store, populate)
+        return real(store, populate, **kw)
 
     monkeypatch.setattr(SP, "publish_version", spy)
     out = SP.streaming_freq_sketch(spark, SF_DIR, str(tmp_path))
@@ -1506,27 +1505,158 @@ def test_streaming_cms_skips_the_no_data_batch(spark, tmp_path, monkeypatch):
     assert len(published) == 1
 
 
+def _gs_store(spark, root):
+    from decimal import Decimal
+
+    store = os.path.join(root, "gs_store")
+    delta = spark.createDataFrame(
+        [("HOUR", "0", 1, 2, 3, 4, Decimal("1.5"), -1.0, 2.0, 3),
+         ("DAY", "0", 1, 2, 3, 4, Decimal("0.25"), 0.5, 0.5, 1)],
+        "grain string, bucket string, remote_id int, metric_id int, "
+        "provider_id int, category_id int, p_sum decimal(38,6), "
+        "p_min double, p_max double, p_n long",
+    )
+
+    def read():
+        cur = SP.current_version_dir(store)
+        return {
+            tuple(r[:6]): (r.p_sum, r.p_min, r.p_max, r.p_n)
+            for r in spark.read.parquet(os.path.join(cur, "partials")).collect()
+        }
+
+    def twice(one):  # sums and counts double, min/max stay
+        return {k: (2 * s, lo, hi, 2 * n) for k, (s, lo, hi, n) in one.items()}
+
+    def apply(bid):  # the grouping-sets merge's fold
+        SP._fold_store(store, "partials", delta, bid, SP._GS_KEYS, [
+            F.sum("p_sum").alias("p_sum"),
+            F.min("p_min").alias("p_min"),
+            F.max("p_max").alias("p_max"),
+            F.sum("p_n").alias("p_n"),
+        ])
+
+    return store, apply, read, twice
+
+
+def _cms_store(spark, root):
+    from telemetry_streaming_datalake_spark.operators.rollup import cms_sketch
+
+    store = os.path.join(root, "cms_store")
+    cells = cms_sketch(
+        spark.createDataFrame([("a",), ("a",), ("b",)], "serial string")
+    ).localCheckpoint(eager=True)
+
+    def read():
+        return {
+            (r.row_idx, r.col_idx): r.cell_count
+            for r in SP.read_cms_store(spark, store).collect()
+        }
+
+    def twice(one):  # cell-wise addition of the same batch
+        return {k: 2 * v for k, v in one.items()}
+
+    return store, lambda bid: SP._merge_cms_store(store, cells, bid), read, twice
+
+
+def _seen_store(spark, root):
+    seen_dir = os.path.join(root, "seen")
+    os.makedirs(seen_dir)
+    urls = {0: ["http://a.example/", "http://b.example/"], 1: ["http://c.example/"]}
+
+    def apply(bid):
+        # batch bid-1's delta, then the fold at bid (a replay re-lands
+        # the delta, as a crash between the commit and the sweep leaves it)
+        (
+            spark.createDataFrame([(u,) for u in urls[bid - 1]], "canonical_url string")
+            .withColumn("bucket", SP._seen_bucket_col())
+            .write.partitionBy("bucket")
+            .mode("overwrite")
+            .parquet(os.path.join(seen_dir, f"batch={bid - 1}"))
+        )
+        SP._seen_compact(spark, seen_dir, bid)
+
+    def read():
+        cur = SP.current_version_dir(os.path.join(seen_dir, "compacted"))
+        return sorted(r.canonical_url for r in spark.read.parquet(cur).collect())
+
+    def twice(_one):  # every admission exactly once
+        return sorted(urls[0] + urls[1])
+
+    return os.path.join(seen_dir, "compacted"), apply, read, twice
+
+
+def _store_snapshot(store):
+    """CURRENT's text plus every file under the store with size and
+    mtime: equal snapshots mean nothing was published or rewritten."""
+    with open(os.path.join(store, "CURRENT")) as fh:
+        current = fh.read()
+    files = sorted(
+        (os.path.relpath(os.path.join(d, f), store), st.st_size, st.st_mtime_ns)
+        for d, _dirs, names in os.walk(store)
+        for f in names
+        if f != "CURRENT"
+        for st in [os.stat(os.path.join(d, f))]
+    )
+    return current, files
+
+
+@pytest.mark.parametrize("make", [_gs_store, _cms_store, _seen_store],
+                         ids=["grouping_sets", "cms", "seen"])
+def test_batch_id_store_applies_each_batch_exactly_once(spark, tmp_path, monkeypatch, make):
+    """The three non-idempotent stores commit their batch id with the
+    version (publish_version): re-publishing an applied id changes
+    nothing on disk, a populate that dies after a partial write leaves
+    reads at the committed version, and retrying that id then applies
+    it exactly once — a NEW id still merges."""
+    store, apply, read, twice = make(spark, str(tmp_path))
+    apply(1)
+    one = read()
+    before = _store_snapshot(store)
+    apply(1)  # replayed batch id
+    assert _store_snapshot(store) == before
+    assert read() == one
+
+    real = SP.publish_version
+
+    def crash_before_swap(store_, populate, **kw):
+        def partial(cur, new_dir):
+            populate(cur, new_dir)
+            raise RuntimeError("crash before the CURRENT swap")
+
+        return real(store_, partial, **kw)
+
+    monkeypatch.setattr(SP, "publish_version", crash_before_swap)
+    with pytest.raises(RuntimeError):
+        apply(2)
+    assert os.path.isdir(os.path.join(store, "v1"))  # the uncommitted write
+    assert _store_snapshot(store)[0] == before[0] == "v0"
+    assert read() == one
+    monkeypatch.setattr(SP, "publish_version", real)
+    apply(2)  # recovery: the retried id lands in v1, once
+    assert read() == twice(one)
+    apply(2)
+    assert read() == twice(one)
+
+
 def test_cms_store_replay_is_skipped_by_ledger(spark, tmp_path):
     """Cell-wise addition is NOT idempotent (unlike HLL register
     union), so a checkpoint-replayed batch id must be skipped by the
-    store's applied-batch ledger; a NEW batch id still merges."""
+    batch id committed with the store's version; a NEW batch id still
+    merges."""
     from telemetry_streaming_datalake_spark.operators.rollup import cms_sketch
-    from telemetry_streaming_datalake_spark.streaming.pipeline import (
-        _merge_cms_store,
-        read_cms_store,
-    )
 
     store = str(tmp_path / "store")
     df = spark.createDataFrame([("a",), ("a",), ("b",)], "serial string")
     cells = cms_sketch(df)
-    _merge_cms_store(spark, store, cells, 0)
-    first = sorted(tuple(r) for r in read_cms_store(spark, store).collect())
-    _merge_cms_store(spark, store, cells, 0)  # replayed batch id
-    assert sorted(tuple(r) for r in read_cms_store(spark, store).collect()) == first
-    _merge_cms_store(spark, store, cells, 1)  # genuinely new batch
+    SP._merge_cms_store(store, cells, 0)
+    first = sorted(tuple(r) for r in SP.read_cms_store(spark, store).collect())
+    SP._merge_cms_store(store, cells, 0)  # replayed batch id
+    assert sorted(tuple(r) for r in SP.read_cms_store(spark, store).collect()) == first
+    assert SP.version_batch_id(SP.current_version_dir(store)) == 0
+    SP._merge_cms_store(store, cells, 1)  # genuinely new batch
     doubled = {
         (r.row_idx, r.col_idx): r.cell_count
-        for r in read_cms_store(spark, store).collect()
+        for r in SP.read_cms_store(spark, store).collect()
     }
     assert doubled == {
         (r.row_idx, r.col_idx): 2 * r.cell_count
@@ -1538,27 +1668,21 @@ def test_cms_store_ignores_uncommitted_version_dir(spark, tmp_path):
     """A v-dir without the CURRENT pointer swap (crash mid-write) must
     be invisible: reads resolve the committed version and a subsequent
     merge overwrites the leftover."""
-    import os as _os
-
     from telemetry_streaming_datalake_spark.operators.rollup import cms_sketch
-    from telemetry_streaming_datalake_spark.streaming.pipeline import (
-        _merge_cms_store,
-        read_cms_store,
-    )
 
     store = str(tmp_path / "store")
     df = spark.createDataFrame([("a",), ("b",)], "serial string")
     cells = cms_sketch(df)
-    _merge_cms_store(spark, store, cells, 0)
-    committed = sorted(tuple(r) for r in read_cms_store(spark, store).collect())
+    SP._merge_cms_store(store, cells, 0)
+    committed = sorted(tuple(r) for r in SP.read_cms_store(spark, store).collect())
     # simulate a crash: v1 data written, pointer never swapped
-    crash_dir = _os.path.join(store, "v1", "cells")
+    crash_dir = os.path.join(store, "v1", "cells")
     cells.write.mode("overwrite").parquet(crash_dir)
-    assert sorted(tuple(r) for r in read_cms_store(spark, store).collect()) == committed
-    _merge_cms_store(spark, store, cells, 1)  # recovery merge lands in v1
+    assert sorted(tuple(r) for r in SP.read_cms_store(spark, store).collect()) == committed
+    SP._merge_cms_store(store, cells, 1)  # recovery merge lands in v1
     assert {
         (r.row_idx, r.col_idx): r.cell_count
-        for r in read_cms_store(spark, store).collect()
+        for r in SP.read_cms_store(spark, store).collect()
     } == {(r.row_idx, r.col_idx): 2 * r.cell_count for r in cells.collect()}
 
 
@@ -1745,11 +1869,16 @@ def test_streaming_url_frontier_compaction_folds_and_bounds_store(
     state = sorted(
         d
         for d in os.listdir(str(tmp_path / "frontier_seen"))
-        if d.startswith(("batch=", "compacted_v="))
+        if d.startswith(("batch=", "compacted"))
     )
-    assert state == ["batch=4", "compacted_v=4"]
+    assert state == ["batch=4", "compacted"]
+    # one committed compacted version (plus the previous one kept for
+    # lazy readers), folded at batch 4
+    store = str(tmp_path / "frontier_seen" / "compacted")
+    comp = SP.current_version_dir(store)
+    assert SP.version_batch_id(comp) == 4
+    assert sorted(os.listdir(store)) == ["CURRENT", "v0", "v1"]
     # the compacted store is hive-bucketed for partition-pruned probes
-    comp = str(tmp_path / "frontier_seen" / "compacted_v=4")
     assert any(d.startswith("bucket=") for d in os.listdir(comp))
     # compacted + last delta together hold every admission exactly once
     delta = str(tmp_path / "frontier_seen" / "batch=4")
@@ -1791,9 +1920,11 @@ def test_streaming_paragraph_dedup_equals_batch_operator(spark, tmp_path):
     state = sorted(
         d
         for d in os.listdir(str(tmp_path / "para_seen"))
-        if d.startswith(("batch=", "compacted_v="))
+        if d.startswith(("batch=", "compacted"))
     )
-    assert state == ["batch=2", "compacted_v=2"]
+    assert state == ["batch=2", "compacted"]
+    comp = SP.current_version_dir(str(tmp_path / "para_seen" / "compacted"))
+    assert SP.version_batch_id(comp) == 2
 
 
 def test_streaming_paragraph_dedup_full_replay_is_idempotent(spark, tmp_path):
@@ -1813,8 +1944,8 @@ def test_streaming_url_frontier_replay_with_compaction_is_idempotent(
 ):
     """Checkpoint loss AFTER a compaction has folded (and deleted) the
     early delta dirs: every batch replays against the compacted store
-    and re-admits identical rows — the _SUCCESS guard skips the
-    re-fold whose inputs are gone."""
+    and re-admits identical rows — the fold's committed batch id skips
+    the re-fold whose inputs are gone."""
     first, second = _rerun_after_checkpoint_loss(
         spark,
         tmp_path,
@@ -1824,6 +1955,28 @@ def test_streaming_url_frontier_replay_with_compaction_is_idempotent(
         "frontier_ckpt",
     )
     assert first == second and len(first) > 0
+
+
+def test_streaming_url_frontier_replay_behind_a_later_fold_is_idempotent(
+    spark, tmp_path
+):
+    """Checkpoint loss after TWO folds (at batches 2 and 4): replayed
+    batch 2 finds the later fold current, so it skips its own fold and
+    must keep the re-landed deltas 0 and 1 — the probe reads every
+    delta then, and deleting them would re-admit their URLs."""
+    first, second = _rerun_after_checkpoint_loss(
+        spark,
+        tmp_path,
+        lambda: SP.streaming_url_frontier(
+            spark, SF_DIR, str(tmp_path), n_files=5, compact_every=2
+        ),
+        "frontier_ckpt",
+    )
+    comp = SP.current_version_dir(str(tmp_path / "frontier_seen" / "compacted"))
+    assert SP.version_batch_id(comp) == 4
+    assert first == second and len(first) > 0
+    admitted = spark.read.parquet(str(tmp_path / "frontier_admit"))
+    assert admitted.count() == admitted.select("canonical_url").distinct().count() == len(first)
 
 
 def test_seen_probe_is_partition_pruned_on_touched_buckets(spark, tmp_path):

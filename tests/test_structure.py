@@ -1,5 +1,5 @@
 """Structural guard: one stream-start primitive, one hop library, one
-pointer commit.
+commit protocol, one scratch owner.
 
 Every library streaming query starts through
 ``streaming.pipeline.start_stream`` (``drain`` is its availableNow
@@ -7,9 +7,12 @@ form), the only place the session's shuffle-partition count changes at
 runtime; every hop reads through ``streaming.pipeline.landing_stream``
 (the real broker reader aside) and dedups through ``bronze_dedup``;
 every versioned store commits through
-``streaming.sinks.publish_version``.  This test fails when a second
-``writeStream`` chain, ``readStream``, watermarked dedup, conf window
-or ``CURRENT`` writer appears.
+``streaming.sinks.publish_version``, which also owns the batch-id
+record that makes the additive stores exactly-once; the registry's
+work dirs come from ``session.scratch_dir``.  This test fails when a
+second ``writeStream`` chain, ``readStream``, watermarked dedup, conf
+window, ``CURRENT`` writer, batch-id ledger or marker-file commit
+appears, or when the registry makes its own temp dirs again.
 """
 
 from __future__ import annotations
@@ -80,3 +83,18 @@ def test_current_pointer_written_only_by_publish():
         ("streaming/sinks.py", "current_version_dir"),
         ("streaming/sinks.py", "publish_version"),
     }
+
+
+def test_batch_id_commits_only_with_the_version():
+    # the per-store ledgers and the seen store's marker-file commit are
+    # gone; the one batch-id record belongs to publish_version's module
+    assert _owners(_const("applied.json", "_SUCCESS", "compacted_v=")) == set()
+    assert _owners(_const("_batch_id")) == {("streaming/sinks.py", "")}
+
+
+def test_registry_makes_no_temp_dirs_of_its_own():
+    tree = ast.parse((PKG.parent / "__spark_entry__.py").read_text())
+    assert not [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr == "mkdtemp"
+    ]
