@@ -361,7 +361,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         # MinHash-index extend == rebuild as a driver key: the extended
         # index serves a probe whose oracle assumes a full-corpus
-        # rebuild (the ann_ivf_incremental / text-index precedent;
+        # rebuild (the extend_ivf_index / text-index precedent;
         # VERDICT r10 #8b)
         "dedup_index_incremental": lambda s, d: DD.dedup_index_incremental(s, d),
         # per-domain dup-rate x quality x token-share knob-pricing

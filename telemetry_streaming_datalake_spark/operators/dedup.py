@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from telemetry_streaming_datalake_spark.operators.derived import floor_round
+from telemetry_streaming_datalake_spark.session import load_table, scratch_cache
 
 # --------------------------------------------------------------------------
 # exact dedup
@@ -1022,26 +1023,6 @@ SELECT doc_b, doc_a, c_ba FROM scored WHERE c_ba >= {threshold}
 # incremental dedup: new batch vs a persisted corpus index
 # --------------------------------------------------------------------------
 
-#: module-level index cache — building per call would hide the very
-#: amortization the index exists for (same discipline as the IVF index).
-#: Keyed by (sf_dir, max doc_id, row count), NOT path alone: a corpus
-#: regenerated at the same path within the process (fuzz/driver reruns
-#: reusing a dir) must invalidate, or the probe silently reads a stale
-#: index while the oracle reads the fresh table (ADVICE r11).
-_DEDUP_INDEX_CACHE: dict[tuple, str] = {}
-
-
-def _corpus_cache_key(sf_dir: str, docs: DataFrame) -> tuple:
-    """(sf_dir, max doc_id, row count) — one bounded 1-row agg; cheap
-    relative to an index build and changes whenever the corpus does
-    (regeneration keeps neither cardinality nor the id ceiling by
-    construction of the test generator's seeds)."""
-    row = docs.agg(
-        F.max("doc_id").alias("mx"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    return (sf_dir, row.mx, row.n)
-
-
 def build_dedup_index(
     documents: DataFrame, index_dir: str, fp_cap: int = BUCKET_CAP
 ) -> str:
@@ -1100,13 +1081,14 @@ def extend_dedup_index(
     into a STAGING dir first (the live index is only read during that
     phase), then committed by moving part files into the live tables —
     so a failed Spark job leaves the index untouched and is safely
-    retryable.  The commit itself is two directory-local renames; only
-    a crash INSIDE that window (machine-level, not job-level) can
-    leave a half-applied extend, in which case rebuild from source —
-    do NOT re-run extend, appends are not idempotent."""
+    retryable.  The staging dir is ``_stage_<tag>`` inside
+    ``index_dir`` (readers never list ``_``-prefixed paths), so the
+    commit is directory-local renames on one filesystem; only a crash
+    INSIDE that window (machine-level, not job-level) can leave a
+    half-applied extend, in which case rebuild from source — do NOT
+    re-run extend, appends are not idempotent."""
     import glob as _glob
     import shutil
-    import tempfile
     import uuid
 
     base = _fingerprint_and_shingle_sets(new_docs)
@@ -1118,7 +1100,10 @@ def extend_dedup_index(
         .agg(F.count(F.lit(1)).alias("__have"))
     )
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    stage = tempfile.mkdtemp(prefix="tsdl_dedupext_stage_")
+    # one uuid tags the whole extend so a forensic read can attribute
+    # rows to the operation
+    tag = uuid.uuid4().hex
+    stage = os.path.join(index_dir, f"_stage_{tag}")
     (
         base.withColumn("__rn", F.row_number().over(w))
         .join(F.broadcast(existing), "fingerprint", "left")
@@ -1136,13 +1121,11 @@ def extend_dedup_index(
         .parquet(os.path.join(stage, "hashes"))
     )
     # commit: rename staged part files into the live tables (parquet
-    # readers take any non-underscore file).  One uuid tags the whole
-    # extend so a forensic read can attribute rows to the operation.
-    tag = uuid.uuid4().hex
+    # readers take any non-underscore file)
     for sub in ("fingerprints", "hashes"):
         parts = sorted(_glob.glob(os.path.join(stage, sub, "*.parquet")))
         for i, p in enumerate(parts):
-            shutil.move(
+            os.replace(
                 p, os.path.join(index_dir, sub, f"part-ext-{tag}-{i:05d}.parquet")
             )
     shutil.rmtree(stage, ignore_errors=True)
@@ -1262,26 +1245,14 @@ def incremental_dedup_against(
 def incremental_dedup(spark, sf_dir: str, threshold: float = 0.3) -> DataFrame:
     """Driver-checkable instantiation: even doc_ids are the indexed
     corpus, odd doc_ids the incoming batch."""
-    import tempfile
-
-    from telemetry_streaming_datalake_spark.session import load_table
-
     docs = load_table(spark, sf_dir, "documents")
-    key = _corpus_cache_key(sf_dir, docs)
-    if key not in _DEDUP_INDEX_CACHE:
-        d = tempfile.mkdtemp(prefix="tsdl_dedupidx_")
-        build_dedup_index(docs.filter(F.col("doc_id") % 2 == 0), d)
-        _DEDUP_INDEX_CACHE[key] = d
-    incoming = docs.filter(F.col("doc_id") % 2 == 1)
-    return incremental_dedup_against(
-        spark, _DEDUP_INDEX_CACHE[key], incoming, threshold
+    index_dir = scratch_cache(
+        "dedupidx",
+        os.path.join(sf_dir, "documents.parquet"),
+        lambda d: build_dedup_index(docs.filter(F.col("doc_id") % 2 == 0), d),
     )
-
-
-#: (sf_dir, max doc_id, row count) -> extended-index dir for
-#: dedup_index_incremental (corpus-fingerprint keying, see
-#: _DEDUP_INDEX_CACHE)
-_DEDUP_EXT_CACHE: dict[tuple, str] = {}
+    incoming = docs.filter(F.col("doc_id") % 2 == 1)
+    return incremental_dedup_against(spark, index_dir, incoming, threshold)
 
 
 def dedup_index_incremental(spark, sf_dir: str, threshold: float = 0.3) -> DataFrame:
@@ -1294,31 +1265,26 @@ def dedup_index_incremental(spark, sf_dir: str, threshold: float = 0.3) -> DataF
     extended index is content-identical to a from-scratch build over
     the full indexed set (pinned in pytest), so the probe rides a
     full-corpus oracle — one SQL relation certifies the extend path
-    AND the probe in a single driver row (the `ann_ivf_incremental` /
+    AND the probe in a single driver row (the `extend_ivf_index` /
     text-index extend==rebuild precedent)."""
-    import tempfile
-
-    from telemetry_streaming_datalake_spark.session import load_table
-
     docs = load_table(spark, sf_dir, "documents")
-    # one bounded 1-row agg, shared by the split point and the cache
-    # key (an empty corpus yields None — split at 0, everything lands
-    # in the batch)
-    key = _corpus_cache_key(sf_dir, docs)
-    half = (key[1] or 0) // 2
-    if key not in _DEDUP_EXT_CACHE:
-        d = tempfile.mkdtemp(prefix="tsdl_dedupext_")
+    # one bounded 1-row agg for the split point (an empty corpus yields
+    # None — split at 0, everything lands in the batch)
+    half = (docs.agg(F.max("doc_id")).first()[0] or 0) // 2
+
+    def build(d: str) -> None:
         build_dedup_index(docs.filter(F.col("doc_id") <= half), d)
         extend_dedup_index(
             spark,
             d,
             docs.filter((F.col("doc_id") > half) & (F.col("doc_id") % 2 == 0)),
         )
-        _DEDUP_EXT_CACHE[key] = d
-    incoming = docs.filter((F.col("doc_id") > half) & (F.col("doc_id") % 2 == 1))
-    return incremental_dedup_against(
-        spark, _DEDUP_EXT_CACHE[key], incoming, threshold
+
+    index_dir = scratch_cache(
+        "dedupext", os.path.join(sf_dir, "documents.parquet"), build
     )
+    incoming = docs.filter((F.col("doc_id") > half) & (F.col("doc_id") % 2 == 1))
+    return incremental_dedup_against(spark, index_dir, incoming, threshold)
 
 
 def dedup_index_incremental_oracle(threshold: float = 0.3) -> str:

@@ -24,6 +24,7 @@ wired in.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -40,6 +41,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from telemetry_streaming_datalake_spark.session import load_table, scratch_cache
 
 #: intensity-histogram bins for the feature extractor (byte // 16)
 FEATURE_BINS = 16
@@ -909,12 +912,6 @@ def _decode_png(payload: bytes) -> np.ndarray:
     return out.reshape(h, w, 3)
 
 
-#: (sf_dir, kind, max doc_id, row count) -> fixture dir of synthesized
-#: media payloads (corpus-fingerprint keying, the dedup-index cache
-#: discipline)
-_MEDIA_FIXTURE_CACHE: dict[tuple, str] = {}
-
-
 def media_payload_fixture(spark, sf_dir: str, kind: str) -> DataFrame:
     """Build-once fixture table of synthesized media payloads — the
     persisted-index precedent applied to the media synthesizers
@@ -929,22 +926,12 @@ def media_payload_fixture(spark, sf_dir: str, kind: str) -> DataFrame:
     In production the fixture step does not exist at all; it is test
     scaffolding standing in for real crawled media.  Correctness is
     unchanged: payloads are deterministic in the text, so the parquet
-    roundtrip is bit-exact (pytest-pinned)."""
-    import os
-    import tempfile
+    roundtrip is bit-exact (pytest-pinned).  The fixture is cached per
+    (kind, documents file identity) by ``session.scratch_cache``, which
+    reads no data: it writes none of the caller's confs."""
+    attach = {"png": attach_png_payload, "avi": attach_avi_payload}[kind]
 
-    from telemetry_streaming_datalake_spark.operators.dedup import (
-        _corpus_cache_key,
-    )
-    from telemetry_streaming_datalake_spark.session import load_table
-
-    # the key read is plain parquet (documents has no nano-timestamp
-    # column): it writes none of the caller's confs
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    key = (*_corpus_cache_key(sf_dir, docs), kind)
-    if key not in _MEDIA_FIXTURE_CACHE:
-        attach = {"png": attach_png_payload, "avi": attach_avi_payload}[kind]
-        d = tempfile.mkdtemp(prefix=f"tsdl_media_{kind}_")
+    def build(d: str) -> None:
         # whole-stage codegen fuses the synthesis Generates and their
         # projections into ONE generated method that trips Janino's
         # 64 KB limit — the stage then silently runs INTERPRETED
@@ -954,11 +941,12 @@ def media_payload_fixture(spark, sf_dir: str, kind: str) -> DataFrame:
         # runs with WSCG off and actually-compiled code, in its own
         # session (same context, own SQL conf; load_table re-applies
         # the required confs), so the caller's conf is never touched.
-        build = spark.newSession()
-        build.conf.set("spark.sql.codegen.wholeStage", "false")
-        attach(load_table(build, sf_dir, "documents")).write.mode("overwrite").parquet(d)
-        _MEDIA_FIXTURE_CACHE[key] = d
-    return spark.read.parquet(_MEDIA_FIXTURE_CACHE[key])
+        own = spark.newSession()
+        own.conf.set("spark.sql.codegen.wholeStage", "false")
+        attach(load_table(own, sf_dir, "documents")).write.mode("overwrite").parquet(d)
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    return spark.read.parquet(scratch_cache(f"media_{kind}", src, build))
 
 
 def png_pixels(documents: DataFrame, payloads: DataFrame | None = None) -> DataFrame:

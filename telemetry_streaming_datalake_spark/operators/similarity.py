@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from telemetry_streaming_datalake_spark.session import load_table, scratch_cache
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -1133,11 +1135,6 @@ GROUP BY cell, dim_idx
 # persisted IVF index (build once, probe many)
 # --------------------------------------------------------------------------
 
-#: module-level index cache: rebuilding per call would hide the very
-#: amortization the index exists to demonstrate (bucketed.py discipline)
-_IVF_INDEX_CACHE: dict[tuple[str, int], str] = {}
-
-
 def build_ivf_index(
     embeddings: DataFrame, index_dir: str, n_cells: int = IVF_CELLS
 ) -> str:
@@ -1181,21 +1178,19 @@ def ann_ivf_indexed(
     partitions (``cell IN (…)`` prunes at the parquet partition level
     — `tests/test_plans.py` pins the pushed partition filter).  Result
     is identical to :func:`ann_ivf_topk` (same deterministic seed
-    centroids), so it shares that key's SQL oracle.
+    centroids), so it shares that key's SQL oracle.  The index is
+    built once per (n_cells, embeddings file identity) by
+    ``session.scratch_cache``: rebuilding per call would hide the very
+    amortization the index exists to demonstrate.
     """
-    import tempfile
-
-    from telemetry_streaming_datalake_spark.session import load_table
-
     if query_ids is None:
         query_ids = list(range(8))
     embeddings = load_table(spark, sf_dir, "embeddings")
-    cache_key = (sf_dir, n_cells)
-    if cache_key not in _IVF_INDEX_CACHE:
-        d = tempfile.mkdtemp(prefix="tsdl_ivfidx_")
-        build_ivf_index(embeddings, d, n_cells)
-        _IVF_INDEX_CACHE[cache_key] = d
-    index_dir = _IVF_INDEX_CACHE[cache_key]
+    index_dir = scratch_cache(
+        f"ivfidx_{n_cells}",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        lambda d: build_ivf_index(embeddings, d, n_cells),
+    )
     return probe_ivf_index(
         spark, index_dir, embeddings, query_ids, k, nprobe, round_to
     )
@@ -1258,9 +1253,6 @@ def probe_ivf_index(
 # --------------------------------------------------------------------------
 # IVF + int8 quantized posting lists (FAISS IVF-PQ regime, SQ8 codes)
 # --------------------------------------------------------------------------
-
-_IVFPQ_INDEX_CACHE: dict[tuple[str, int], str] = {}
-
 
 #: trained-PQ codebook geometry: per-dimension 1-D codebooks at the
 #: SAME byte budget as SQ8 (one code byte per dimension) — the regime
@@ -1594,21 +1586,16 @@ def ann_ivfpq(
 ) -> DataFrame:
     """Build-once/probe-many entry for the quantized IVF index (the
     `ann_ivf_indexed` pattern over int8 posting lists)."""
-    import tempfile
-
-    from telemetry_streaming_datalake_spark.session import load_table
-
     if query_ids is None:
         query_ids = list(range(8))
     embeddings = load_table(spark, sf_dir, "embeddings")
-    cache_key = (sf_dir, n_cells)
-    if cache_key not in _IVFPQ_INDEX_CACHE:
-        d = tempfile.mkdtemp(prefix="tsdl_ivfpq_")
-        build_ivfpq_index(embeddings, d, n_cells)
-        _IVFPQ_INDEX_CACHE[cache_key] = d
+    index_dir = scratch_cache(
+        f"ivfpq_{n_cells}",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        lambda d: build_ivfpq_index(embeddings, d, n_cells),
+    )
     return probe_ivfpq_index(
-        spark, _IVFPQ_INDEX_CACHE[cache_key], embeddings, query_ids, k, nprobe,
-        round_to,
+        spark, index_dir, embeddings, query_ids, k, nprobe, round_to
     )
 
 
@@ -1951,9 +1938,6 @@ FROM fused ORDER BY rrf_score DESC, doc_id LIMIT {k}
 # incremental IVF index maintenance
 # --------------------------------------------------------------------------
 
-_IVF_INCR_CACHE: dict = {}
-
-
 def extend_ivf_index(spark: SparkSession, index_dir: str, new_embeddings: DataFrame) -> str:
     """Add a batch of vectors to a persisted IVF index WITHOUT
     rebuilding: assign against the FROZEN centroid table (the standard
@@ -1979,44 +1963,6 @@ def extend_ivf_index(spark: SparkSession, index_dir: str, new_embeddings: DataFr
         .parquet(os.path.join(index_dir, "cells"))
     )
     return index_dir
-
-
-def ann_ivf_incremental(
-    spark: SparkSession,
-    sf_dir: str,
-    query_ids: list[int] | None = None,
-    k: int = 5,
-    n_cells: int = IVF_CELLS,
-    nprobe: int = IVF_NPROBE,
-) -> DataFrame:
-    """Driver-checkable instantiation of build-then-extend: the index
-    builds on the slice holding every centroid seed (vec_id < n_cells
-    plus the even ids), the odd tail arrives later as an increment —
-    and because centroids are FROZEN at build, the extended index is
-    file-identical in content to a from-scratch build over the full
-    corpus, so probing it shares ``ann_ivf``'s SQL oracle verbatim."""
-    import tempfile
-
-    from telemetry_streaming_datalake_spark.session import load_table
-
-    if query_ids is None:
-        query_ids = list(range(8))
-    embeddings = load_table(spark, sf_dir, "embeddings")
-    cache_key = (sf_dir, n_cells)
-    if cache_key not in _IVF_INCR_CACHE:
-        d = tempfile.mkdtemp(prefix="tsdl_ivfincr_")
-        initial = embeddings.filter(
-            (F.col("vec_id") < n_cells) | (F.col("vec_id") % 2 == 0)
-        )
-        increment = embeddings.filter(
-            (F.col("vec_id") >= n_cells) & (F.col("vec_id") % 2 == 1)
-        )
-        build_ivf_index(initial, d, n_cells)
-        extend_ivf_index(spark, d, increment)
-        _IVF_INCR_CACHE[cache_key] = d
-    return probe_ivf_index(
-        spark, _IVF_INCR_CACHE[cache_key], embeddings, query_ids, k, nprobe
-    )
 
 
 # --------------------------------------------------------------------------

@@ -1,4 +1,5 @@
-"""SparkSession factory and table loaders.
+"""SparkSession factory, table loaders, scratch dirs and build-once
+caches.
 
 Scale notes
 -----------
@@ -14,6 +15,11 @@ TIMESTAMP(NANOS), which vanilla Spark refuses to read
 them to LongType nanoseconds; :func:`load_table` then converts to
 proper TimestampType via exact integer division (no float path, so
 second/micro boundaries are never off by one).
+
+Every library work dir is a :func:`scratch_dir` under one per-process
+root that is removed at exit; every build-once artifact (index,
+fixture, staged split) is a :func:`scratch_cache` dir, keyed by the
+file identity of the table it was built from.
 """
 
 from __future__ import annotations
@@ -22,6 +28,7 @@ import atexit
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,6 +90,43 @@ def scratch_dir(prefix: str) -> str:
         _SCRATCH_ROOT = tempfile.mkdtemp(prefix=f"tsdl_{os.getpid()}_")
         atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+
+
+def _src_fingerprint(src: str) -> tuple:
+    """Zero-job identity of a parquet source (file or directory):
+    realpath + per-file (name, size, mtime_ns) — changes whenever the
+    data does."""
+    if os.path.isfile(src):
+        st = os.stat(src)
+        return (os.path.realpath(src), st.st_size, st.st_mtime_ns)
+    parts = []
+    for root, _dirs, names in os.walk(src):
+        for n in sorted(names):
+            if n.endswith(".parquet"):
+                st = os.stat(os.path.join(root, n))
+                parts.append((n, st.st_size, st.st_mtime_ns))
+    return (os.path.realpath(src), tuple(parts))
+
+
+#: (key, source fingerprint) → scratch dir a build filled
+_SCRATCH_BUILT: dict[tuple, str] = {}
+
+
+def scratch_cache(key: str, src: str, build: Callable[[str], object]) -> str:
+    """Build-once work dir for an artifact derived from the parquet
+    source ``src`` (an index, a fixture, a staged split): the first
+    call for ``(key, src's file identity)`` runs ``build(d)`` into a
+    fresh :func:`scratch_dir` and later calls return that dir.  A
+    source rewritten in place has a new identity, so it rebuilds
+    instead of probing a stale artifact.  The dir is recorded only
+    after ``build`` returns: a build that raises is retried."""
+    k = (key, _src_fingerprint(src))
+    d = _SCRATCH_BUILT.get(k)
+    if d is None or not os.path.isdir(d):
+        d = scratch_dir(f"{key}_")
+        build(d)
+        _SCRATCH_BUILT[k] = d
+    return d
 
 
 def _ensure_confs(spark: SparkSession) -> None:

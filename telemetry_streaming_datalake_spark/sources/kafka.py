@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from telemetry_streaming_datalake_spark.ingest.bronze import parse_bronze
+from telemetry_streaming_datalake_spark.session import scratch_dir
 from telemetry_streaming_datalake_spark.sources.textfeeds import (
     EVENT_WIRE_SCHEMA,
     stage_events_jsonl,
@@ -167,11 +168,9 @@ def bronze_from_kafka_analog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable full path: stage → wire-schema stream → value
     parse → bronze, drained availableNow.  Must equal ``bronze_parse``
     on the parquet source row-for-row (oracle = BRONZE_PARSE_ORACLE)."""
-    import tempfile
-
     from telemetry_streaming_datalake_spark.streaming.pipeline import drain
 
-    work = tempfile.mkdtemp(prefix="tsdl_kafka_")
+    work = scratch_dir("kafka_")
     wire = file_analog_wire_stream(spark, sf_dir, work)
     bronze = wire_to_bronze(wire)
     out = os.path.join(work, "bronze_out")

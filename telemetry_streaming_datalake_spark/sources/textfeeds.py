@@ -18,13 +18,12 @@ the one codegen stage `parse_bronze` already occupies.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from telemetry_streaming_datalake_spark.ingest.bronze import parse_bronze
-from telemetry_streaming_datalake_spark.session import load_table
+from telemetry_streaming_datalake_spark.session import load_table, scratch_dir
 
 #: explicit wire schema of one feed record (ts as epoch micros — the
 #: integer transport every log shipper uses; no string-format ambiguity)
@@ -51,7 +50,7 @@ def stage_events_jsonl(spark: SparkSession, sf_dir: str, work_dir: str | None = 
     """Serialize the events feed as newline-delimited JSON records —
     the Kafka-topic stand-in (one JSON document per line, the nested
     ``props`` JSON string escaped inside it)."""
-    out = os.path.join(work_dir or tempfile.mkdtemp(prefix="tsdl_jsonl_"), "events_jsonl")
+    out = os.path.join(work_dir or scratch_dir("jsonl_"), "events_jsonl")
     _wire_frame(spark, sf_dir).select(
         F.to_json(F.struct("event_id", "ts_us", "user_id", "event_type", "value", "props")).alias(
             "value"
@@ -86,7 +85,7 @@ def bronze_from_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stage_events_csv(spark: SparkSession, sf_dir: str, work_dir: str | None = None) -> str:
     """Serialize the feed as quoted CSV (``props`` carries commas and
     quotes — exercises the quoting/escape path)."""
-    out = os.path.join(work_dir or tempfile.mkdtemp(prefix="tsdl_csv_"), "events_csv")
+    out = os.path.join(work_dir or scratch_dir("csv_"), "events_csv")
     _wire_frame(spark, sf_dir).write.mode("overwrite").option("header", "true").option(
         "escape", '"'
     ).csv(out)
@@ -126,7 +125,7 @@ def bronze_from_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stage_events_orc(spark: SparkSession, sf_dir: str, work_dir: str | None = None) -> str:
     """Serialize the feed as ORC — the second first-class columnar
     format a lake ingests (Hive-ecosystem drops arrive as ORC)."""
-    out = os.path.join(work_dir or tempfile.mkdtemp(prefix="tsdl_orc_"), "events_orc")
+    out = os.path.join(work_dir or scratch_dir("orc_"), "events_orc")
     _wire_frame(spark, sf_dir).write.mode("overwrite").orc(out)
     return out
 

@@ -19,19 +19,18 @@ strategy never changes the relation).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from telemetry_streaming_datalake_spark.session import load_table
+from telemetry_streaming_datalake_spark.session import load_table, scratch_dir
 from telemetry_streaming_datalake_spark.operators.derived import floor_round
 
 N_BUCKETS = 8
 
 #: database LOCATION is pinned on first CREATE, so later calls must reuse
-#: the same dir instead of minting a fresh mkdtemp that the catalog then
-#: ignores (ADVICE r5: one leaked temp dir per bench+crosscheck call)
+#: the same dir instead of minting a fresh scratch dir that the catalog
+#: then ignores (ADVICE r5: one leaked temp dir per bench+crosscheck call)
 _WORK_DIR: str | None = None
 
 #: sf_dir whose snapshot currently backs the tables — a repeat call for
@@ -48,7 +47,7 @@ def setup_bucketed_tables(
     db = "tsdl_bucketed"
     if work_dir is None:
         if _WORK_DIR is None:
-            _WORK_DIR = tempfile.mkdtemp(prefix="tsdl_bucket_")
+            _WORK_DIR = scratch_dir("bucket_")
         loc = _WORK_DIR
         if _LOADED_FOR == sf_dir and spark.catalog.tableExists(
             f"{db}.events_bucketed"

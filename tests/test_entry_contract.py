@@ -129,8 +129,10 @@ def test_rotation_helper_orders_stalest_first():
 
 
 def test_registry_work_dirs_are_removed_at_exit(tmp_path):
-    """Registry streaming keys run in work dirs under one per-process
-    scratch root in TMPDIR: a process that ran two of them made that
+    """Registry streaming keys and every build-once cache family
+    (frontier split, media fixture, dedup index, text index, IVF
+    index) run in work dirs under one per-process scratch root in
+    TMPDIR: a process that ran them made exactly that one ``tsdl_*``
     root, and after it exits no ``tsdl_*`` entry is left."""
     import os
     import subprocess
@@ -138,14 +140,20 @@ def test_registry_work_dirs_are_removed_at_exit(tmp_path):
 
     tmp = tmp_path / "tmp"
     tmp.mkdir()
+    keys = (
+        "streaming_grouping_sets", "streaming_freq_sketch",
+        "streaming_url_frontier", "png_meta", "incremental_dedup",
+        "bm25_indexed", "ann_ivf_indexed",
+    )
     code = (
         "import os, tempfile\n"
         "import __spark_entry__ as E\n"
         "from telemetry_streaming_datalake_spark.session import get_spark\n"
         "s = get_spark('scratch-check')\n"
-        "for k in ('streaming_grouping_sets', 'streaming_freq_sketch'):\n"
-        f"    assert E.queries()[k](s, {SF!r}).count() > 0\n"
-        "assert any(n.startswith('tsdl_') for n in os.listdir(tempfile.gettempdir()))\n"
+        f"for k in {keys!r}:\n"
+        f"    assert E.queries()[k](s, {SF!r}).count() > 0, k\n"
+        "roots = [n for n in os.listdir(tempfile.gettempdir()) if n.startswith('tsdl_')]\n"
+        "assert len(roots) == 1, roots\n"
     )
     env = dict(
         os.environ, TMPDIR=str(tmp), SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g"

@@ -1809,7 +1809,7 @@ def test_ivfpq_codes_int8_reconstruction_bounded(spark, tmp_path, embeddings):
         assert np.all(np.abs(v - recon) <= np.abs(v).max() / 254 + 1e-12)
 
 
-def test_ivfpq_ranking_tracks_full_precision_ivf(spark, embeddings):
+def test_ivfpq_ranking_tracks_full_precision_ivf(spark, embeddings, tmp_path):
     """Asymmetric int8 scoring is an approximation of the exact-cosine
     IVF probe over the SAME cells — recall@5 against it stays high
     (int8 perturbs cosines by ~1e-3; only near-ties can reorder)."""
@@ -1818,9 +1818,7 @@ def test_ivfpq_ranking_tracks_full_precision_ivf(spark, embeddings):
         (r.query_id, r.vec_id)
         for r in SIM.ann_ivf_topk(embeddings, qids, k=5).collect()
     }
-    import tempfile
-
-    idx = tempfile.mkdtemp(prefix="tsdl_pqtest_")
+    idx = str(tmp_path)
     SIM.build_ivfpq_index(embeddings, idx, SIM.IVF_CELLS)
     approx = {
         (r.query_id, r.vec_id)
@@ -1829,15 +1827,13 @@ def test_ivfpq_ranking_tracks_full_precision_ivf(spark, embeddings):
     assert len(approx & exact) / len(exact) >= 0.8
 
 
-def test_ivfpq_rerank_equals_full_precision_ivf(spark, embeddings):
+def test_ivfpq_rerank_equals_full_precision_ivf(spark, embeddings, tmp_path):
     """The refine stage's correctness contract: with rerank >= the
     probed-candidate count, exact re-scoring of the code-selected
     shortlist must equal the full-precision IVF probe row-for-row
     (same cells, same exact cosine, same tie-break)."""
-    import tempfile
-
     qids = list(range(8))
-    idx = tempfile.mkdtemp(prefix="tsdl_pqrr_")
+    idx = str(tmp_path)
     SIM.build_ivfpq_index(embeddings, idx, SIM.IVF_CELLS)
     got = sorted(
         tuple(r)
@@ -1876,16 +1872,14 @@ def test_trained_pq_beats_sq8_reconstruction_at_equal_bytes(spark, embeddings):
     assert mse_pq < mse_sq8
 
 
-def test_trained_pq_probe_tracks_full_precision_ivf(spark, embeddings):
+def test_trained_pq_probe_tracks_full_precision_ivf(spark, embeddings, tmp_path):
     """The trained-codebook index probes through the SAME layout
     (code column + reconstruction expression swapped) and its ranking
     tracks the full-precision IVF probe at least as well as SQ8's
     documented floor."""
-    import tempfile
-
     qids = list(range(8))
     books = SIM.train_pq_codebooks(embeddings)
-    idx = tempfile.mkdtemp(prefix="tsdl_pqtrained_")
+    idx = str(tmp_path)
     SIM.build_ivfpq_index(embeddings, idx, SIM.IVF_CELLS, codebooks=books)
     exact = {
         (r.query_id, r.vec_id)

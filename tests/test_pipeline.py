@@ -340,6 +340,7 @@ def test_png_container_roundtrip_and_crc_validation(spark):
     the IDAT body is CAUGHT by the CRC check."""
     import hashlib
 
+    from telemetry_streaming_datalake_spark import session as S
     from telemetry_streaming_datalake_spark.operators import multimodal as MM
 
     docs = spark.createDataFrame(
@@ -378,6 +379,7 @@ def test_avi_container_roundtrip_index_and_codec_seam(spark):
     import hashlib
     import struct
 
+    from telemetry_streaming_datalake_spark import session as S
     from telemetry_streaming_datalake_spark.operators import multimodal as MM
 
     docs = spark.createDataFrame(
@@ -452,6 +454,7 @@ def test_media_payload_fixture_roundtrip_bit_exact(spark):
     operator, not the fixture factory) is a parquet roundtrip of the
     inline synthesizer — payload bytes bit-exact per doc, for both
     container kinds, and the cache serves the same dir on re-call."""
+    from telemetry_streaming_datalake_spark import session as S
     from telemetry_streaming_datalake_spark.operators import multimodal as MM
     from telemetry_streaming_datalake_spark.session import load_table
 
@@ -480,6 +483,7 @@ def test_media_payload_fixture_build_never_writes_caller_conf(spark, monkeypatch
     query on the caller's session never runs with WSCG off."""
     from pyspark.sql.conf import RuntimeConfig
 
+    from telemetry_streaming_datalake_spark import session as S
     from telemetry_streaming_datalake_spark.operators import multimodal as MM
     from tests.conftest import SF_DIR
 
@@ -498,7 +502,7 @@ def test_media_payload_fixture_build_never_writes_caller_conf(spark, monkeypatch
 
     monkeypatch.setattr(RuntimeConfig, "set", spy_set)
     monkeypatch.setattr(RuntimeConfig, "unset", spy_unset)
-    monkeypatch.setattr(MM, "_MEDIA_FIXTURE_CACHE", {})
+    monkeypatch.setattr(S, "_SCRATCH_BUILT", {})
     assert MM.media_payload_fixture(spark, SF_DIR, "png").count() > 0
-    assert len(MM._MEDIA_FIXTURE_CACHE) == 1  # a cold build ran
+    assert len(S._SCRATCH_BUILT) == 1  # a cold build ran
     assert writes == []

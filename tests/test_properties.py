@@ -652,6 +652,7 @@ def test_text_index_extend_equals_rebuild_random_split(spark, texts, cut):
     """Random corpus, random split point: an index built on the prefix
     then extended with the suffix must answer a probe EXACTLY like a
     from-scratch build over everything (append-additive tf/dl/df/N)."""
+    import os
     import tempfile
 
     from telemetry_streaming_datalake_spark.operators import text as TX
@@ -661,20 +662,22 @@ def test_text_index_extend_equals_rebuild_random_split(spark, texts, cut):
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
     terms = ("x", "yz")
 
-    inc = tempfile.mkdtemp(prefix="tsdl_prop_i_")
-    TX.build_text_index(docs.filter(F.col("doc_id") < cut), inc)
-    TX.extend_text_index(inc, docs.filter(F.col("doc_id") >= cut))
-    full = tempfile.mkdtemp(prefix="tsdl_prop_f_")
-    TX.build_text_index(docs, full)
+    # per example, not per test: tmp_path would be shared by every
+    # Hypothesis example
+    with tempfile.TemporaryDirectory() as tmp:
+        inc, full = os.path.join(tmp, "i"), os.path.join(tmp, "f")
+        TX.build_text_index(docs.filter(F.col("doc_id") < cut), inc)
+        TX.extend_text_index(inc, docs.filter(F.col("doc_id") >= cut))
+        TX.build_text_index(docs, full)
 
-    got = [
-        tuple(r)
-        for r in TX.bm25_from_index(spark, inc, terms=terms, k=10).collect()
-    ]
-    want = [
-        tuple(r)
-        for r in TX.bm25_from_index(spark, full, terms=terms, k=10).collect()
-    ]
+        got = [
+            tuple(r)
+            for r in TX.bm25_from_index(spark, inc, terms=terms, k=10).collect()
+        ]
+        want = [
+            tuple(r)
+            for r in TX.bm25_from_index(spark, full, terms=terms, k=10).collect()
+        ]
     assert got == want
 
 

@@ -164,11 +164,9 @@ def test_kafka_writer_option_contract():
     }
 
 
-def test_kafka_wire_analog_matches_batch_bronze(spark):
+def test_kafka_wire_analog_matches_batch_bronze(spark, tmp_path):
     """The file analog emits the true kafka wire schema and the value
     parse lands bronze identical to the parquet path."""
-    import tempfile
-
     from telemetry_streaming_datalake_spark.ingest import bronze as B
     from telemetry_streaming_datalake_spark.session import load_table
     from telemetry_streaming_datalake_spark.sources import kafka as K
@@ -179,8 +177,7 @@ def test_kafka_wire_analog_matches_batch_bronze(spark):
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
     # the wire frame itself carries the format("kafka") schema
-    work = tempfile.mkdtemp(prefix="tsdl_kwire_")
-    wire = K.file_analog_wire_stream(spark, "/root/testdata/sf0.001", work)
+    wire = K.file_analog_wire_stream(spark, "/root/testdata/sf0.001", str(tmp_path))
     assert [f.name for f in wire.schema.fields] == [
         "key", "value", "topic", "partition", "offset", "timestamp", "timestampType",
     ]

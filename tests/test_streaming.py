@@ -804,17 +804,16 @@ def test_runner_feed_publishes_atomically(tmp_path, monkeypatch):
     assert not any(n.startswith(("_", ".")) for n in landed)
 
 
-def test_always_on_runner_three_concurrent_queries(spark):
+def test_always_on_runner_three_concurrent_queries(spark, tmp_path):
     """VERDICT r5 item 6: ≥3 concurrent named ProcessingTime queries,
     files fed while running, progress observed on every hop, clean
     stop.  The drained gold lake must carry the batch row count."""
     import os
-    import tempfile
 
     from telemetry_streaming_datalake_spark.streaming import runner as RN
 
     sf = "/root/testdata/sf0.001"
-    work = tempfile.mkdtemp(prefix="tsdl_runner_")
+    work = str(tmp_path)
     r = RN.AlwaysOnRunner(spark, sf, work, trigger_interval="500 milliseconds")
     try:
         qs = r.start()
@@ -856,12 +855,10 @@ def test_always_on_runner_three_concurrent_queries(spark):
     )
 
 
-def test_serving_store_interface_replay_idempotency(spark):
+def test_serving_store_interface_replay_idempotency(spark, tmp_path):
     """VERDICT r5 item 9: the extracted writer contract — a replayed
     batch_id (post-recovery re-delivery) leaves any conforming store
     unchanged.  Proven on the fake KV client AND the parquet store."""
-    import tempfile
-
     from telemetry_streaming_datalake_spark.streaming import sinks as SK
 
     batch0 = spark.createDataFrame(
@@ -879,9 +876,7 @@ def test_serving_store_interface_replay_idempotency(spark):
     assert kv.data == after
     assert kv.apply_calls == 3
 
-    pq = SK.ParquetUpsertStore(
-        spark, tempfile.mkdtemp(prefix="tsdl_pqstore_") + "/store", key="id"
-    )
+    pq = SK.ParquetUpsertStore(spark, str(tmp_path / "store"), key="id")
     pq.apply_batch(batch0, 0)
     pq.apply_batch(batch1, 1)
     want = sorted((r.id, r.v) for r in pq.read().collect())
@@ -890,14 +885,13 @@ def test_serving_store_interface_replay_idempotency(spark):
     assert dict(want)["b"] == 9.0
 
 
-def test_always_on_runner_restart_recovery_exactly_once(spark, monkeypatch):
+def test_always_on_runner_restart_recovery_exactly_once(spark, monkeypatch, tmp_path):
     """Checkpoint recovery: stop the topology, start a NEW runner on
     the same work dir, re-feed the SAME records — the restored
     watermark-dedup state must drop every duplicate, leaving bronze
     exactly-once.  This is the recovery contract the reference's
     checkpointLocation exists for."""
     import os
-    import tempfile
     import time
 
     from telemetry_streaming_datalake_spark.ingest import bronze as B
@@ -905,7 +899,7 @@ def test_always_on_runner_restart_recovery_exactly_once(spark, monkeypatch):
     from telemetry_streaming_datalake_spark.streaming import runner as RN
 
     sf = "/root/testdata/sf0.001"
-    work = tempfile.mkdtemp(prefix="tsdl_runner2_")
+    work = str(tmp_path)
     want = B.dedup_exact(B.parse_bronze(load_table(spark, sf, "events"))).count()
 
     def first_read_state_parts(runner):

@@ -8,11 +8,12 @@ runtime; every hop reads through ``streaming.pipeline.landing_stream``
 (the real broker reader aside) and dedups through ``bronze_dedup``;
 every versioned store commits through
 ``streaming.sinks.publish_version``, which also owns the batch-id
-record that makes the additive stores exactly-once; the registry's
-work dirs come from ``session.scratch_dir``.  This test fails when a
-second ``writeStream`` chain, ``readStream``, watermarked dedup, conf
-window, ``CURRENT`` writer, batch-id ledger or marker-file commit
-appears, or when the registry makes its own temp dirs again.
+record that makes the additive stores exactly-once; every work dir
+comes from ``session.scratch_dir`` and every build-once dir from
+``session.scratch_cache``.  This test fails when a second
+``writeStream`` chain, ``readStream``, watermarked dedup, conf window,
+``CURRENT`` writer, batch-id ledger, marker-file commit, temp-dir
+maker or module-level dir cache appears.
 """
 
 from __future__ import annotations
@@ -48,6 +49,25 @@ def _attr(name):
 
 def _const(*values):
     return lambda n: isinstance(n, ast.Constant) and n.value in values
+
+
+def _imports(module):
+    return lambda n: (
+        isinstance(n, ast.Import) and any(a.name == module for a in n.names)
+    ) or (isinstance(n, ast.ImportFrom) and n.module == module)
+
+
+def _binds_name_ending(suffix):
+    def pred(n):
+        if isinstance(n, ast.Assign):
+            targets = n.targets
+        elif isinstance(n, ast.AnnAssign):
+            targets = [n.target]
+        else:
+            return False
+        return any(isinstance(t, ast.Name) and t.id.endswith(suffix) for t in targets)
+
+    return pred
 
 
 def test_one_stream_start_primitive():
@@ -90,6 +110,14 @@ def test_batch_id_commits_only_with_the_version():
     # gone; the one batch-id record belongs to publish_version's module
     assert _owners(_const("applied.json", "_SUCCESS", "compacted_v=")) == set()
     assert _owners(_const("_batch_id")) == {("streaming/sinks.py", "")}
+
+
+def test_one_scratch_owner():
+    # every library work dir comes from scratch_dir, every build-once
+    # dir from scratch_cache; the expression cache is in-memory only
+    assert _owners(_attr("mkdtemp")) == {("session.py", "scratch_dir")}
+    assert _owners(_imports("tempfile")) == {("session.py", "")}
+    assert _owners(_binds_name_ending("_CACHE")) == {("operators/exprcache.py", "")}
 
 
 def test_registry_makes_no_temp_dirs_of_its_own():

@@ -30,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from telemetry_streaming_datalake_spark.session import get_spark, load_table
+from telemetry_streaming_datalake_spark.session import get_spark, load_table, scratch_dir
 from telemetry_streaming_datalake_spark import datamodel as dm
 from telemetry_streaming_datalake_spark.ingest import bronze as B
 from telemetry_streaming_datalake_spark.ingest import silver as S
@@ -49,8 +49,6 @@ from telemetry_streaming_datalake_spark.operators import similarity as SIM
 from telemetry_streaming_datalake_spark.operators import skew as SKW
 from telemetry_streaming_datalake_spark.operators import web as WB
 from telemetry_streaming_datalake_spark.streaming import pipeline as SP
-
-import tempfile
 
 #: same cutoff the driver key uses (mid-corpus)
 MERGE_CUTOFF_UNIX = 1705276800
@@ -233,13 +231,13 @@ def queries():
             load_table(s, d, "documents")
         ),
         "streaming_url_frontier": lambda s, d: SP.streaming_url_frontier(
-            s, d, tempfile.mkdtemp(prefix="sc_frontier_")
+            s, d, scratch_dir("sc_frontier_")
         ),
         "streaming_web_ingest": lambda s, d: SP.streaming_web_ingest(
-            s, d, tempfile.mkdtemp(prefix="sc_webingest_")
+            s, d, scratch_dir("sc_webingest_")
         ),
         "streaming_change_feed": lambda s, d: SP.streaming_change_feed(
-            s, d, tempfile.mkdtemp(prefix="sc_changefeed_")
+            s, d, scratch_dir("sc_changefeed_")
         ),
         "gapfill_hourly": lambda s, d: DV.gapfill_hourly(
             B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
@@ -526,9 +524,7 @@ def incremental_dedup_production_shape(spark, out_dir: str) -> dict:
     tracks the 10x increment growth or less — index size never enters
     the per-batch cost.  (The standard scale row above grows BOTH
     sides, which conflates candidate growth with index growth.)"""
-    import tempfile
-
-    idx = tempfile.mkdtemp(prefix="tsdl_prodidx_")
+    idx = scratch_dir("prodidx_")
     big_docs = load_table(spark, out_dir, "documents")
     DD.build_dedup_index(big_docs.filter(F.col("doc_id") % 2 == 0), idx)
 
