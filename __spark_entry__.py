@@ -37,7 +37,6 @@ from telemetry_streaming_datalake_spark.operators import text as TX
 from telemetry_streaming_datalake_spark.operators import web as WB
 from telemetry_streaming_datalake_spark.operators import derived as DV
 from telemetry_streaming_datalake_spark.queries import tpch as Q
-from telemetry_streaming_datalake_spark.sources import textfeeds as TF
 from telemetry_streaming_datalake_spark.storage import stats as ST
 from telemetry_streaming_datalake_spark.storage import bucketed as BK
 from telemetry_streaming_datalake_spark.storage import versioned as VS
@@ -409,8 +408,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # WARC/1.0 record walk with octet-verified Content-Length
         # (funded by retiring `bronze_kafka` -> `bronze_parse`, whose
         # oracle it shared verbatim — the bronze_orc/csv/jsonl
-        # connector-twin precedent; the kafka analog + its
-        # byte-identity pytest remain in sources/)
+        # connector-twin precedent)
         "warc_extract": lambda s, d: WB.warc_extract(
             load_table(s, d, "documents")
         ),
@@ -443,9 +441,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # crawl frontier AS A STREAM: persisted cross-batch seen-store,
         # LEFT ANTI per batch (funded by retiring
         # `streaming_publish_jsonl` -> `streaming_silver_dedup`, whose
-        # dedup oracle it shared verbatim; the publish sink round-trip
-        # is pinned at tests/test_streaming.py
-        # `test_streaming_publish_jsonl_roundtrip_equals_batch_dedup`)
+        # dedup oracle it shared verbatim)
         "streaming_url_frontier": _in_scratch(SP.streaming_url_frontier),
         # the WHOLE web front door drained as a stream: frontier ->
         # robots -> WARC parse -> extraction over the PARSED body ->
@@ -487,8 +483,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # model-based language ID with a shipped char-bigram log-odds
         # artifact (funded by retiring the stopword-heuristic `lang_id`
         # key — the tokenize_bpe -> tokenize_fixed_vocab
-        # strictly-stronger-replacement precedent; the heuristic
-        # operator + its pytest remain as the zero-artifact fallback)
+        # strictly-stronger-replacement precedent)
         "lang_id_model": lambda s, d: TX.lang_id_model(load_table(s, d, "documents")),
         # real RIFF/AVI container walk with verified idx1 seek index
         # (funded by retiring the batch `cusum_changepoint` key —

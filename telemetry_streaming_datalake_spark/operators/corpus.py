@@ -11,8 +11,6 @@ decontamination join is dimension-sized and broadcast.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

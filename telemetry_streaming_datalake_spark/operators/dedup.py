@@ -73,27 +73,6 @@ GROUP BY ALL
 #: signature length and banding (16 bands × 8 rows → catches J≳0.75)
 MINHASH_K = 128
 LSH_BANDS = 16
-LSH_ROWS = MINHASH_K // LSH_BANDS
-
-
-def shingles(col, n: int = 5):
-    """Character n-gram shingle array of the normalized text (distinct).
-
-    ``transform(sequence(...))`` keeps shingling JVM-side; substring is
-    1-indexed.  Width-5 char shingles are the standard choice for
-    near-dup detection on web text.
-
-    NOTE: array form, interpreted (higher-order functions are
-    CodegenFallback) — fine for small frames/tests; the hot path uses
-    :func:`exploded_shingles` instead.
-    """
-    norm = normalize_text(col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(1))),
-            lambda i: norm.substr(i, F.lit(n)),
-        )
-    )
 
 
 def exploded_shingles(documents: DataFrame, n: int = 5) -> DataFrame:
@@ -125,17 +104,6 @@ def exploded_shingles(documents: DataFrame, n: int = 5) -> DataFrame:
     )
     return spread.select("doc_id", "norm", pos.alias("i")).select(
         "doc_id", F.col("norm").substr(F.col("i"), F.lit(n)).alias("s")
-    )
-
-
-def hashed_shingle_sets(documents: DataFrame, n: int = 5) -> DataFrame:
-    """Per-doc distinct shingle-hash set (array<long>), built with
-    ``collect_set`` over the exploded codegen path — the compact form
-    for exact Jaccard (long compares, small shuffle payload)."""
-    return (
-        exploded_shingles(documents, n)
-        .groupBy("doc_id")
-        .agg(F.collect_set(F.xxhash64("s")).alias("sh"))
     )
 
 
@@ -231,29 +199,6 @@ def _perm_params(k: int, seed: int = 0x5EED) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """k-permutation MinHash signature per doc.
-
-    Shape: each shingle is hashed ONCE (xxhash64 → mod p), then the k
-    permutations are ``min((a_i*h + b_i) mod p)`` codegen aggregates
-    over the exploded shingles.  One shuffle whose payload is k longs
-    per doc (partial mins combine map-side); the shingle strings never
-    leave the scan stage.
-    """
-    params = _perm_params(k)
-    ex = exploded_shingles(documents).select(
-        "doc_id", F.pmod(F.xxhash64("s"), F.lit(MINHASH_PRIME)).alias("h")
-    )
-    mins = [
-        F.min(F.pmod(F.col("h") * F.lit(a) + F.lit(b), F.lit(MINHASH_PRIME))).alias(f"m{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    agg = ex.groupBy("doc_id").agg(*mins)
-    return agg.select(
-        "doc_id", F.array(*[F.col(f"m{i}") for i in range(k)]).alias("signature")
-    )
-
-
 def lsh_candidate_pairs(signatures: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
     """Banded LSH: docs sharing any band hash become a candidate pair.
 
@@ -278,80 +223,22 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = LSH_BANDS) -> DataFr
     )
 
 
-def _signatures_from_sets(k: int = MINHASH_K):
-    """Arrow-batched k-permutation MinHash over a hashed-shingle-set
-    column: one ``(len × k)`` numpy outer-product per row.  Used when
-    the shingle sets are already materialized (the full near-dup pass
-    needs them again for Jaccard) — hashing work is then shared instead
-    of re-run through the explode path."""
-    from pyspark.sql.functions import pandas_udf
-
-    params = _perm_params(k)
-    A = np.array([a for a, _ in params], dtype=np.int64)
-    B = np.array([b for _, b in params], dtype=np.int64)
-
-    @pandas_udf("array<bigint>")
-    def sig(sh: pd.Series) -> pd.Series:
-        out: list = []
-        # Segment-vectorized: concatenate a chunk of rows' hash sets,
-        # compute the (sum_len × k) permutation matrix once, and take
-        # per-row minima with minimum.reduceat — one numpy dispatch per
-        # chunk instead of per document (a per-row outer() loop spends
-        # more time in allocator churn than arithmetic).  Chunks bound
-        # the scratch matrix to ~64 MB whatever the batch shape.
-        rows = [np.asarray(a, dtype=np.int64) for a in sh]
-        chunk: list = []
-        chunk_len = 0
-        max_elems = 64 * 1024 * 1024 // (8 * k)
-
-        def flush() -> None:
-            nonlocal chunk, chunk_len
-            if not chunk:
-                return
-            h = np.mod(np.concatenate(chunk), MINHASH_PRIME)
-            m = np.mod(h[:, None] * A + B, MINHASH_PRIME)
-            lens = np.array([len(c) for c in chunk])
-            offs = np.zeros(len(chunk), dtype=np.int64)
-            np.cumsum(lens[:-1], out=offs[1:])
-            mins = np.minimum.reduceat(m, offs, axis=0)
-            out.extend(row.tolist() for row in mins)
-            chunk, chunk_len = [], 0
-
-        for arr in rows:
-            if arr.size == 0:
-                # reduceat cannot express empty segments; emit the
-                # identity signature (max-prime) directly
-                flush()
-                out.append([int(MINHASH_PRIME)] * k)
-                continue
-            chunk.append(arr)
-            chunk_len += arr.size
-            if chunk_len >= max_elems:
-                flush()
-        flush()
-        return pd.Series(out)
-
-    return sig
-
-
 def dedup_minhash(documents: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Full near-dup pass: signatures → banded candidates → verified
     pairs above the Jaccard threshold.
 
-    The hashed shingle sets are computed ONCE and persisted: they feed
-    both the signature derivation (numpy permutations per row) and the
-    Jaccard verification joins.  Without the persist, the three plan
-    branches (signatures, pair-side A, pair-side B) would each re-run
-    the shingle explode+collect_set — at 100 TB, three full corpus
-    scans instead of one.  The persisted form is the compact long-array
-    set (~8 bytes/shingle), the cheapest representation to hold.
+    The hashed shingle sets and the signatures are computed ONCE and
+    checkpointed: they feed the banded candidates and both Jaccard
+    verification joins.  Without that, the three plan branches
+    (signatures, pair-side A, pair-side B) would each re-run the
+    shingle explode — at 100 TB, three full corpus scans instead of
+    one.  The held form is the compact long-array set (~8
+    bytes/shingle) plus k longs per doc.
     """
     # sets AND signatures come out of ONE groupBy over the exploded
     # shingles: collect_set rides with the 128 codegen min-aggregates,
     # so the corpus is scanned once, shuffled once, and no Python
-    # worker is involved anywhere in this operator (the pandas
-    # signature path `_signatures_from_sets` remains for callers that
-    # already hold materialized sets)
+    # worker is involved anywhere in this operator
     params = _perm_params(MINHASH_K)
     h = F.pmod(F.xxhash64("s"), F.lit(MINHASH_PRIME))
     mins = [
@@ -1466,7 +1353,6 @@ def _rolling_gram_hashes_udf(n: int):
         return pd.Series(out)
 
     return gram_hashes
-
 
 
 # --------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Slowly-changing-dimension maintenance.
+"""Slowly-changing-dimension current view.
 
 Reference semantics: ``Set Up Delta Tables/Set up Delta tables for
 Slowly changing Data.scala`` maintains interval dimensions
@@ -6,10 +6,9 @@ Slowly changing Data.scala`` maintains interval dimensions
 (sets RemovedOn) and inserts a fresh open row; the "current" view is
 ``WHERE RemovedOn IS NULL``.
 
-Batch-functional formulation (Delta-free): :func:`scd2_apply` merges a
-batch of updates into a history frame; :func:`scd2_current` derives the
-current snapshot.  Both are window/union compositions — a MERGE under
-AQE does the same shuffle work.
+:func:`scd2_current` derives that current snapshot from a history
+frame with one window over the serial key (the history itself is
+built by ``datamodel.remote_history``).
 """
 
 from __future__ import annotations
@@ -33,38 +32,6 @@ def scd2_current(history: DataFrame) -> DataFrame:
         .filter((F.col("rn") == 1) & F.col("removed_on").isNull())
         .drop("rn")
     )
-
-
-def scd2_apply(history: DataFrame, updates: DataFrame, effective_ts_col: str = "effective_ts") -> DataFrame:
-    """Close open rows for updated serials and append the new rows.
-
-    ``updates`` columns: serial, remote_id, <effective_ts_col>.
-    Equivalent to the reference's two-phase MERGE (update + insert).
-    """
-    upd = updates.select(
-        F.col("serial"),
-        F.col("remote_id").alias("new_remote_id"),
-        F.col(effective_ts_col).alias("new_added_on"),
-    )
-    closed = (
-        history.join(F.broadcast(upd), "serial", "left")
-        .withColumn(
-            "removed_on",
-            F.when(
-                F.col("removed_on").isNull() & F.col("new_added_on").isNotNull(),
-                F.col("new_added_on"),
-            ).otherwise(F.col("removed_on")),
-        )
-        .select(*history.columns)
-    )
-    inserted = upd.select(
-        "serial",
-        F.col("new_remote_id").alias("remote_id"),
-        F.col("new_added_on").alias("added_on"),
-        F.lit(None).cast("long").alias("removed_on"),
-        F.lit(False).alias("is_private"),
-    )
-    return closed.unionByName(inserted)
 
 
 def scd2_current_oracle() -> str:

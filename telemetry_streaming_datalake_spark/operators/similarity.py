@@ -29,34 +29,6 @@ from pyspark.sql import functions as F
 from telemetry_streaming_datalake_spark.session import load_table, scratch_cache
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine(a, b):
-    """Cosine similarity between two array<numeric> columns (double).
-
-    NOTE: interpreted (higher-order functions are CodegenFallback) —
-    only for tests/tiny frames.  Every production scoring path below
-    uses :func:`pair_cosine` (Arrow-batched numpy) instead.
-    """
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def pair_cosine(x, y):
     """Arrow-batched exact cosine over two array columns: one numpy
     einsum per batch — the vectorized scoring path every top-k /
@@ -1254,104 +1226,15 @@ def probe_ivf_index(
 # IVF + int8 quantized posting lists (FAISS IVF-PQ regime, SQ8 codes)
 # --------------------------------------------------------------------------
 
-#: trained-PQ codebook geometry: per-dimension 1-D codebooks at the
-#: SAME byte budget as SQ8 (one code byte per dimension) — the regime
-#: where trained quantization provably helps: Lloyd's k-means adapts
-#: levels to each dimension's distribution while SQ8 spends them
-#: uniformly over the per-vector max range
-PQ_CODES = 256
-PQ_TRAIN_SAMPLE = 2048
-PQ_KMEANS_ITERS = 8
-
-
-def train_pq_codebooks(
-    embeddings: DataFrame,
-    n_codes: int = PQ_CODES,
-    sample: int = PQ_TRAIN_SAMPLE,
-    iters: int = PQ_KMEANS_ITERS,
-) -> np.ndarray:
-    """Train per-dimension quantization codebooks (the FAISS
-    train-on-a-sample posture, made deterministic): the ``sample``
-    lowest vec_ids collect to the driver — bounded by design, the
-    `_centroid_matrix` precedent — and each dimension runs ``iters``
-    Lloyd rounds from a uniform init over that dimension's sample
-    range.  Returns ``(dim, n_codes)`` sorted codebooks.
-
-    This is the trained-codebook slot-in the SQ8 docstring promises:
-    same storage/IO layout (one code byte per dimension), swap the
-    code column + reconstruction expression.  It stays OUT of the
-    registry key deliberately — a trained codebook is an artifact, not
-    an ANSI-SQL-reproducible expression, so its contract is the
-    pytest pin (reconstruction error strictly below SQ8's at equal
-    bytes) rather than a DuckDB oracle."""
-    rows = (
-        embeddings.filter(F.col("embedding").isNotNull())
-        .orderBy("vec_id")
-        .limit(sample)
-        .select("embedding")
-        .collect()
-    )
-    X = np.array([r.embedding for r in rows], dtype=np.float64)
-    dim = X.shape[1]
-    books = np.zeros((dim, n_codes))
-    for j in range(dim):
-        col = X[:, j]
-        cb = np.linspace(col.min(), col.max(), n_codes)
-        for _ in range(iters):
-            assign = np.abs(col[:, None] - cb[None, :]).argmin(1)
-            for c in range(n_codes):
-                pts = col[assign == c]
-                if len(pts):
-                    cb[c] = pts.mean()
-        books[j] = np.sort(cb)
-    return books
-
-
-def _pq_nearest(books: np.ndarray, X: np.ndarray) -> np.ndarray:
-    """Vectorized nearest-code assignment against SORTED per-dim
-    codebooks: searchsorted + closer-neighbor pick.  (rows, dim) →
-    (rows, dim) int codes."""
-    codes = np.zeros(X.shape, dtype=np.int64)
-    for j in range(books.shape[0]):
-        cb = books[j]
-        idx = np.clip(np.searchsorted(cb, X[:, j]), 1, len(cb) - 1)
-        left_closer = (X[:, j] - cb[idx - 1]) <= (cb[idx] - X[:, j])
-        codes[:, j] = np.where(left_closer, idx - 1, idx)
-    return codes
-
-
-def _pq_encode_udf(books: np.ndarray):
-    """Arrow-batched encoder: embedding → per-dim code array."""
-    from pyspark.sql.types import ArrayType, ShortType
-
-    @F.pandas_udf(ArrayType(ShortType()))
-    def _encode(embs: pd.Series) -> pd.Series:
-        X = np.array(embs.tolist(), dtype=np.float64)
-        codes = _pq_nearest(books, X).astype(np.int16)
-        return pd.Series(list(codes))
-
-    return _encode
-
-
-def _pq_reconstruct_udf(books: np.ndarray):
-    """Arrow-batched decoder: code array → reconstructed vector (the
-    ADC reconstruction expression of the trained variant)."""
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def _decode(codes: pd.Series) -> pd.Series:
-        C = np.array(codes.tolist(), dtype=np.int64)
-        out = books[np.arange(books.shape[0])[None, :], C]
-        return pd.Series(list(out))
-
-    return _decode
+#: the code→vector reconstruction an index is built for, stored in its
+#: ``meta`` marker and checked by every probe
+IVFPQ_ENCODING = "sq8"
 
 
 def build_ivfpq_index(
     embeddings: DataFrame,
     index_dir: str,
     n_cells: int = IVF_CELLS,
-    codebooks: np.ndarray | None = None,
 ) -> str:
     """Materialize the quantized IVF index: posting lists store int8
     CODES + a per-vector scale instead of the float vectors — the
@@ -1365,9 +1248,8 @@ def build_ivfpq_index(
     sub-space codebooks, deliberately: PQ codebooks come out of a
     k-means whose result depends on partitioning and seeding, so the
     probe would not be reproducible in ANSI SQL; the scalar code has
-    the identical storage/IO shape, is bit-deterministic on both
-    engines, and slots a trained PQ codebook in later without touching
-    the layout (swap the code column + the reconstruction expression).
+    the identical storage/IO shape and is bit-deterministic on both
+    engines.
 
     Cell assignment stays FULL precision (the standard IVF coarse
     quantizer); the whole build is codegen expressions (abs/array_max/
@@ -1380,35 +1262,22 @@ def build_ivfpq_index(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
     )
-    assigned = embd.withColumn("cell", _nearest_cell_udf(cent_norm)(F.col("emb")))
-    if codebooks is None:
-        assigned = (
-            assigned.withColumn(
-                "scale",
-                F.lit(127.0)
-                / F.greatest(
-                    F.array_max(F.transform("emb", F.abs)), F.lit(_QUANT_EPS)
-                ),
-            )
-            .withColumn(
-                "codes",
-                F.transform(
-                    "emb",
-                    lambda x: F.floor(x * F.col("scale") + F.lit(0.5)).cast("tinyint"),
-                ),
-            )
-            .select("vec_id", "scale", "codes", "cell")
+    assigned = (
+        embd.withColumn("cell", _nearest_cell_udf(cent_norm)(F.col("emb")))
+        .withColumn(
+            "scale",
+            F.lit(127.0)
+            / F.greatest(F.array_max(F.transform("emb", F.abs)), F.lit(_QUANT_EPS)),
         )
-    else:
-        # trained-codebook slot-in: same one-code-byte-per-dim layout,
-        # code column swapped for the k-means assignment (scale column
-        # kept for layout compatibility; reconstruction ignores it)
-        assigned = assigned.select(
-            "vec_id",
-            F.lit(1.0).alias("scale"),
-            _pq_encode_udf(codebooks)(F.col("emb")).alias("codes"),
-            "cell",
+        .withColumn(
+            "codes",
+            F.transform(
+                "emb",
+                lambda x: F.floor(x * F.col("scale") + F.lit(0.5)).cast("tinyint"),
+            ),
         )
+        .select("vec_id", "scale", "codes", "cell")
+    )
     (
         assigned.write.mode("overwrite")
         .partitionBy("cell")
@@ -1419,27 +1288,14 @@ def build_ivfpq_index(
         [(i, [float(x) for x in cent_norm[i]]) for i in range(cent_norm.shape[0])],
         "cell int, centroid array<double>",
     ).write.mode("overwrite").parquet(os.path.join(index_dir, "centroids"))
-    # encoding marker: an SQ8 index and a trained-PQ index are
-    # byte-compatible on disk (same codes/scale layout), so a probe
-    # with the wrong reconstruction mode would silently produce
-    # garbage — the marker makes the mismatch a loud error instead
-    spark.createDataFrame(
-        [(_encoding_tag(codebooks),)], "encoding string"
-    ).write.mode("overwrite").parquet(os.path.join(index_dir, "meta"))
+    # encoding marker: any other code layout with the same codes/scale
+    # columns (a trained-PQ index) is byte-compatible on disk, so a
+    # probe reconstructing it as SQ8 would silently produce garbage —
+    # the marker makes the mismatch a loud error instead
+    spark.createDataFrame([(IVFPQ_ENCODING,)], "encoding string").write.mode(
+        "overwrite"
+    ).parquet(os.path.join(index_dir, "meta"))
     return index_dir
-
-
-def _encoding_tag(codebooks: np.ndarray | None) -> str:
-    """Stable identity of the code→vector reconstruction: ``sq8`` for
-    the scalar quantizer, ``pq:<md5 of the codebook bytes>`` for a
-    trained codebook — two different trainings are two different tags."""
-    if codebooks is None:
-        return "sq8"
-    import hashlib
-
-    return "pq:" + hashlib.md5(
-        np.ascontiguousarray(codebooks, dtype=np.float64).tobytes()
-    ).hexdigest()
 
 
 def probe_ivfpq_index(
@@ -1451,7 +1307,6 @@ def probe_ivfpq_index(
     nprobe: int = IVF_NPROBE,
     round_to: int = 4,
     rerank: int = 0,
-    codebooks: np.ndarray | None = None,
 ) -> DataFrame:
     """Probe the quantized index: bounded centroid read, driver-side
     probe-cell selection over the tiny centroid matrix, then a
@@ -1471,7 +1326,7 @@ def probe_ivfpq_index(
     ``rerank`` ≥ the probed-candidate count this EQUALS the
     full-precision IVF probe exactly (pytest-pinned), which is the
     correctness contract a refine stage must satisfy."""
-    want = _encoding_tag(codebooks)
+    want = IVFPQ_ENCODING
     # ONLY a missing meta path (pre-marker index layout) may fall back
     # to trusting the caller — a corrupt/unreadable/empty marker must
     # stay loud, or the guard silently disables itself.  The check
@@ -1497,8 +1352,7 @@ def probe_ivfpq_index(
     if stored != want:
         raise ValueError(
             f"index at {index_dir} was built with encoding {stored!r} but the "
-            f"probe requested {want!r} — reconstruction would be garbage; pass "
-            "the matching codebooks (or None for SQ8)"
+            f"probe reconstructs {want!r} — reconstruction would be garbage"
         )
     cent_rows = (
         spark.read.parquet(os.path.join(index_dir, "centroids"))
@@ -1520,13 +1374,11 @@ def probe_ivfpq_index(
     cells = spark.read.parquet(os.path.join(index_dir, "cells")).filter(
         F.col("cell").isin(probe_cells)  # partition-pruned posting-list read
     )
-    recon_expr = (
-        F.transform("codes", lambda c: c.cast("double") / F.col("scale"))
-        if codebooks is None
-        # trained variant: the swapped reconstruction expression
-        else _pq_reconstruct_udf(codebooks)(F.col("codes"))
+    recon = cells.select(
+        "vec_id",
+        "cell",
+        F.transform("codes", lambda c: c.cast("double") / F.col("scale")).alias("remb"),
     )
-    recon = cells.select("vec_id", "cell", recon_expr.alias("remb"))
     cands = (
         recon.join(F.broadcast(probe_df), "cell")
         .join(F.broadcast(q), "query_id")

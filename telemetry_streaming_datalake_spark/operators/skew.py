@@ -1,20 +1,18 @@
-"""Skew mitigation utilities.
+"""Skew and join-cost utilities.
 
 Layered strategy, in preference order (SURVEY §4):
 
 1. **Broadcast** the small side — every dimension join in this engine
-   (no fact shuffle at all, skew irrelevant).
+   (no fact shuffle at all, skew irrelevant); :func:`broadcast_if_small`
+   gates the hint on the real row count, so a pair-participant-sized
+   frame shuffle-joins instead of landing on the driver.
 2. **AQE skew-join splitting** (`spark.sql.adaptive.skewJoin.enabled`,
    on in :func:`..session.get_spark`) — handles discovered skew in
    sort-merge joins at runtime.
-3. **Explicit salting** (this module) — for the case AQE can't fix:
-   a shuffle join where one fact key is so hot a single task would
-   own it (classic: one terminal producing 30% of all telemetry, one
-   document duplicated millions of times).  The fact side spreads each
-   key over ``buckets`` salted sub-keys; the other side replicates its
-   rows once per salt.  The join key becomes (key, salt) — uniform by
-   construction — at the cost of a ``buckets``× blow-up of the
-   *smaller* side only.
+3. **Bloom-filter pruning** (:func:`bloom_prune_join`) — for the join
+   that must stay a shuffle join: the build side's keys fold into a
+   bitmap shipped as an expression, so fact rows that cannot match
+   are dropped map-side, below the exchange.
 """
 
 from __future__ import annotations
@@ -24,7 +22,6 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SALT_COL = "__salt"
 
 #: rows above which broadcast_if_small refuses the hint.  1M rows of a
 #: (doc_id, cluster_id)-shaped frame is ~100 MB driver-side after
@@ -54,62 +51,6 @@ def broadcast_if_small(df: DataFrame, max_rows: int = BROADCAST_ROW_GATE) -> Dat
     if df.count() <= max_rows:
         return F.broadcast(df)
     return df
-
-
-def salted_join(
-    fact: DataFrame,
-    other: DataFrame,
-    on: list[str],
-    buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the hot-key shuffle spread over ``buckets``
-    sub-partitions.
-
-    The salt is derived from a hash of the fact row's full key tuple
-    plus a per-row disambiguator (``monotonically_increasing_id``) —
-    its *value* never affects the result, only which sub-partition a
-    row lands in, so nondeterminism here is harmless (any salt joins
-    against the replicated other side).  Result equality with the
-    plain join is asserted property-style in ``tests/test_skew.py``.
-
-    Only ``inner``/``left`` are valid: the other side is replicated
-    once per salt bucket, so right/full would emit each unmatched
-    other-side row ``buckets`` times.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join supports how='inner'|'left', got {how!r}: the "
-            "replicated side would duplicate unmatched rows under "
-            "right/full semantics"
-        )
-    f = fact.withColumn(
-        SALT_COL,
-        F.pmod(F.xxhash64(*on, F.monotonically_increasing_id()), F.lit(buckets)).cast("int"),
-    )
-    o = other.withColumn(
-        SALT_COL, F.explode(F.array(*[F.lit(i) for i in range(buckets)]))
-    )
-    return f.join(o, on=[*on, SALT_COL], how=how).drop(SALT_COL)
-
-
-def salted_count(df: DataFrame, keys: list[str], buckets: int = 32) -> DataFrame:
-    """Two-stage count for extreme key skew in aggregation.
-
-    Plain ``groupBy(keys).count()`` already map-side combines, which
-    defeats most agg skew; this explicit form exists for algebraic
-    aggregates over *high-cardinality payloads* (e.g. collect-heavy
-    aggs) where the single reducer of a hot key still drowns: stage 1
-    aggregates (keys, salt) partitions, stage 2 merges the ≤buckets
-    partials per key.
-    """
-    salt = F.pmod(F.xxhash64(*keys, F.monotonically_increasing_id()), F.lit(buckets))
-    partial = (
-        df.withColumn(SALT_COL, salt)
-        .groupBy(*keys, SALT_COL)
-        .agg(F.count(F.lit(1)).alias("__partial"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("__partial").alias("n"))
 
 
 # --------------------------------------------------------------------------

@@ -26,14 +26,9 @@ def _count_occurrences(col, needle: str):
     return (F.length(col) - F.length(F.replace(col, F.lit(needle), F.lit("")))) / len(needle)
 
 
-# language → marker stopwords (padded with spaces so only whole words
-# count).  The heuristic is the classic n-gram/stopword-profile
-# language guesser, reduced to its deterministic core.
-LANG_MARKERS = {
-    "en": [" the ", " a ", " and ", " of "],
-    "de": [" der ", " und ", " die ", " das "],
-    "fr": [" le ", " la ", " et ", " les "],
-}
+# English marker stopwords behind the quality gates' stop-hit feature
+# (padded with spaces so only whole words count)
+STOPWORD_MARKERS = [" the ", " a ", " and ", " of "]
 
 
 def _doc_features() -> dict:
@@ -61,7 +56,7 @@ def _doc_features_build() -> dict:
     n_chars = F.length(norm)
     n_spaces = n_chars - F.length(F.replace(norm, F.lit(" "), F.lit("")))
     stop_hits = None
-    for m in LANG_MARKERS["en"]:
+    for m in STOPWORD_MARKERS:
         c = _count_occurrences(padded, m)
         stop_hits = c if stop_hits is None else stop_hits + c
     return {
@@ -100,7 +95,7 @@ def _doc_features_sql() -> dict:
             f" * 1.0 / {n_words})"
         ),
         "stop_hits": "("
-        + " + ".join(_count_sql(padded, m) for m in LANG_MARKERS["en"])
+        + " + ".join(_count_sql(padded, m) for m in STOPWORD_MARKERS)
         + ")",
     }
 
@@ -134,30 +129,6 @@ def text_quality(documents: DataFrame) -> DataFrame:
             + F.least(stop_hits / n_tokens * 5.0, F.lit(1.0)) * 0.5,
             6,
         ).alias("quality_score"),
-    )
-
-
-def lang_id(documents: DataFrame) -> DataFrame:
-    """Stopword-profile language guess: argmax language by whole-word
-    marker hits (ties → 'und' = undetermined, like public LID tools)."""
-    norm = normalize_text(F.col("text"))
-    padded = F.concat(F.lit(" "), norm, F.lit(" "))
-    scores = {}
-    for lang, markers in LANG_MARKERS.items():
-        s = None
-        for m in markers:
-            c = _count_occurrences(padded, m)
-            s = c if s is None else s + c
-        scores[lang] = s
-    best = F.greatest(*scores.values())
-    pred = F.when(best <= 0, F.lit("und"))
-    for lang in LANG_MARKERS:  # insertion order = tie-break priority
-        pred = pred.when(scores[lang] == best, F.lit(lang))
-    return documents.select(
-        "doc_id",
-        "lang",
-        *[scores[lang].cast("bigint").alias(f"hits_{lang}") for lang in LANG_MARKERS],
-        pred.alias("lang_pred"),
     )
 
 
@@ -291,11 +262,9 @@ LANGID_NGRAM_WEIGHTS = _train_langid()
 
 def lang_id_model(documents: DataFrame) -> DataFrame:
     """Model-based language ID with a SHIPPED character-bigram
-    log-odds model — the fastText/langid.py posture (upgrading the
-    stopword heuristic :func:`lang_id`, which stays as the
-    zero-artifact fallback): score(lang) = Σ count(g)·w(lang,g) over
-    the model's bigrams, argmax with deterministic first-wins
-    tie-break, NULL/empty text → 'und'.
+    log-odds model — the fastText/langid.py posture: score(lang) =
+    Σ count(g)·w(lang,g) over the model's bigrams, argmax with
+    deterministic first-wins tie-break, NULL/empty text → 'und'.
 
     Scale shape: map-only — the model is literal weights inside ONE
     codegen projection (replace-based substring counts, the
@@ -1233,7 +1202,6 @@ FIXED_VOCAB: tuple[str, ...] = tuple(
 )
 
 
-
 def _fixed_merge_chain_col():
     """The full FIXED_BPE_MERGES application as ONE composed column
     over ``word`` — built once per process (`exprcache`): each
@@ -1621,7 +1589,6 @@ QUALITY_CLF_WEIGHTS = {
     "alpha_frac": 1.5,      # alphabetic words dominate real prose
     "stop_density": 9.0,    # stopword evidence is the strongest signal
 }
-QUALITY_CLF_THRESHOLD = 0.5
 
 
 def quality_classifier(documents: DataFrame) -> DataFrame:

@@ -5,9 +5,9 @@ notebook a ``value`` column that is parsed with ``from_json`` against an
 explicit schema (``Bronze-Silver/Part1 ….scala:119``); nothing is ever
 schema-inferred.  These connectors reproduce that contract over the
 formats a file-drop pipeline actually receives: newline-delimited
-JSON, CSV, and (columnar) ORC.  All run the SAME downstream bronze
-parse as the parquet path, and the correctness gate proves every
-source lands identical rows (oracle = the parquet-derived bronze).
+JSON and CSV.  Both run the SAME downstream bronze parse as the
+parquet path, and the correctness gate proves every source lands
+identical rows (oracle = the parquet-derived bronze).
 
 Scale shape: staging writes partitioned text; reads are map-only
 line-parses with explicit schemas (no inference pass over the data —
@@ -115,38 +115,3 @@ def bronze_from_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full path: stage → schema'd CSV read → bronze parse."""
     path = stage_events_csv(spark, sf_dir)
     return parse_bronze(read_events_csv(spark, path))
-
-
-# --------------------------------------------------------------------------
-# ORC columnar connector
-# --------------------------------------------------------------------------
-
-
-def stage_events_orc(spark: SparkSession, sf_dir: str, work_dir: str | None = None) -> str:
-    """Serialize the feed as ORC — the second first-class columnar
-    format a lake ingests (Hive-ecosystem drops arrive as ORC)."""
-    out = os.path.join(work_dir or scratch_dir("orc_"), "events_orc")
-    _wire_frame(spark, sf_dir).write.mode("overwrite").orc(out)
-    return out
-
-
-def read_events_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan with the explicit wire schema; predicate pushdown and
-    column pruning reach the ORC reader exactly as they do parquet
-    (both are vectorized columnar sources in Spark)."""
-    rec = spark.read.schema(EVENT_WIRE_SCHEMA).orc(path)
-    return rec.select(
-        "event_id",
-        F.timestamp_micros("ts_us").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-
-
-def bronze_from_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full path: stage → explicit-schema ORC scan → bronze parse.
-    Must equal ``bronze_parse`` on the parquet source row-for-row."""
-    path = stage_events_orc(spark, sf_dir)
-    return parse_bronze(read_events_orc(spark, path))

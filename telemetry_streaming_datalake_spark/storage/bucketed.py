@@ -23,7 +23,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from telemetry_streaming_datalake_spark.session import load_table, scratch_dir
+from telemetry_streaming_datalake_spark.session import (
+    _src_fingerprint,
+    load_table,
+    scratch_dir,
+)
 from telemetry_streaming_datalake_spark.operators.derived import floor_round
 
 N_BUCKETS = 8
@@ -33,9 +37,11 @@ N_BUCKETS = 8
 #: then ignores (ADVICE r5: one leaked temp dir per bench+crosscheck call)
 _WORK_DIR: str | None = None
 
-#: sf_dir whose snapshot currently backs the tables — a repeat call for
-#: the same source skips the rewrite entirely
-_LOADED_FOR: str | None = None
+#: file identity (``session._src_fingerprint``) of the events source
+#: whose snapshot currently backs the tables — a repeat call for the
+#: same, unchanged source skips the rewrite entirely; a source
+#: rewritten at the same path has a new identity and is reloaded
+_LOADED_FOR: tuple | None = None
 
 
 def setup_bucketed_tables(
@@ -45,11 +51,12 @@ def setup_bucketed_tables(
     user_id into a temp-location database.  Returns the table names."""
     global _WORK_DIR, _LOADED_FOR
     db = "tsdl_bucketed"
+    src = _src_fingerprint(os.path.join(sf_dir, "events.parquet"))
     if work_dir is None:
         if _WORK_DIR is None:
             _WORK_DIR = scratch_dir("bucket_")
         loc = _WORK_DIR
-        if _LOADED_FOR == sf_dir and spark.catalog.tableExists(
+        if _LOADED_FOR == src and spark.catalog.tableExists(
             f"{db}.events_bucketed"
         ):
             return f"{db}.events_bucketed", f"{db}.profile_bucketed"
@@ -78,7 +85,7 @@ def setup_bucketed_tables(
     # unconditional: an explicit-work_dir call rewrites the SAME
     # catalog tables (the database LOCATION is pinned), so the cache
     # must track whatever snapshot actually backs them now
-    _LOADED_FOR = sf_dir
+    _LOADED_FOR = src
     return f"{db}.events_bucketed", f"{db}.profile_bucketed"
 
 

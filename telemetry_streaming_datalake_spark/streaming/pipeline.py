@@ -139,7 +139,6 @@ def start_stream(
     path: str | None = None,
     foreach_batch=None,
     mode: str = "append",
-    fmt: str = "parquet",
     partition_by: str | None = None,
     state_src: tuple[str, ...] = (),
     name: str | None = None,
@@ -147,7 +146,7 @@ def start_stream(
 ) -> StreamingQuery:
     """Build and start one streaming query — the library's only
     ``writeStream``.  The sink is ``foreach_batch`` when given, else a
-    ``fmt`` file sink at ``path``; the trigger is ``processing_time``
+    parquet file sink at ``path``; the trigger is ``processing_time``
     when given, else availableNow (see :func:`drain`).
 
     ``state_src`` names the drained input path(s) of a JVM-stateful
@@ -169,7 +168,7 @@ def start_stream(
     if foreach_batch is not None:
         w = w.foreachBatch(foreach_batch)
     else:
-        w = w.format(fmt).option("path", path)
+        w = w.format("parquet").option("path", path)
     if partition_by:
         w = w.partitionBy(partition_by)
     if name:
@@ -208,9 +207,8 @@ def landing_stream(
     max_files: int | None = None,
 ) -> DataFrame:
     """Stream a landing directory or an upstream hop's lake — the
-    library's only ``readStream`` (the real broker reader,
-    ``sources.kafka.kafka_read_stream``, aside).  A lake-to-lake hop
-    passes the upstream frame's schema, so no lake (empty or not) is
+    library's only ``readStream``.  A lake-to-lake hop passes the
+    upstream frame's schema, so no lake (empty or not) is
     footer-inferred; ``max_files`` bounds files per micro-batch."""
     reader = spark.readStream.format(fmt)
     if schema is not None:
@@ -593,38 +591,6 @@ def streaming_bronze_feed_b(spark: SparkSession, sf_dir: str, work_dir: str) -> 
     )
 
 
-def streaming_bronze_feed_c(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
-    """Provider-C mixed-schema ingest as a stream: the packed topic
-    (flat readings + zipped batches + status records interleaved in
-    ONE text dir) is consumed as a line stream and the SAME batch
-    type-dispatch parser (``feeds.parse_bronze_feed_c``) runs on it —
-    proving the `when`-routed multi-schema parse holds under
-    micro-batch execution exactly like the per-provider notebooks the
-    reference runs as streams."""
-    from telemetry_streaming_datalake_spark.ingest.feeds import (
-        pack_feed_c,
-        parse_bronze_feed_c,
-    )
-
-    landing = os.path.join(work_dir, "feedc_landing")
-    pack_feed_c(load_table(spark, sf_dir, "events")).coalesce(1).write.mode(
-        "overwrite"
-    ).text(landing)
-    raw = landing_stream(spark, landing, fmt="text").withColumnRenamed("value", "raw")
-    bronze_c = parse_bronze_feed_c(raw)
-    out = os.path.join(work_dir, "feedc_out")
-    ckpt = os.path.join(work_dir, "feedc_ckpt")
-    drain(bronze_c, ckpt, path=out, partition_by="datestamp")
-    return (
-        spark.read.parquet(out)
-        .withColumn("datestamp", F.col("datestamp").cast("string"))
-        .select(
-            "event_id", "serial", "metric", "value", "unix_ts", "datestamp",
-            "hourstamp", "record_type", "unique_hash_key",
-        )
-    )
-
-
 def streaming_sessionize(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
     """Gap-based sessionization AS A STREAM — the same
     ``operators.sessions.sessionize`` transform applied to the file
@@ -645,14 +611,29 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str, work_dir: str) -> Dat
     return spark.read.parquet(out)
 
 
-def _silver_hops(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
-    """Hops 1+2 of the lake topology, drained: the feed lands in the
-    date-partitioned ``bronze_lake``, which streams through ``to_silver``
-    into the date-partitioned ``silver_lake``.  Each lake streams with
-    its upstream frame's schema (the always-on runner's hop builders,
-    pinned plan-equal in ``tests/test_plans.py``), so ``datestamp``
-    reads back as the engine's string.  Returns the silver frame."""
-    from telemetry_streaming_datalake_spark.datamodel import metric_mapping
+def streaming_gold_three_hop(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
+    """Full reference topology as streams: feed → bronze → silver →
+    gold, each hop a readStream/writeStream pair over the lake dir of
+    the previous one (``Gold state/Step 04-04b ….scala`` reads the
+    silver Delta as a stream and joins the modem-history dimension).
+
+    The feed drains into the date-partitioned ``bronze_lake``; that
+    lake is consumed AS A STREAM by the silver hop (the reference's
+    Delta-as-stream-source pattern, ``Bronze-Silver/Part1 ….scala:93-96``)
+    through the batch ``to_silver`` into ``silver_lake``, which streams
+    on into ``gold_lake``.  Each lake streams with its upstream frame's
+    schema (the always-on runner's hop builders, pinned plan-equal in
+    ``tests/test_plans.py``), so ``datestamp`` reads back as the
+    engine's string; each hop checkpoints on its own.
+
+    The SCD2 interval join runs as a STREAM-STATIC join: stateless on
+    the stream side, the history dimension broadcast per micro-batch —
+    the same plan the batch path gets, which is why the drained result
+    must equal batch ``gold_enrich`` (asserted in tests, as is the
+    ``silver_lake`` against batch silver).
+    """
+    from telemetry_streaming_datalake_spark.datamodel import metric_mapping, remote_history
+    from telemetry_streaming_datalake_spark.operators.temporal import enrich_gold
 
     bronze = streaming_bronze(spark, sf_dir, work_dir)
     bronze_dir = os.path.join(work_dir, "bronze_lake")
@@ -661,59 +642,13 @@ def _silver_hops(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
         partition_by="datestamp", state_src=(os.path.join(sf_dir, "events.parquet"),),
     )
     silver = to_silver(landing_stream(spark, bronze_dir, bronze.schema), metric_mapping(spark))
+    silver_dir = os.path.join(work_dir, "silver_lake")
     drain(
         silver, os.path.join(work_dir, "silver_ckpt"),
-        path=os.path.join(work_dir, "silver_lake"), partition_by="datestamp",
+        path=silver_dir, partition_by="datestamp",
     )
-    return silver
-
-
-def streaming_silver_two_hop(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
-    """Bronze table consumed AS A STREAM by the silver hop — the
-    reference's Delta-as-stream-source pattern
-    (``Bronze-Silver/Part1 ….scala:93-96``, ``readStream.format("delta")
-    .option("ignoreChanges", "true")``), with the date-partitioned
-    parquet lake standing in for Delta.
-
-    Hop 1 drains the raw feed into the partitioned bronze lake; hop 2
-    opens that lake directory as a NEW file-source stream (each bronze
-    file appears as an append, exactly how Delta streams table commits),
-    applies the same batch ``to_silver`` transform as a stream-static
-    broadcast join against the mapping dimension, and lands silver.
-    Both hops checkpoint independently — the recovery unit is the hop,
-    as in the reference topology.
-    """
-    _silver_hops(spark, sf_dir, work_dir)
-    return (
-        spark.read.parquet(os.path.join(work_dir, "silver_lake"))
-        .withColumn("datestamp", F.col("datestamp").cast("string"))
-        .select(
-            "event_id", "serial", "metric", "value", "payload_k", "unix_ts",
-            "datestamp", "hourstamp", "metric_id", "provider_id",
-            "agg_type", "category_id",
-        )
-    )
-
-
-def streaming_gold_three_hop(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
-    """Full reference topology as streams: feed → bronze → silver →
-    gold, each hop a readStream/writeStream pair over the lake dir of
-    the previous one (``Gold state/Step 04-04b ….scala`` reads the
-    silver Delta as a stream and joins the modem-history dimension).
-
-    The SCD2 interval join runs as a STREAM-STATIC join: stateless on
-    the stream side, the history dimension broadcast per micro-batch —
-    the same plan the batch path gets, which is why the drained result
-    must equal batch ``gold_enrich`` (asserted in tests).
-    """
-    from telemetry_streaming_datalake_spark.datamodel import remote_history
-    from telemetry_streaming_datalake_spark.operators.temporal import enrich_gold
-
-    silver = _silver_hops(spark, sf_dir, work_dir)
     history = remote_history(spark, load_table(spark, sf_dir, "customer"))
-    gold = enrich_gold(
-        landing_stream(spark, os.path.join(work_dir, "silver_lake"), silver.schema), history
-    )
+    gold = enrich_gold(landing_stream(spark, silver_dir, silver.schema), history)
     gold_dir = os.path.join(work_dir, "gold_lake")
     drain(
         gold, os.path.join(work_dir, "gold_ckpt"),
@@ -893,44 +828,8 @@ FROM c JOIN e
 
 
 # --------------------------------------------------------------------------
-# streaming publish sink (Kafka-producer analog)
+# streaming dead-letter split
 # --------------------------------------------------------------------------
-
-#: explicit wire schema of a published bronze record
-PUBLISH_WIRE_SCHEMA = (
-    "event_id BIGINT, serial STRING, metric STRING, value DOUBLE, "
-    "payload_k BIGINT, unix_ts BIGINT, datestamp STRING, hourstamp STRING, "
-    "unique_hash_key STRING"
-)
-
-
-def streaming_publish_jsonl(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
-    """Publish the deduped bronze stream as JSON strings to a text sink
-    — the Kafka-producer analog (the reference's EVO silver1 step
-    publishes key-value records back into a Kafka topic; a text dir
-    plays the topic exactly as it plays the source).  Each record
-    serializes with ``to_json(struct(...))`` into the sink's single
-    ``value`` column.
-
-    Returns the round trip: the published lines re-read and parsed
-    with ``from_json`` + the explicit wire schema — proving the
-    published feed is a lossless, schema'd contract (== batch dedup,
-    the SQL oracle).
-    """
-    out = os.path.join(work_dir, "publish_out")
-    ckpt = os.path.join(work_dir, "publish_ckpt")
-    bronze = streaming_bronze(spark, sf_dir, work_dir)
-    wire = bronze.select(
-        F.to_json(
-            F.struct(
-                "event_id", "serial", "metric", "value", "payload_k",
-                "unix_ts", "datestamp", "hourstamp", "unique_hash_key",
-            )
-        ).alias("value")
-    )
-    drain(wire, ckpt, path=out, fmt="text")
-    lines = spark.read.text(out)
-    return lines.select(F.from_json("value", PUBLISH_WIRE_SCHEMA).alias("r")).select("r.*")
 
 
 def streaming_quarantine_split(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:

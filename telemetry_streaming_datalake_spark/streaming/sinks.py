@@ -100,8 +100,10 @@ def publish_version(store: str, populate, *, batch_id: int | None = None) -> boo
 
 class ServingStoreWriter(abc.ABC):
     """The foreachBatch serving-sink contract a real KV client drops
-    into (the reference's Cosmos ``ItemOverwrite`` strategy is one
-    implementation; :class:`ParquetUpsertStore` is the lake analog).
+    into (the reference's Cosmos ``ItemOverwrite`` sink, with its
+    client-side per-item retries, is one such client).  Here
+    :class:`ParquetUpsertStore` is the lake implementation and
+    :class:`InMemoryKVServingStore` the test fake.
 
     Contract:
 
@@ -146,80 +148,6 @@ class InMemoryKVServingStore(ServingStoreWriter):
         for row in batch_df.collect():
             d = row.asDict()
             self.data[d[self.key]] = d
-        self.applied_batches.add(batch_id)
-
-
-class ResilientKVServingStore(ServingStoreWriter):
-    """Per-item error isolation + bounded retry over a pluggable item
-    writer — the posture of the reference's Cosmos sink config
-    (``Metric Stream to Cosmos/Step 06.a Raw & Latest - Stream metric
-    data to Cosmos DB.scala:12-15``: ``spark.cosmos.write.maxRetryCount
-    -> 50`` with ``write.strategy -> ItemOverwrite``), which survives
-    per-item throttling/faults inside a batch instead of failing the
-    whole micro-batch on the first bad item.
-
-    Contract:
-
-    - each item lands through ``write_item(key, row_dict)``; a raising
-      item does NOT abort the rest of the batch (error isolation);
-    - failed items are retried up to ``max_attempts`` within the batch
-      (transient-fault convergence, the maxRetryCount analog);
-    - if any item still fails after the attempts, ``apply_batch``
-      raises WITHOUT marking the batch applied — Structured Streaming
-      then replays the same ``batch_id``, and because the strategy is
-      ItemOverwrite, re-landing the already-successful items is
-      harmless; the store converges with no data loss once the fault
-      clears.  Items that exhaust retries are also recorded in
-      ``dead_letters`` for observability (count + last error per key).
-
-    Driver-side ``collect()`` limits this class to test scale by
-    design (same note as :class:`InMemoryKVServingStore`); a production
-    client runs the identical loop inside ``foreachPartition``.
-    """
-
-    def __init__(
-        self,
-        key: str = "id",
-        max_attempts: int = 3,
-        write_item=None,
-    ) -> None:
-        self.key = key
-        self.max_attempts = max_attempts
-        self.data: dict = {}
-        self.applied_batches: set[int] = set()
-        self.write_attempts = 0
-        self.dead_letters: dict = {}
-        self._write_item = write_item or (
-            lambda k, v: self.data.__setitem__(k, v)
-        )
-
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in self.applied_batches:
-            return  # replay after recovery — already landed
-        pending = [r.asDict() for r in batch_df.collect()]
-        last_err: dict = {}
-        for _attempt in range(self.max_attempts):
-            failed = []
-            for d in pending:
-                try:
-                    self.write_attempts += 1
-                    self._write_item(d[self.key], d)
-                except Exception as exc:  # noqa: BLE001 — isolate per item
-                    failed.append(d)
-                    last_err[d[self.key]] = exc
-            pending = failed
-            if not pending:
-                break
-        if pending:
-            for d in pending:
-                self.dead_letters[d[self.key]] = last_err[d[self.key]]
-            raise RuntimeError(
-                f"batch {batch_id}: {len(pending)} item(s) failed after "
-                f"{self.max_attempts} attempts "
-                f"(keys: {sorted(d[self.key] for d in pending)[:5]}); "
-                "batch not marked applied — replay will converge once "
-                "the fault clears"
-            )
         self.applied_batches.add(batch_id)
 
 

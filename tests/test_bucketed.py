@@ -46,3 +46,36 @@ def test_bucketed_join_result_matches_plain_join(spark):
     g = sorted(tuple(r) for r in got.collect())
     w = sorted(tuple(r) for r in want.collect())
     assert g == w
+
+
+def test_bucketed_join_reloads_a_source_rewritten_in_place(spark, tmp_path):
+    """The tables are reused only while the events source is unchanged:
+    rewriting it at the SAME path (even half, then odd half) must make
+    the next join serve the new rows, equal to plain SQL over them."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{SF}/events.parquet")
+    path = str(tmp_path / "events.parquet")
+    odd = pc.equal(pc.bit_wise_and(events["event_id"], 1), 1)
+    pq.write_table(events.filter(pc.invert(odd)), path)
+    first = {r.event_id for r in BK.bucketed_join(spark, str(tmp_path)).collect()}
+    assert first and all(e % 2 == 0 for e in first)
+
+    pq.write_table(events.filter(odd), path)
+    load_table(spark, str(tmp_path), "events").createOrReplaceTempView("bk_events")
+    want = spark.sql(
+        """
+        WITH profile AS (
+            SELECT user_id, count(*) AS n_events,
+                   floor(sum(value) * 1e6 + 0.5) / 1e6 AS lifetime_value
+            FROM bk_events GROUP BY user_id
+        )
+        SELECT event_id, user_id, value AS purchase_value, n_events, lifetime_value
+        FROM bk_events JOIN profile USING (user_id)
+        WHERE event_type = 'purchase'
+        """
+    )
+    g = sorted(tuple(r) for r in BK.bucketed_join(spark, str(tmp_path)).collect())
+    w = sorted(tuple(r) for r in want.collect())
+    assert g and g == w

@@ -244,39 +244,6 @@ def test_wav_build_decode_roundtrip(spark, sample_lists):
         assert out.tolist() == samples
 
 
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    st.lists(
-        st.text(
-            alphabet=st.characters(codec="utf-8", exclude_characters="\x00"),
-            min_size=0,
-            max_size=40,
-        ),
-        min_size=1,
-        max_size=6,
-    )
-)
-def test_to_wire_roundtrip_arbitrary_unicode(spark, texts):
-    """Publish-side (key, value) serialization round-trips arbitrary
-    unicode payloads losslessly through the wire value parse."""
-    from pyspark.sql import functions as F
-
-    from telemetry_streaming_datalake_spark.sources import kafka as K
-
-    rows = [(i, t) for i, t in enumerate(texts)]
-    df = spark.createDataFrame(rows, "id long, payload string")
-    back = (
-        K.to_wire(df, "id")
-        .select(
-            F.from_json(
-                F.col("value").cast("string"), "id long, payload string"
-            ).alias("r")
-        )
-        .select("r.*")
-    )
-    assert sorted(map(tuple, back.collect())) == sorted(rows)
-
-
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     st.lists(

@@ -1,45 +1,9 @@
-"""Salted join / salted aggregation equivalence on skewed data."""
+"""Join-cost utilities: Bloom-filter pruning equals the plain join;
+the broadcast hint is gated on the real row count."""
 
 from pyspark.sql import functions as F
 
 from telemetry_streaming_datalake_spark.operators import skew as SK
-
-
-def _skewed(spark):
-    """90% of rows share one key — the hot-key shape salting exists for."""
-    hot = spark.range(900).select(
-        F.lit(1).alias("k"), (F.col("id") * 10).alias("v")
-    )
-    cold = spark.range(100).select(
-        (F.col("id") % 7 + 2).alias("k"), F.col("id").alias("v")
-    )
-    return hot.unionByName(cold)
-
-
-def test_salted_join_equals_plain_join(spark):
-    fact = _skewed(spark)
-    dim = spark.createDataFrame(
-        [(k, f"name{k}") for k in range(1, 9)], "k long, name string"
-    )
-    got = SK.salted_join(fact, dim, ["k"], buckets=4)
-    want = fact.join(dim, "k")
-    assert got.count() == want.count()
-    assert got.exceptAll(want.select(*got.columns)).count() == 0
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    fact = _skewed(spark)
-    dim = spark.createDataFrame([(1, "one")], "k long, name string")
-    got = SK.salted_join(fact, dim, ["k"], buckets=4, how="left")
-    assert got.count() == fact.count()
-    assert got.filter(F.col("name").isNull()).count() == 100
-
-
-def test_salted_count_equals_plain_count(spark):
-    df = _skewed(spark)
-    got = {(r.k): r.n for r in SK.salted_count(df, ["k"], buckets=8).collect()}
-    want = {(r.k): r["count"] for r in df.groupBy("k").count().collect()}
-    assert got == want
 
 
 def test_bloom_prune_no_false_negatives(spark):

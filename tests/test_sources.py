@@ -103,139 +103,3 @@ def test_feed_c_roundtrip_matches_events(spark, events):
         (F.col("record_type") != "status") & (F.col("value") != F.col("raw_value"))
     )
     assert mismatched.count() == 0
-
-
-def test_orc_source_lands_identical_bronze(spark):
-    from pyspark.sql import functions as F
-
-    from telemetry_streaming_datalake_spark.ingest.bronze import parse_bronze
-    from telemetry_streaming_datalake_spark.session import load_table
-    from telemetry_streaming_datalake_spark.sources.textfeeds import bronze_from_orc
-
-    sf = "/root/testdata/sf0.001"
-    got = bronze_from_orc(spark, sf)
-    want = parse_bronze(load_table(spark, sf, "events"))
-    assert got.count() == want.count()
-    assert got.exceptAll(want.select(*got.columns)).count() == 0
-
-
-def test_kafka_reader_option_contract():
-    """The option map must match the reference reader verbatim
-    (Part1 - Step 01-02 ….scala:26) so a broker swap-in cannot drift."""
-    from telemetry_streaming_datalake_spark.sources import kafka as K
-
-    cfg = K.KafkaSourceConfig(
-        bootstrap_servers="broker1:9092,broker2:9092",
-        subscribe="intelsatusage",
-    )
-    opts = K.reader_options(cfg)
-    assert opts == {
-        "kafka.bootstrap.servers": "broker1:9092,broker2:9092",
-        "subscribe": "intelsatusage",
-        "startingOffsets": "latest",
-        "failOnDataLoss": "false",
-        "minPartitions": "10",
-    }
-    replay = K.KafkaSourceConfig(
-        bootstrap_servers="b:9092",
-        subscribe="t",
-        starting_offsets="earliest",
-        fail_on_data_loss=True,
-        min_partitions=None,
-        extra={"kafka.security.protocol": "SASL_SSL"},
-    )
-    ropts = K.reader_options(replay)
-    assert ropts["startingOffsets"] == "earliest"
-    assert ropts["failOnDataLoss"] == "true"
-    assert "minPartitions" not in ropts
-    assert ropts["kafka.security.protocol"] == "SASL_SSL"
-
-
-def test_kafka_writer_option_contract():
-    from telemetry_streaming_datalake_spark.sources import kafka as K
-
-    cfg = K.KafkaSinkConfig(
-        bootstrap_servers="b:9092", topic="gold", checkpoint_location="/ckpt"
-    )
-    assert K.writer_options(cfg) == {
-        "kafka.bootstrap.servers": "b:9092",
-        "topic": "gold",
-        "checkpointLocation": "/ckpt",
-    }
-
-
-def test_kafka_wire_analog_matches_batch_bronze(spark, tmp_path):
-    """The file analog emits the true kafka wire schema and the value
-    parse lands bronze identical to the parquet path."""
-    from telemetry_streaming_datalake_spark.ingest import bronze as B
-    from telemetry_streaming_datalake_spark.session import load_table
-    from telemetry_streaming_datalake_spark.sources import kafka as K
-
-    got = K.bronze_from_kafka_analog(spark, "/root/testdata/sf0.001")
-    want = B.parse_bronze(load_table(spark, "/root/testdata/sf0.001", "events"))
-    assert dict(got.dtypes) == dict(want.dtypes)
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    # the wire frame itself carries the format("kafka") schema
-    wire = K.file_analog_wire_stream(spark, "/root/testdata/sf0.001", str(tmp_path))
-    assert [f.name for f in wire.schema.fields] == [
-        "key", "value", "topic", "partition", "offset", "timestamp", "timestampType",
-    ]
-    assert wire.isStreaming
-
-
-def test_kafka_to_wire_roundtrip(spark):
-    """Publish-side (key, value) serialization round-trips through the
-    wire value parse losslessly."""
-    from pyspark.sql import functions as F
-
-    from telemetry_streaming_datalake_spark.sources import kafka as K
-
-    df = spark.createDataFrame(
-        [(1, "m1", 2.5), (2, "m2", 0.0)], "id long, metric string, v double"
-    )
-    wire = K.to_wire(df, "id")
-    assert [f.name for f in wire.schema.fields] == ["key", "value"]
-    back = wire.select(
-        F.from_json(F.col("value").cast("string"), "id long, metric string, v double").alias("r")
-    ).select("r.*")
-    assert sorted(back.collect()) == sorted(df.collect())
-
-
-def test_pipeline_config_contract():
-    """The Configuration seam: per-feed topics, lake/checkpoint paths,
-    pre-wired Kafka reader configs — one object per deployment."""
-    from telemetry_streaming_datalake_spark.config import (
-        DEFAULT_TOPICS,
-        PipelineConfig,
-    )
-    from telemetry_streaming_datalake_spark.sources import kafka as K
-
-    cfg = PipelineConfig(stage="prod", kafka_brokers="b1:9092,b2:9092",
-                         base_path="/lake/")
-    assert cfg.topic("feed_b") == DEFAULT_TOPICS["feed_b"]
-    assert cfg.lake_path("bronze") == "/lake/bronze"
-    assert cfg.checkpoint_path("bronze-hop") == "/lake/_checkpoint/bronze-hop"
-    src = cfg.kafka_source("feed_a")
-    opts = K.reader_options(src)
-    assert opts["kafka.bootstrap.servers"] == "b1:9092,b2:9092"
-    assert opts["subscribe"] == DEFAULT_TOPICS["feed_a"]
-
-
-def test_runtime_conf_applies_rocksdb_state_store(spark):
-    from telemetry_streaming_datalake_spark.config import (
-        STREAMING_RUNTIME_CONF,
-        apply_runtime_conf,
-    )
-
-    apply_runtime_conf(spark, extra={"spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions")})
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        assert spark.conf.get(key) == STREAMING_RUNTIME_CONF[key]
-    finally:
-        # restore the default provider so later streaming tests keep
-        # their HDFS-backed state layout
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-        )
