@@ -95,8 +95,8 @@ def _stage_parquet(src: str, landing: str, name: str) -> None:
 #: count at a streaming query's FIRST batch is baked into its
 #: checkpoint, and every partition is a live state-store instance that
 #: pays a per-batch commit (delta file write + fsync) for the query's
-#: whole life.  Profiled on this box (tools/drainprof.py, r15): the
-#: slo_burn drain spent ~50 s of task time in 64 state-store commits
+#: whole life.  ``tools/prof.py``'s state-operator records show the
+#: cost: the slo_burn drain spent ~50 s of task time in 64 state-store commits
 #: over a 2 MB feed — dimension-sized state does not need 32 stores,
 #: and 100 TB of drained input does not fit in 32 either.  Deriving the
 #: count from the drained bytes (capped at cluster parallelism, floored
@@ -997,8 +997,7 @@ def streaming_grouping_sets(
         ])
 
     drain(raw, ckpt, foreach_batch=merge_batch)
-    st = spark.read.parquet(os.path.join(current_version_dir(store_path), "partials"))
-    return st.select(
+    return read_store(spark, store_path, "partials").select(
         "grain", "bucket", "remote_id", "metric_id", "provider_id", "category_id",
         floor_round(F.col("p_sum").cast("double"), 6).alias("sum_value"),
         floor_round(F.col("p_sum").cast("double") / F.col("p_n"), 6).alias("avg_value"),
@@ -1015,10 +1014,13 @@ def streaming_grouping_sets(
     )
 
 
-def _fold_store(store: str, part: str, delta: DataFrame, batch_id: int, keys, aggs) -> None:
-    """Fold ``delta`` into an additive store's ``part`` relation (keyed
-    re-aggregate of stored ∪ delta) as a version committed with
-    ``batch_id``: a replayed id is skipped, so adds land exactly once."""
+def _fold_store(
+    store: str, part: str, delta: DataFrame, batch_id: int | None, keys, aggs
+) -> None:
+    """Fold ``delta`` into a store's ``part`` relation (keyed re-aggregate
+    of stored ∪ delta) as a new version.  With ``batch_id`` the version
+    commits with it and a replayed id is skipped, so an additive store's
+    adds land exactly once; an idempotent merge passes None."""
 
     def populate(cur: str | None, new_dir: str) -> None:
         merged = delta
@@ -1032,6 +1034,14 @@ def _fold_store(store: str, part: str, delta: DataFrame, batch_id: int, keys, ag
         merged.write.mode("overwrite").parquet(os.path.join(new_dir, part))
 
     publish_version(store, populate, batch_id=batch_id)
+
+
+def read_store(spark: SparkSession, store: str, part: str) -> DataFrame:
+    """Read the ``part`` relation of a store's committed version."""
+    cur = current_version_dir(store)
+    if cur is None:
+        raise FileNotFoundError(f"empty store: {store}")
+    return spark.read.parquet(os.path.join(cur, part))
 
 
 # --------------------------------------------------------------------------
@@ -1298,7 +1308,7 @@ def streaming_ohlc(
 HLL_STREAM_LG_K = 14
 
 
-def _merge_hll_store(spark: SparkSession, store: str, agg: DataFrame) -> None:
+def _merge_hll_store(store: str, agg: DataFrame) -> None:
     """Serving-store sketch merge: sketch(stored) ∪ sketch(delta) per
     (metric, datestamp) — the mergeable-sketch discipline that makes
     distinct counting incremental at 100 TB (the store holds one
@@ -1316,27 +1326,10 @@ def _merge_hll_store(spark: SparkSession, store: str, agg: DataFrame) -> None:
     overwrite would destroy every merged sketch on a mid-write crash,
     and replay only redelivers UNAPPLIED batches; with the swap the
     replayed batch re-merges into the intact old version."""
-
-    def populate(cur: str | None, new_dir: str) -> None:
-        merged = agg
-        if cur is not None:
-            merged = (
-                spark.read.parquet(cur)
-                .unionByName(agg)
-                .groupBy("metric", "datestamp")
-                .agg(F.hll_union_agg("sketch").alias("sketch"))
-            )
-        merged.write.mode("overwrite").parquet(new_dir)
-
-    publish_version(store, populate)
-
-
-def read_hll_store(spark: SparkSession, store: str) -> DataFrame:
-    """Read the committed contents of a sketch store."""
-    cur = current_version_dir(store)
-    if cur is None:
-        raise FileNotFoundError(f"empty sketch store: {store}")
-    return spark.read.parquet(cur)
+    _fold_store(
+        store, "sketches", agg, None, ["metric", "datestamp"],
+        [F.hll_union_agg("sketch").alias("sketch")],
+    )
 
 
 def streaming_approx_distinct(
@@ -1363,10 +1356,10 @@ def streaming_approx_distinct(
         agg = batch_df.groupBy("metric", "datestamp").agg(
             F.hll_sketch_agg("serial", F.lit(HLL_STREAM_LG_K)).alias("sketch")
         )
-        _merge_hll_store(spark, store, agg)
+        _merge_hll_store(store, agg)
 
     drain(bronze, ckpt, foreach_batch=merge)
-    estimates = read_hll_store(spark, store).select(
+    estimates = read_store(spark, store, "sketches").select(
         "metric",
         F.col("datestamp").alias("bucket"),
         F.hll_sketch_estimate("sketch").alias("approx"),
@@ -1400,38 +1393,6 @@ _CUSUM_STATE_SCHEMA = (
 )
 
 
-def _round_half_up_int(x):
-    """Vectorized ``int(Decimal(repr(x)).quantize(1, ROUND_HALF_UP))``
-    — Spark's ``round()`` semantics (shortest-repr HALF_UP) over a
-    float64 array.  Fast path: half-away-from-zero in float.  The two
-    can disagree only within ~1 ulp of a .5 fraction boundary, or when
-    |x| is large enough that ``x±0.5`` loses integer precision — for
-    |x| < 2^40 the float error stack is < 2.5e-4, so rows within 1e-3
-    of a boundary (plus all |x| ≥ 2^40) take the exact Decimal path.
-    NaN/±inf take it too, so they raise there instead of casting to
-    INT64_MIN on the fast path.
-    (r15: the cusum state fn ran this per row via Decimal — 4 Decimal
-    constructions per row dominated the drain's Python time.)"""
-    import numpy as np
-    from decimal import ROUND_HALF_UP, Decimal
-
-    finite = np.isfinite(x)
-    xf = np.where(finite, x, 0.0)
-    out = np.where(xf >= 0, np.floor(xf + 0.5), np.ceil(xf - 0.5)).astype(
-        np.int64
-    )
-    frac = np.abs(xf) % 1.0
-    risky = ~finite | (np.abs(frac - 0.5) < 1e-3) | (np.abs(x) >= 2.0**40)
-    if risky.any():
-        for i in np.nonzero(risky)[0]:
-            out[i] = int(
-                Decimal(repr(float(x[i]))).quantize(
-                    Decimal("1"), ROUND_HALF_UP
-                )
-            )
-    return out
-
-
 def _cusum_state_fn_factory(moments: dict):
     """Build the per-(serial, metric) CUSUM state function for a FIXED
     control-limit table (metric → rounded mean/std) — the production
@@ -1449,7 +1410,8 @@ def _cusum_state_fn_factory(moments: dict):
     )
 
     def fn(key, pdfs, state):
-        import numpy as np
+        from decimal import ROUND_HALF_UP, Decimal
+
         import pandas as pd
 
         mean6, std6 = moments.get(key[1], (None, None))
@@ -1457,95 +1419,54 @@ def _cusum_state_fn_factory(moments: dict):
             last_ts, cum_p, min_p, cum_n, min_n = state.get
         else:
             last_ts, cum_p, min_p, cum_n, min_n = -1, 0, 0, 0, 0
+        out = []
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks and std6 is not None:
+            whole = (
+                pd.concat(chunks, ignore_index=True)
+                .sort_values(["unix_ts", "event_id"])
+                .drop_duplicates("unix_ts", keep="first")
+            )
+            h_limit = CUSUM_H * std6
+            for r in whole.itertuples(index=False):
+                ts, v = int(r.unix_ts), float(r.value)
+                if last_ts >= 0 and ts <= last_ts:
+                    continue
+                # HALF_UP over shortest repr == Spark's round()
+                d_p = int(
+                    Decimal(repr((v - mean6 - CUSUM_K * std6) * 1e7)).quantize(
+                        Decimal("1"), ROUND_HALF_UP
+                    )
+                )
+                d_n = int(
+                    Decimal(repr((mean6 - v - CUSUM_K * std6) * 1e7)).quantize(
+                        Decimal("1"), ROUND_HALF_UP
+                    )
+                )
+                cum_p += d_p
+                min_p = min(min_p, cum_p)
+                cum_n += d_n
+                min_n = min(min_n, cum_n)
+                s_p = float(
+                    Decimal(repr((cum_p - min(min_p, 0)) / 1e7)).quantize(
+                        Decimal("0.0000001"), ROUND_HALF_UP
+                    )
+                )
+                s_n = float(
+                    Decimal(repr((cum_n - min(min_n, 0)) / 1e7)).quantize(
+                        Decimal("0.0000001"), ROUND_HALF_UP
+                    )
+                )
+                out.append(
+                    [key[0], key[1], ts, v, s_p, s_n, s_p > h_limit or s_n > h_limit]
+                )
+                last_ts = ts
+        state.update((last_ts, cum_p, min_p, cum_n, min_n))
         cols = [
             "serial", "metric", "unix_ts", "value",
             "cusum_pos", "cusum_neg", "is_change",
         ]
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks or std6 is None:
-            state.update((last_ts, cum_p, min_p, cum_n, min_n))
-            yield pd.DataFrame([], columns=cols)
-            return
-        whole = (
-            pd.concat(chunks, ignore_index=True)
-            .sort_values(["unix_ts", "event_id"])
-            .drop_duplicates("unix_ts", keep="first")
-        )
-        # sorted + ts-deduped, so the old row loop's rolling
-        # `ts <= last_ts → skip` reduces to one vectorized cut at the
-        # state's carried high-water mark
-        if last_ts >= 0:
-            whole = whole[whole["unix_ts"] > last_ts]
-        if not len(whole):
-            state.update((last_ts, cum_p, min_p, cum_n, min_n))
-            yield pd.DataFrame([], columns=cols)
-            return
-        ts = whole["unix_ts"].to_numpy(np.int64)
-        v = whole["value"].to_numpy(np.float64)
-        # identical float expressions to the old per-row loop (same
-        # IEEE ops in the same order), then HALF_UP-to-int vectorized
-        # with an exact-boundary fallback (_round_half_up_int)
-        d_p = _round_half_up_int((v - mean6 - CUSUM_K * std6) * 1e7)
-        d_n = _round_half_up_int((mean6 - v - CUSUM_K * std6) * 1e7)
-        # int64 cumsum wraps silently where Python ints never did —
-        # escalate to object (unbounded) ints when the worst-case
-        # running sum could near the int64 edge
-        bound = 2**62
-        if (
-            int(np.abs(d_p).max()) * len(d_p) + abs(cum_p) >= bound
-            or int(np.abs(d_n).max()) * len(d_n) + abs(cum_n) >= bound
-        ):
-            d_p = d_p.astype(object)
-            d_n = d_n.astype(object)
-        cp = cum_p + np.cumsum(d_p)
-        cn = cum_n + np.cumsum(d_n)
-        mp = np.minimum(min_p, np.minimum.accumulate(cp))
-        mn = np.minimum(min_n, np.minimum.accumulate(cn))
-        # (cum - min(min,0)) is an exact int64; for |int| < 2^53 the
-        # IEEE division by 1e7 IS the 7dp shortest-repr HALF_UP value
-        # the old Decimal path produced (int*10^-7 has exactly ≤7
-        # decimals, and every double's shortest repr quantizes back to
-        # it — argued in OPTIMIZATION_r15.md; guarded below)
-        ip = cp - np.minimum(mp, 0)
-        in_ = cn - np.minimum(mn, 0)
-        if (
-            ip.dtype == object
-            or max(np.abs(ip).max(), np.abs(in_).max()) >= 2.0**53
-        ):
-            from decimal import ROUND_HALF_UP, Decimal
-
-            q7 = Decimal("0.0000001")
-            s_p = np.array(
-                [
-                    float(Decimal(repr(x / 1e7)).quantize(q7, ROUND_HALF_UP))
-                    for x in ip
-                ]
-            )
-            s_n = np.array(
-                [
-                    float(Decimal(repr(x / 1e7)).quantize(q7, ROUND_HALF_UP))
-                    for x in in_
-                ]
-            )
-        else:
-            s_p = ip / 1e7
-            s_n = in_ / 1e7
-        h_limit = CUSUM_H * std6
-        out = pd.DataFrame(
-            {
-                "serial": key[0],
-                "metric": key[1],
-                "unix_ts": ts,
-                "value": v,
-                "cusum_pos": s_p,
-                "cusum_neg": s_n,
-                "is_change": (s_p > h_limit) | (s_n > h_limit),
-            }
-        )
-        state.update(
-            (int(ts[-1]), int(cp[-1]), int(mp[-1]), int(cn[-1]), int(mn[-1]))
-        )
-        yield out
+        yield pd.DataFrame(out, columns=cols)
 
     return fn
 
@@ -1719,14 +1640,6 @@ def _merge_cms_store(store: str, cells: DataFrame, batch_id: int) -> None:
     )
 
 
-def read_cms_store(spark: SparkSession, store: str) -> DataFrame:
-    """Read the committed cell relation of a CMS store."""
-    cur = current_version_dir(store)
-    if cur is None:
-        raise FileNotFoundError(f"empty CMS store: {store}")
-    return spark.read.parquet(os.path.join(cur, "cells"))
-
-
 def streaming_freq_sketch(
     spark: SparkSession,
     sf_dir: str,
@@ -1773,7 +1686,7 @@ def streaming_freq_sketch(
         state_src=(os.path.join(sf_dir, "events.parquet"),),
     )
     ground = dedup_exact(parse_bronze(load_table(spark, sf_dir, "events")))
-    return freq_sketch_audit(ground, sketch=read_cms_store(spark, store))
+    return freq_sketch_audit(ground, sketch=read_store(spark, store, "cells"))
 
 
 #: hash-bucket count for the crawl seen-store: admissions land in

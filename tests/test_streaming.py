@@ -723,19 +723,28 @@ def test_drain_scopes_state_parts_to_start(spark, tmp_path, monkeypatch):
         real_set(spark.conf, key, before)
 
 
-def test_round_half_up_int_rejects_non_finite():
-    """NaN and ±inf raise instead of casting to INT64_MIN; finite values
-    keep Spark's HALF_UP results, fast path and Decimal path alike."""
+def test_cusum_state_fn_rejects_non_finite():
+    """NaN and ±inf values raise in the CUSUM state function instead of
+    turning into garbage integer drift state; finite rows emit."""
     import numpy as np
+    import pandas as pd
     import pytest
 
-    got = SP._round_half_up_int(
-        np.array([0.5, -0.5, 1.4999, 2.5, -2.5, 3.2, -3.7, 1e12 + 0.5, 0.0])
-    )
-    assert got.tolist() == [1, -1, 1, 3, -3, 3, -4, 1_000_000_000_001, 0]
+    class FakeState:
+        exists = False
+        get = None
+
+        def update(self, v):
+            self.stored = v
+
+    fn = SP._cusum_state_fn_factory({"m": (1.0, 0.5)})
+    cols = ["unix_ts", "event_id", "value"]
+    ok = pd.DataFrame([[1, 1, 0.5], [2, 2, 1.5]], columns=cols)
+    assert len(pd.concat(fn(("s", "m"), iter([ok]), FakeState()))) == 2
     for bad in (np.nan, np.inf, -np.inf):
+        chunk = pd.DataFrame([[1, 1, 1.0], [2, 2, bad]], columns=cols)
         with pytest.raises((ValueError, ArithmeticError)):
-            SP._round_half_up_int(np.array([1.0, bad]))
+            list(fn(("s", "m"), iter([chunk]), FakeState()))
 
 
 def test_runner_feed_publishes_atomically(tmp_path, monkeypatch):
@@ -1084,9 +1093,9 @@ def test_streaming_hll_union_is_lossless_across_batches(spark, tmp_path):
     rows = out.collect()
     assert rows and all(r.within_tol for r in rows)
     # merged estimates == direct single-sketch estimates over the feed
-    from telemetry_streaming_datalake_spark.streaming.pipeline import read_hll_store
+    from telemetry_streaming_datalake_spark.streaming.pipeline import read_store
 
-    merged = read_hll_store(spark, str(tmp_path / "hll_store")).select(
+    merged = read_store(spark, str(tmp_path / "hll_store"), "sketches").select(
         "metric", "datestamp", F.hll_sketch_estimate("sketch").alias("est")
     )
     direct = (
@@ -1110,7 +1119,7 @@ def test_hll_store_merge_is_replay_idempotent(spark, tmp_path):
     from telemetry_streaming_datalake_spark.streaming.pipeline import (
         HLL_STREAM_LG_K,
         _merge_hll_store,
-        read_hll_store,
+        read_store,
     )
 
     store = str(tmp_path / "hll")
@@ -1121,12 +1130,12 @@ def test_hll_store_merge_is_replay_idempotent(spark, tmp_path):
     agg = batch.groupBy("metric", "datestamp").agg(
         F.hll_sketch_agg("serial", F.lit(HLL_STREAM_LG_K)).alias("sketch")
     )
-    _merge_hll_store(spark, store, agg)
-    first = read_hll_store(spark, store).select(
+    _merge_hll_store(store, agg)
+    first = read_store(spark, store, "sketches").select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0]
-    _merge_hll_store(spark, store, agg)  # replayed batch
-    again = read_hll_store(spark, store).select(
+    _merge_hll_store(store, agg)  # replayed batch
+    again = read_store(spark, store, "sketches").select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0]
     assert first == again
@@ -1142,7 +1151,7 @@ def test_hll_store_crash_mid_write_keeps_previous_version(spark, tmp_path):
     from telemetry_streaming_datalake_spark.streaming.pipeline import (
         HLL_STREAM_LG_K,
         _merge_hll_store,
-        read_hll_store,
+        read_store,
     )
 
     store = str(tmp_path / "hll")
@@ -1156,20 +1165,20 @@ def test_hll_store_crash_mid_write_keeps_previous_version(spark, tmp_path):
             F.hll_sketch_agg("serial", F.lit(HLL_STREAM_LG_K)).alias("sketch")
         )
 
-    _merge_hll_store(spark, store, sketch_of([f"s{i}" for i in range(50)]))
-    committed = read_hll_store(spark, store).select(
+    _merge_hll_store(store, sketch_of([f"s{i}" for i in range(50)]))
+    committed = read_store(spark, store, "sketches").select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0]
     # simulate a crash: v1 data lands but CURRENT never moves
-    sketch_of(["zz1", "zz2"]).write.parquet(_os.path.join(store, "v1"))
-    assert read_hll_store(spark, store).select(
+    sketch_of(["zz1", "zz2"]).write.parquet(_os.path.join(store, "v1", "sketches"))
+    assert read_store(spark, store, "sketches").select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0] == committed
     # replayed batch merges into the COMMITTED version, orphan is overwritten
-    _merge_hll_store(spark, store, sketch_of([f"t{i}" for i in range(10)]))
+    _merge_hll_store(store, sketch_of([f"t{i}" for i in range(10)]))
     versions = sorted(d for d in _os.listdir(store) if d.startswith("v"))
     assert versions == ["v0", "v1"]
-    final = read_hll_store(spark, store).select(
+    final = read_store(spark, store, "sketches").select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0]
     assert final >= committed  # 50 + 10 serials, zz* never merged
@@ -1311,7 +1320,7 @@ def test_streaming_cms_cells_equal_batch_sketch_across_batches(spark, tmp_path):
     from telemetry_streaming_datalake_spark.operators.rollup import cms_sketch
     from telemetry_streaming_datalake_spark.session import load_table
     from telemetry_streaming_datalake_spark.streaming.pipeline import (
-        read_cms_store,
+        read_store,
         streaming_freq_sketch,
     )
 
@@ -1333,7 +1342,7 @@ def test_streaming_cms_cells_equal_batch_sketch_across_batches(spark, tmp_path):
     assert rows and all(r.within_contract for r in rows)
     merged = {
         (r.row_idx, r.col_idx): r.cell_count
-        for r in read_cms_store(spark, str(tmp_path / "cms_store")).collect()
+        for r in read_store(spark, str(tmp_path / "cms_store"), "cells").collect()
     }
     direct = {
         (r.row_idx, r.col_idx): r.cell_count
@@ -1406,7 +1415,7 @@ def _cms_store(spark, root):
     def read():
         return {
             (r.row_idx, r.col_idx): r.cell_count
-            for r in SP.read_cms_store(spark, store).collect()
+            for r in SP.read_store(spark, store, "cells").collect()
         }
 
     def twice(one):  # cell-wise addition of the same batch
@@ -1506,14 +1515,14 @@ def test_cms_store_replay_is_skipped_by_ledger(spark, tmp_path):
     df = spark.createDataFrame([("a",), ("a",), ("b",)], "serial string")
     cells = cms_sketch(df)
     SP._merge_cms_store(store, cells, 0)
-    first = sorted(tuple(r) for r in SP.read_cms_store(spark, store).collect())
+    first = sorted(tuple(r) for r in SP.read_store(spark, store, "cells").collect())
     SP._merge_cms_store(store, cells, 0)  # replayed batch id
-    assert sorted(tuple(r) for r in SP.read_cms_store(spark, store).collect()) == first
+    assert sorted(tuple(r) for r in SP.read_store(spark, store, "cells").collect()) == first
     assert SP.version_batch_id(SP.current_version_dir(store)) == 0
     SP._merge_cms_store(store, cells, 1)  # genuinely new batch
     doubled = {
         (r.row_idx, r.col_idx): r.cell_count
-        for r in SP.read_cms_store(spark, store).collect()
+        for r in SP.read_store(spark, store, "cells").collect()
     }
     assert doubled == {
         (r.row_idx, r.col_idx): 2 * r.cell_count
@@ -1531,15 +1540,15 @@ def test_cms_store_ignores_uncommitted_version_dir(spark, tmp_path):
     df = spark.createDataFrame([("a",), ("b",)], "serial string")
     cells = cms_sketch(df)
     SP._merge_cms_store(store, cells, 0)
-    committed = sorted(tuple(r) for r in SP.read_cms_store(spark, store).collect())
+    committed = sorted(tuple(r) for r in SP.read_store(spark, store, "cells").collect())
     # simulate a crash: v1 data written, pointer never swapped
     crash_dir = os.path.join(store, "v1", "cells")
     cells.write.mode("overwrite").parquet(crash_dir)
-    assert sorted(tuple(r) for r in SP.read_cms_store(spark, store).collect()) == committed
+    assert sorted(tuple(r) for r in SP.read_store(spark, store, "cells").collect()) == committed
     SP._merge_cms_store(store, cells, 1)  # recovery merge lands in v1
     assert {
         (r.row_idx, r.col_idx): r.cell_count
-        for r in SP.read_cms_store(spark, store).collect()
+        for r in SP.read_store(spark, store, "cells").collect()
     } == {(r.row_idx, r.col_idx): 2 * r.cell_count for r in cells.collect()}
 
 
@@ -1561,7 +1570,7 @@ def test_streaming_cms_drops_cross_batch_duplicates(spark, tmp_path):
     from telemetry_streaming_datalake_spark.operators.rollup import cms_sketch
     from telemetry_streaming_datalake_spark.session import load_table
     from telemetry_streaming_datalake_spark.streaming.pipeline import (
-        read_cms_store,
+        read_store,
         streaming_freq_sketch,
     )
 
@@ -1587,7 +1596,7 @@ def test_streaming_cms_drops_cross_batch_duplicates(spark, tmp_path):
     assert all(r.within_contract for r in out.collect())
     merged = {
         (r.row_idx, r.col_idx): r.cell_count
-        for r in read_cms_store(spark, str(tmp_path / "cms_store")).collect()
+        for r in read_store(spark, str(tmp_path / "cms_store"), "cells").collect()
     }
     direct = {
         (r.row_idx, r.col_idx): r.cell_count

@@ -1,5 +1,6 @@
 """Structural guard: one stream-start primitive, one hop library, one
-commit protocol, one scratch owner, no library code only tests reach.
+commit protocol, one scratch owner, one timing loop in the tools, no
+library code only tests reach.
 
 Every library streaming query starts through
 ``streaming.pipeline.start_stream`` (``drain`` is its availableNow
@@ -13,8 +14,9 @@ comes from ``session.scratch_dir`` and every build-once dir from
 ``session.scratch_cache``.  This test fails when a second
 ``writeStream`` chain, ``readStream``, watermarked dedup, conf window,
 ``CURRENT`` writer, batch-id ledger, marker-file commit, temp-dir
-maker or module-level dir cache appears, or when a library def is
-reached from nothing but the tests.
+maker or module-level dir cache appears, when a tool outside
+``tools/prof.py`` runs its own noop-sink timing loop, or when a library
+def is reached from nothing but the tests.
 """
 
 from __future__ import annotations
@@ -127,6 +129,21 @@ def test_registry_makes_no_temp_dirs_of_its_own():
     ]
 
 
+def test_one_timing_loop():
+    # every tool times through tools/prof.py's time_key; the side
+    # scripts it replaced stay gone
+    tools = REPO / "tools"
+    noop = {
+        p.name
+        for p in sorted(tools.glob("*.py"))
+        for n in ast.walk(ast.parse(p.read_text()))
+        if isinstance(n, ast.Constant) and n.value == "noop"
+    }
+    assert noop == {"prof.py"}
+    for gone in ("qtime.py", "plansweep.py", "drainprof.py"):
+        assert not (tools / gone).exists()
+
+
 #: library defs nothing outside ``tests/`` reaches, kept on purpose:
 #: each backs a README capability, is the reference a test compares a
 #: reached operator against, or is a test fake
@@ -156,6 +173,17 @@ KEPT = {
     ("streaming/sinks.py", "InMemoryKVServingStore"): "test fake of the serving-sink contract",
     ("operators/dedup.py", "bucket_truncation"):
         "the clip monitor bucket_pairs' hot-bucket cap documents; tests pin the cap with it",
+    ("operators/derived.py", "cusum_changepoint"): "batch reference of streaming_cusum",
+    ("operators/derived.py", "downsample_ohlc"): "batch reference of streaming_ohlc",
+    ("operators/derived.py", "ewma_smooth"): "batch reference of streaming_ewma",
+    ("operators/detect.py", "slo_burn_alerts"): "batch reference of streaming_slo_burn",
+    ("operators/detect.py", "slo_hourly"): "the hourly stage of slo_burn_alerts",
+    ("operators/merge.py", "cdc_apply"): "batch reference of streaming_cdc_apply",
+    ("operators/rollup.py", "rollup_grouping_sets"):
+        "batch reference of streaming_grouping_sets",
+    ("operators/rollup.py", "rollup_hour"): "batch reference of incremental_rollup_hour",
+    ("operators/text.py", "tokenize_bpe"):
+        "README tokenizer: corpus tokenization via the trained segmentation",
 }
 
 

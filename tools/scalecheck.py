@@ -13,10 +13,14 @@ distributions to argue about):
   would.
 - ``customer`` copies unchanged (dimension).
 
-Usage: python tools/scalecheck.py [out_dir]       (default /tmp/tsdl_scale)
-Prints one JSON line: {"sf0.1": {q: sec}, "sf1x": {q: sec},
-"ratio": {q: r}}; a ratio near the 10x data growth (or below, where
-fixed per-job cost dominated at sf0.1) is linear scaling.
+Usage: python tools/scalecheck.py [out_dir] [key ...]   (default /tmp/tsdl_scale)
+
+Every registry key whose best-of-2 sf0.1 wall is >= 1 s gets a 10x
+row; named keys get one whatever their wall.  With no key named, the
+incremental_dedup production-shape row follows.  Walls come from
+tools/prof.py's ``time_key``.  A wall ratio near the 10x data growth
+(or below, where fixed per-job cost dominated at sf0.1) is linear
+scaling.
 """
 
 from __future__ import annotations
@@ -24,37 +28,20 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from telemetry_streaming_datalake_spark.session import get_spark, load_table, scratch_dir
-from telemetry_streaming_datalake_spark import datamodel as dm
-from telemetry_streaming_datalake_spark.ingest import bronze as B
-from telemetry_streaming_datalake_spark.ingest import silver as S
-from telemetry_streaming_datalake_spark.operators import cohort as CO
-from telemetry_streaming_datalake_spark.operators import corpus as CP
+import __spark_entry__ as E
 from telemetry_streaming_datalake_spark.operators import dedup as DD
-from telemetry_streaming_datalake_spark.operators import derived as DV
-from telemetry_streaming_datalake_spark.operators import detect as DT
-from telemetry_streaming_datalake_spark.operators import merge as M
-from telemetry_streaming_datalake_spark.operators import rollup as R
-from telemetry_streaming_datalake_spark.operators import temporal as T
-from telemetry_streaming_datalake_spark.operators import tseries as TS
-from telemetry_streaming_datalake_spark.operators import curation as CU
-from telemetry_streaming_datalake_spark.operators import text as TX
-from telemetry_streaming_datalake_spark.operators import similarity as SIM
-from telemetry_streaming_datalake_spark.operators import skew as SKW
-from telemetry_streaming_datalake_spark.operators import web as WB
-from telemetry_streaming_datalake_spark.streaming import pipeline as SP
-
-#: same cutoff the driver key uses (mid-corpus)
-MERGE_CUTOFF_UNIX = 1705276800
+from telemetry_streaming_datalake_spark.session import get_spark, load_table, scratch_dir
+from tools.prof import time_key
 
 SRC = "/root/testdata/sf0.1"
 REPLICAS = 10
+#: best-of-2 sf0.1 wall (s) at which an unnamed key earns a 10x row
+HOT_S = 1.0
 
 
 def generate_tpch(spark, out_dir: str) -> None:
@@ -180,295 +167,33 @@ def generate_embeddings(spark, out_dir: str) -> None:
     )
 
 
-def queries():
-    def _gold(s, d):
-        silver = S.to_silver(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events"))),
-            dm.metric_mapping(s),
-        )
-        history = dm.remote_history(s, load_table(s, d, "customer"))
-        return T.enrich_gold(silver, history)
-
-    return {
-        "dedup_minhash": lambda s, d: DD.dedup_minhash(load_table(s, d, "documents")),
-        "dup_clusters": lambda s, d: M.dup_clusters(
-            DD.ngram_jaccard_dedup(load_table(s, d, "documents"))
-        ),
-        # r12: the broadcast-gate-touched cluster-label consumers and
-        # the new web/mix/paragraph operators join the standing sweep
-        "canonical_docs": lambda s, d: M.canonical_docs(
-            load_table(s, d, "documents"),
-            M.dup_clusters(DD.ngram_jaccard_dedup(load_table(s, d, "documents"))),
-        ),
-        "leakage_safe_split": lambda s, d: CU.leakage_safe_split(
-            load_table(s, d, "documents")
-        ),
-        "html_extract": lambda s, d: WB.html_extract(
-            load_table(s, d, "documents")
-        ),
-        "url_canonicalize": lambda s, d: WB.url_canonicalize(
-            load_table(s, d, "documents")
-        ),
-        "train_mix_materialize": lambda s, d: CP.train_mix_materialize(
-            load_table(s, d, "documents"), target_tokens=40_000
-        ),
-        "paragraph_dedup": lambda s, d: DD.paragraph_dedup(
-            load_table(s, d, "documents")
-        ),
-        # r13: the registered web front door + its streaming capstone
-        "warc_extract": lambda s, d: WB.warc_extract(
-            load_table(s, d, "documents")
-        ),
-        "robots_gate": lambda s, d: WB.robots_gate(
-            WB.url_canonicalize(load_table(s, d, "documents")).select(
-                "doc_id", "canonical_url"
-            )
-        ),
-        "extraction_yield_report": lambda s, d: WB.extraction_yield_report(
-            load_table(s, d, "documents")
-        ),
-        "web_ingest_manifest": lambda s, d: WB.web_ingest_manifest(
-            load_table(s, d, "documents")
-        ),
-        "streaming_url_frontier": lambda s, d: SP.streaming_url_frontier(
-            s, d, scratch_dir("sc_frontier_")
-        ),
-        "streaming_web_ingest": lambda s, d: SP.streaming_web_ingest(
-            s, d, scratch_dir("sc_webingest_")
-        ),
-        "streaming_change_feed": lambda s, d: SP.streaming_change_feed(
-            s, d, scratch_dir("sc_changefeed_")
-        ),
-        "gapfill_hourly": lambda s, d: DV.gapfill_hourly(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
-        ),
-        "silver_explode": lambda s, d: S.to_silver_exploded(
-            B.dedup_exact(B.parse_bronze_payload(load_table(s, d, "events"))),
-            dm.metric_mapping(s),
-        ),
-        "agg_hour": lambda s, d: R.rollup_hour(_gold(s, d)),
-        "boilerplate_ngrams": lambda s, d: CP.boilerplate_ngrams(
-            load_table(s, d, "documents")
-        ),
-        "rollup_grouping_sets": lambda s, d: R.rollup_grouping_sets(_gold(s, d)),
-        "cohort_retention": lambda s, d: CO.cohort_retention(
-            load_table(s, d, "events")
-        ),
-        "rolling_active_users": lambda s, d: CO.rolling_active_users(
-            load_table(s, d, "events")
-        ),
-        # round-6: the VERDICT r5 perf-weak set — scale rows prove the
-        # sf0.1 numbers are fixed-cost, not super-linear work
-        "ts_similarity": lambda s, d: TS.ts_similarity(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
-        ),
-        "metric_correlation": lambda s, d: DV.metric_correlation(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
-        ),
-        "latest_state_diff": lambda s, d: M.latest_state_diff(
-            _gold(s, d), MERGE_CUTOFF_UNIX
-        ),
-        "dedup_simhash": lambda s, d: DD.simhash_near_dups(
-            load_table(s, d, "documents")
-        ),
-        "dedup_simhash_weighted": lambda s, d: DD.simhash_weighted_near_dups(
-            load_table(s, d, "documents")
-        ),
-        # round-6 additions with quadratic-risk or iterative surfaces
-        "curation_manifest": lambda s, d: CU.curation_manifest(
-            load_table(s, d, "documents")
-        ),
-        "incremental_dedup": lambda s, d: DD.incremental_dedup(s, d),
-        "tokenize_bpe": lambda s, d: TX.tokenize_bpe(load_table(s, d, "documents")),
-        # round-7 additions: per-series window / single-agg shapes
-        "ewma_smooth": lambda s, d: DV.ewma_smooth(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
-        ),
-        "cusum_changepoint": lambda s, d: DV.cusum_changepoint(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
-        ),
-        "downsample_ohlc": lambda s, d: DV.downsample_ohlc(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
-        ),
-        # round-8 additions: the gram self-join (quadratic-risk surface
-        # bounded by the per-gram cap), the broadcast-scored miner, and
-        # the two-agg seasonal report
-        "dup_spans": lambda s, d: DD.dup_spans(load_table(s, d, "documents")),
-        "seasonal_baseline": lambda s, d: DT.seasonal_baseline(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
-        ),
-        "decontaminate": lambda s, d: CP.decontaminate(
-            load_table(s, d, "documents")
-        ),
-        # round-8 continuation: rolling-frame report, keyed CDC fold,
-        # bloom-pruned shuffle join, PassJoin gram self-join
-        "slo_burn_alerts": lambda s, d: DT.slo_burn_alerts(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
-        ),
-        "cdc_apply": lambda s, d: M.cdc_apply(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
-        ),
-        "bloom_prune_join": lambda s, d: SKW.bloom_prune_join(
-            load_table(s, d, "lineitem"), load_table(s, d, "orders")
-        ),
-        "fuzzy_join": lambda s, d: DD.fuzzy_join(load_table(s, d, "documents")),
-        "trend_report": lambda s, d: DV.trend_report(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
-        ),
-        "fuzzy_blocking_report": lambda s, d: DD.fuzzy_blocking_report(
-            load_table(s, d, "documents")
-        ),
-        # round-8 late continuation: the CMS audit's exact side is the
-        # full groupBy the sketch replaces (linear is the right shape);
-        # bm25_indexed's best-of-2 takes the SECOND run — probe-only
-        # against the already-built index, i.e. the claim under test is
-        # that the partition-pruned probe stays ~flat as the corpus
-        # (and its index) grows 10x
-        "freq_sketch_audit": lambda s, d: R.freq_sketch_audit(
-            B.dedup_exact(B.parse_bronze(load_table(s, d, "events")))
-        ),
-        "bm25_indexed": lambda s, d: TX.bm25_indexed(s, d),
-        # the index BUILD side, measured as its dominant reduction (the
-        # (doc,term) partial agg + dl window) — the partitioned write
-        # itself is the same one-pass sink every bronze build pays
-        "text_index_build": lambda s, d: TX._postings(
-            load_table(s, d, "documents")
-        ),
-        # round-9 additions: the quantized-index probe's claim is the
-        # same as bm25_indexed's — best-of-2 takes the SECOND (probe-
-        # only) run, flat-ish as the corpus and its posting lists grow
-        # 10x because the probe reads only nprobe cell partitions of
-        # int8 codes; domain_cap is one dimension-sized count aggregate
-        # plus a window over only the over-cap subset
-        "ann_ivfpq": lambda s, d: SIM.ann_ivfpq(s, d, list(range(8))),
-        "domain_cap_sample": lambda s, d: CP.domain_cap_sample(
-            load_table(s, d, "documents")
-        ),
-        # r9 continuation: one map-only Arrow pass (bench matrix
-        # broadcast) and one lang-cardinality aggregate + broadcast
-        # filter — both should ride data growth linearly or better
-        "semantic_decontaminate": lambda s, d: SIM.semantic_decontaminate(
-            load_table(s, d, "embeddings")
-        ),
-        "quality_percentile_gate": lambda s, d: TX.quality_percentile_gate(
-            load_table(s, d, "documents")
-        ),
-        # r9 evidence widening: heavy LLM keys that never had a 10x row
-        "hard_negatives": lambda s, d: SIM.hard_negatives(
-            load_table(s, d, "embeddings"), list(range(8))
-        ),
-        "bm25_search": lambda s, d: TX.bm25_search(load_table(s, d, "documents")),
-        "hybrid_search": lambda s, d: SIM.hybrid_search(
-            load_table(s, d, "documents"), load_table(s, d, "embeddings")
-        ),
-        "lm_perplexity": lambda s, d: TX.lm_perplexity(
-            load_table(s, d, "documents")
-        ),
-        "tokenize_fixed_vocab": lambda s, d: TX.tokenize_fixed_vocab(
-            load_table(s, d, "documents")
-        ),
-        # r9 third continuation: one corpus scan -> one gram-keyed
-        # partial-agg shuffle for all orders; scoring is vocab-sized
-        "ngram_lm": lambda s, d: TX.ngram_lm(load_table(s, d, "documents")),
-        "badwords_filter": lambda s, d: CP.badwords_filter(load_table(s, d, "documents")),
-    }
-
-
-def time_queries(spark, sf_dir: str, only: set[str] | None = None) -> dict[str, float]:
-    out = {}
-    for name, fn in queries().items():
-        if only and name not in only:
-            continue
-        best = float("inf")
-        for _ in range(2):  # best-of-2, same convention as bench.py
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3)
-    return out
-
-
-def _timed_with_rows(spark, fn, sf_dir: str) -> tuple[float, int]:
-    """Best-of-2 wall (bench.py convention: clearCache between runs so
-    run 2 re-does all data work) + output row count via an Observation
-    on the SECOND run (no extra execution; the count aggregate is
-    output-cardinality work, negligible next to the plan itself)."""
-    from pyspark.sql import Observation
-
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    first = time.perf_counter() - t0
-
-    obs = Observation()
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).observe(obs, F.count(F.lit(1)).alias("rows")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    second = time.perf_counter() - t0
-    return round(min(first, second), 3), int(obs.get["rows"])
-
-
-def auto_sweep(
-    spark, out_dir: str, threshold: float = 1.0, only: set[str] | None = None
-) -> None:
-    """The STANDING per-round scale sweep (VERDICT r9 #3): every
-    registry key whose sf0.1 wall is >= ``threshold`` seconds gets a
-    10x row — wall at sf0.1 and at the synthesized 10x corpus, plus
-    output rows at both scales as the generic work-growth metric
-    (pair/gram-bounded operators surface their work product directly;
-    fixed-cardinality aggregates show ~1x rows, where the argument is
-    the 10x fact-input growth itself).  Prints JSON then a markdown
-    table ready to append to BASELINE.md."""
-    import __spark_entry__ as E
-
-    from pyspark.sql import Observation
-
+def auto_sweep(spark, out_dir: str, keys: list[str]) -> None:
+    """The standing scale sweep: every registry key whose best-of-2
+    sf0.1 wall is >= ``HOT_S`` seconds (every named key, whatever
+    its wall) gets a 10x row — wall at sf0.1 and at the synthesized 10x
+    corpus, plus output rows at both scales as the generic work-growth
+    metric (pair/gram-bounded operators surface their work product
+    directly; fixed-cardinality aggregates show ~1x rows, where the
+    argument is the 10x fact-input growth itself).  Prints JSON then a
+    markdown table ready to append to BASELINE.md."""
     qs = E.queries()
-    if only:
-        qs = {k: v for k, v in qs.items() if k in only}
-    # pass 1: one timed run per key at sf0.1; candidates over the
-    # threshold get a CONFIRMING second run (first runs overpay
-    # codegen compile — a single-run cut would flag half the registry)
-    # which doubles as the Observation row-count run, so the hot set
-    # reflects steady state and pass 2 only has to run the 10x side
-    walls: dict[str, float] = {}
-    rows01: dict[str, int] = {}
-    for name, fn in qs.items():
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        fn(spark, SRC).write.format("noop").mode("overwrite").save()
-        t1 = round(time.perf_counter() - t0, 3)
-        if t1 < threshold:
-            walls[name] = t1
-            continue
-        obs = Observation()
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        fn(spark, SRC).observe(obs, F.count(F.lit(1)).alias("rows")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        walls[name] = round(min(t1, time.perf_counter() - t0), 3)
-        rows01[name] = int(obs.get["rows"])
-    hot = sorted(k for k, v in walls.items() if v >= threshold)
+    small = {name: time_key(spark, qs[name], SRC) for name in keys or qs}
+    hot = sorted(k for k, r in small.items() if keys or r["best_s"] >= HOT_S)
     print(
-        json.dumps({"pass1_hot": {k: walls[k] for k in hot}, "threshold": threshold}),
+        json.dumps({"pass1_hot": {k: small[k]["best_s"] for k in hot}, "threshold": HOT_S}),
         flush=True,
     )
 
     rows: dict[str, dict] = {}
     for name in hot:
-        small, small_rows = walls[name], rows01[name]
-        big, big_rows = _timed_with_rows(spark, qs[name], out_dir)
+        s, b = small[name], time_key(spark, qs[name], out_dir)
         rows[name] = {
-            "sf0.1_s": small,
-            "sf1x_s": big,
-            "wall_ratio": round(big / small, 2),
-            "rows_sf0.1": small_rows,
-            "rows_sf1x": big_rows,
-            "row_growth": round(big_rows / small_rows, 2) if small_rows else None,
+            "sf0.1_s": s["best_s"],
+            "sf1x_s": b["best_s"],
+            "wall_ratio": round(b["best_s"] / s["best_s"], 2),
+            "rows_sf0.1": s["rows"],
+            "rows_sf1x": b["rows"],
+            "row_growth": round(b["rows"] / s["rows"], 2) if s["rows"] else None,
         }
         print(json.dumps({name: rows[name]}), flush=True)
 
@@ -484,35 +209,20 @@ def auto_sweep(
 
 
 def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--auto":
-        out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/tsdl_scale"
-        only = set(sys.argv[3:]) or None  # resume/focus: name the keys
-        spark = get_spark("scalecheck")
-        generate(spark, out_dir)
-        generate_embeddings(spark, out_dir)
-        load_table(spark, SRC, "events").count()  # warm scan/codegen
-        auto_sweep(spark, out_dir, only=only)
-        return
     out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/tsdl_scale"
-    only = set(sys.argv[2:]) or None  # focused runs: name the queries
-    if only:
-        unknown = only - set(queries())
-        if unknown:  # a typo'd key would otherwise skip silently
-            raise SystemExit(f"unknown scalecheck queries: {sorted(unknown)}")
+    keys = sys.argv[2:]
+    unknown = set(keys) - set(E.queries())
+    if unknown:  # checked before the minutes of corpus generation
+        raise SystemExit(f"unknown registry keys: {sorted(unknown)}")
     spark = get_spark("scalecheck")
     generate(spark, out_dir)
     generate_embeddings(spark, out_dir)
-    # warm up scan/codegen/worker-pool like bench.py, then measure
-    load_table(spark, SRC, "events").count()
-    small = time_queries(spark, SRC, only)
-    big = time_queries(spark, out_dir, only)
-    ratio = {k: round(big[k] / small[k], 2) for k in small}
-    result = {"sf0.1": small, "sf1x": big, "ratio": ratio}
-    if only is None:
-        result["incremental_dedup_prod"] = incremental_dedup_production_shape(
-            spark, out_dir
-        )
-    print(json.dumps(result))
+    load_table(spark, SRC, "events").count()  # warm scan/codegen
+    auto_sweep(spark, out_dir, keys)
+    if not keys:
+        print(json.dumps({
+            "incremental_dedup_prod": incremental_dedup_production_shape(spark, out_dir)
+        }))
 
 
 def incremental_dedup_production_shape(spark, out_dir: str) -> dict:
@@ -528,22 +238,12 @@ def incremental_dedup_production_shape(spark, out_dir: str) -> dict:
     big_docs = load_table(spark, out_dir, "documents")
     DD.build_dedup_index(big_docs.filter(F.col("doc_id") % 2 == 0), idx)
 
-    def probe(sf_dir):
-        inc = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 2 == 1
-        )
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            DD.incremental_dedup_against(spark, idx, inc).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
+    def probe(s, sf_dir):
+        inc = load_table(s, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
+        return DD.incremental_dedup_against(s, idx, inc)
 
-    t_small = probe(SRC)
-    t_big = probe(out_dir)
+    t_small = time_key(spark, probe, SRC)["best_s"]
+    t_big = time_key(spark, probe, out_dir)["best_s"]
     return {
         "increment_sf0.1": t_small,
         "increment_sf1x": t_big,
