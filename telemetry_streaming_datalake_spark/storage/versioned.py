@@ -370,17 +370,21 @@ class VersionedParquetStore:
         can drain a commit's added files IN PLACE — the Delta
         change-feed-as-stream posture — instead of copying them to a
         landing directory first (r15: saves one full write+read of the
-        delta in the change-feed topology)."""
+        delta in the change-feed topology).  The diff is against
+        manifest ``version - 1``: if that one was vacuumed, the added
+        files cannot be told from carried-over ones, so it raises like
+        :meth:`read_changes` does for a vacuumed anchor."""
         vs = self.versions()
-        if version not in vs:
-            raise ValueError(
-                f"version {version} is not an available version at "
-                f"{self.path} (available: {vs})"
-            )
+        prev = version - 1 if version > 0 else None
+        for v in (version, prev):
+            if v is not None and v not in vs:
+                raise ValueError(
+                    f"version {v} is not an available version at "
+                    f"{self.path} (available: {vs})"
+                )
         files = set(self._read_manifest(version)["files"])
-        idx = vs.index(version)
-        if idx > 0:
-            files -= set(self._read_manifest(vs[idx - 1])["files"])
+        if prev is not None:
+            files -= set(self._read_manifest(prev)["files"])
         return sorted(
             {os.path.join(self.path, *f.split(os.sep)[:2]) for f in files}
         )

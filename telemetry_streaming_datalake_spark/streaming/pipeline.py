@@ -30,8 +30,10 @@ upstream frame's schema, so no lake is footer-inferred);
 the batch loader; :func:`bronze_dedup` is the reference's per-feed
 watermark + hash-key dedup recipe; :func:`deduped_lake_stream` drains
 it to a lake and streams that lake back for the twins whose aggregate
-must be the query's one stateful operator; :func:`read_batch_lake`
-reads back the batchId-scoped lakes ``foreachBatch`` sinks land.
+must be the query's one stateful operator.  Every ``foreachBatch``
+body writes through one of the two sink primitives of
+:mod:`.sinks`: ``land_batch`` for one batch's rows, ``publish_frame``
+for a whole result.
 
 Scale notes: the watermark bounds dropDuplicates state exactly like the
 reference's 48 h watermark (``Part1 ….scala:69``); sinks partition by
@@ -55,7 +57,11 @@ from telemetry_streaming_datalake_spark.operators.derived import floor_round
 from telemetry_streaming_datalake_spark.session import load_table, normalize_nano_ts
 from telemetry_streaming_datalake_spark.streaming.sinks import (
     current_version_dir,
-    publish_version,
+    land_batch,
+    landed_batches,
+    publish_frame,
+    read_batch_lake,
+    read_store,
     version_batch_id,
 )
 
@@ -253,16 +259,6 @@ def bronze_dedup(bronze: DataFrame) -> DataFrame:
         .dropDuplicatesWithinWatermark(["unique_hash_key"])
         .drop("event_time")
     )
-
-
-def read_batch_lake(spark: SparkSession, lake_dir: str, schema) -> DataFrame:
-    """Read back a lake that ``foreachBatch`` lands under batchId-scoped
-    subdirectories (``batch-N``/``batch=N``).  The schema is explicit,
-    so a lake that got no rows — a drain of zero batches, or a split
-    whose other side took every row — reads as an empty frame instead
-    of failing schema inference; ``recursiveFileLookup`` reads every
-    batch dir as plain files (no ``batch`` partition column)."""
-    return spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(lake_dir)
 
 
 def streaming_bronze(
@@ -499,7 +495,8 @@ def streaming_stateful_latest(
     how many events stream through.  Arrow moves each batch's rows to
     Python in columnar form.
 
-    The parquet append sink accumulates one row per (key, batch); the
+    Each batch's emissions (one row per key it updated) land under
+    their batch id, so a replayed batch rewrites its own rows; the
     read-back keeps each key's final emission (max n_events — the count
     is strictly increasing), which equals the batch aggregate over the
     same feed: that equality is the oracle check, and with
@@ -523,9 +520,9 @@ def streaming_stateful_latest(
     # the reference uses for its Cosmos upsert writes
     drain(
         updated, ckpt, mode="update",
-        foreach_batch=lambda batch, _id: batch.write.mode("append").parquet(out),
+        foreach_batch=lambda batch, batch_id: land_batch(batch, out, batch_id),
     )
-    emissions = spark.read.parquet(out)
+    emissions = read_batch_lake(spark, out, STATEFUL_OUTPUT_SCHEMA)
     final = emissions.groupBy("serial", "metric").agg(
         F.max(
             F.struct("n_events", "sum_value", "last_ts", "last_value")
@@ -595,8 +592,8 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str, work_dir: str) -> Dat
     """Gap-based sessionization AS A STREAM — the same
     ``operators.sessions.sessionize`` transform applied to the file
     stream (one logical-plan API: ``session_window`` becomes the
-    stateful streaming session operator).  Complete-mode output through
-    a foreachBatch overwrite, so the availableNow drain materializes
+    stateful streaming session operator).  Complete-mode output is
+    published as a store version, so the availableNow drain materializes
     every session and must equal the batch result exactly
     (``tests/test_streaming.py``)."""
     from telemetry_streaming_datalake_spark.operators.sessions import sessionize
@@ -606,9 +603,9 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str, work_dir: str) -> Dat
     ckpt = os.path.join(work_dir, "sessions_ckpt")
     drain(
         sess, ckpt, mode="complete", state_src=(os.path.join(sf_dir, "events.parquet"),),
-        foreach_batch=lambda batch, _id: batch.write.mode("overwrite").parquet(out),
+        foreach_batch=lambda batch, _id: publish_frame(out, lambda _cur: batch),
     )
-    return spark.read.parquet(out)
+    return read_store(spark, out)
 
 
 def streaming_gold_three_hop(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
@@ -703,7 +700,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str, work_dir: str) ->
     )
     out = os.path.join(work_dir, "slide_out")
     ckpt = os.path.join(work_dir, "slide_ckpt")
-    # complete-mode foreachBatch overwrite: append mode only flushes a
+    # complete-mode result published per trigger: append mode only flushes a
     # window once the watermark passes its END, so an availableNow
     # drain would hold back every window inside the late-data horizon
     # — complete mode emits the full aggregate each trigger (in
@@ -711,9 +708,9 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str, work_dir: str) ->
     # stream advances; the semantics checked here are identical)
     drain(
         windowed, ckpt, mode="complete", state_src=(os.path.join(sf_dir, "events.parquet"),),
-        foreach_batch=lambda batch, _id: batch.write.mode("overwrite").parquet(out),
+        foreach_batch=lambda batch, _id: publish_frame(out, lambda _cur: batch),
     )
-    res = spark.read.parquet(out)
+    res = read_store(spark, out)
     return res.select(
         F.unix_timestamp(F.col("window.start")).alias("window_start"),
         "metric",
@@ -845,11 +842,11 @@ def streaming_quarantine_split(spark: SparkSession, sf_dir: str, work_dir: str) 
     these records on the floor — `Part2 ….scala:52`).  Batch==stream
     code: the router is the identical function.
 
-    Replay idempotency (the `gate_and_land_batch` contract): each
-    micro-batch lands under a batchId-scoped subdirectory in OVERWRITE
-    mode, so a checkpoint restart that re-delivers a partially
-    committed batch rewrites its own directories instead of
-    double-appending to shared sinks.  The DLQ keeps its
+    Replay idempotency: each micro-batch lands through
+    :func:`~.sinks.land_batch` (``batch=<id>``, overwrite), so a
+    checkpoint restart that re-delivers a partially committed batch
+    rewrites its own directories instead of double-appending to shared
+    sinks.  The DLQ keeps its
     reason-partitioned layout inside each batch directory via a
     duplicated ``reason_dir`` partition column (the data column rides
     in the files, so the recursive read-back loses nothing).
@@ -864,26 +861,18 @@ def streaming_quarantine_split(spark: SparkSession, sf_dir: str, work_dir: str) 
     ok_dir = os.path.join(work_dir, "bronze_ok")
     dlq_dir = os.path.join(work_dir, "dead_letter")
     ckpt = os.path.join(work_dir, "quarantine_ckpt")
-    os.makedirs(ok_dir, exist_ok=True)
-    os.makedirs(dlq_dir, exist_ok=True)
     mapping = dm.metric_mapping(spark)
     raw = events_stream(spark, sf_dir, work_dir)
 
     def split_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sub = f"batch-{batch_id:08d}"
         routed = bronze_quarantine(batch_df, mapping).persist()
         try:
-            (
-                routed.filter(F.col("route") == "bronze")
-                .write.mode("overwrite")
-                .parquet(os.path.join(ok_dir, sub))
-            )
-            (
-                routed.filter(F.col("route") == "quarantine")
-                .withColumn("reason_dir", F.col("reason"))
-                .write.partitionBy("reason_dir")
-                .mode("overwrite")
-                .parquet(os.path.join(dlq_dir, sub))
+            land_batch(routed.filter(F.col("route") == "bronze"), ok_dir, batch_id)
+            land_batch(
+                routed.filter(F.col("route") == "quarantine").withColumn(
+                    "reason_dir", F.col("reason")
+                ),
+                dlq_dir, batch_id, partition_by="reason_dir",
             )
         finally:
             routed.unpersist()
@@ -926,15 +915,10 @@ def streaming_grouping_sets(
       :func:`~..operators.rollup.rollup_grouping_sets` row-for-row
       (pytest-pinned; the driver checks against the same SQL oracle).
 
-    The store commits like the CMS sketch store (and for the same
-    reason): sum/count partials are additive, NOT idempotent, so a
-    checkpoint replay of an already-merged batch would double-count —
-    :func:`_fold_store` publishes each version with its batch id
-    (:func:`~.sinks.publish_version`), which skips a replayed id, and a
-    crash mid-rewrite leaves the previous version intact for the
-    replay to merge into.  The partition-pruned variant is
-    :class:`~.sinks.ParquetUpsertStore`, already proven by
-    ``streaming_upsert``.
+    Sum/count partials are additive, NOT idempotent, so like the CMS
+    store :func:`_fold_store` publishes each version with its batch id:
+    a replayed id is skipped, and a crash mid-rewrite leaves the
+    previous version for the replay to merge into.
     """
     from telemetry_streaming_datalake_spark.datamodel import (
         metric_mapping,
@@ -989,7 +973,7 @@ def streaming_grouping_sets(
             "remote_id", "metric_id", "provider_id", "category_id",
             "p_sum", "p_min", "p_max", "p_n",
         )
-        _fold_store(store_path, "partials", delta, batch_id, _GS_KEYS, [
+        _fold_store(store_path, delta, batch_id, _GS_KEYS, [
             F.sum("p_sum").alias("p_sum"),
             F.min("p_min").alias("p_min"),
             F.max("p_max").alias("p_max"),
@@ -997,7 +981,7 @@ def streaming_grouping_sets(
         ])
 
     drain(raw, ckpt, foreach_batch=merge_batch)
-    return read_store(spark, store_path, "partials").select(
+    return read_store(spark, store_path).select(
         "grain", "bucket", "remote_id", "metric_id", "provider_id", "category_id",
         floor_round(F.col("p_sum").cast("double"), 6).alias("sum_value"),
         floor_round(F.col("p_sum").cast("double") / F.col("p_n"), 6).alias("avg_value"),
@@ -1014,34 +998,21 @@ def streaming_grouping_sets(
     )
 
 
-def _fold_store(
-    store: str, part: str, delta: DataFrame, batch_id: int | None, keys, aggs
-) -> None:
-    """Fold ``delta`` into a store's ``part`` relation (keyed re-aggregate
-    of stored ∪ delta) as a new version.  With ``batch_id`` the version
-    commits with it and a replayed id is skipped, so an additive store's
-    adds land exactly once; an idempotent merge passes None."""
-
-    def populate(cur: str | None, new_dir: str) -> None:
-        merged = delta
-        if cur is not None:
-            merged = (
-                delta.sparkSession.read.parquet(os.path.join(cur, part))
-                .unionByName(delta)
-                .groupBy(*keys)
-                .agg(*aggs)
-            )
-        merged.write.mode("overwrite").parquet(os.path.join(new_dir, part))
-
-    publish_version(store, populate, batch_id=batch_id)
-
-
-def read_store(spark: SparkSession, store: str, part: str) -> DataFrame:
-    """Read the ``part`` relation of a store's committed version."""
-    cur = current_version_dir(store)
-    if cur is None:
-        raise FileNotFoundError(f"empty store: {store}")
-    return spark.read.parquet(os.path.join(cur, part))
+def _fold_store(store: str, delta: DataFrame, batch_id: int | None, keys, aggs) -> None:
+    """Fold ``delta`` into a store (keyed re-aggregate of stored ∪
+    delta) as a new version.  With ``batch_id`` the version commits
+    with it and a replayed id is skipped, so an additive store's adds
+    land exactly once; an idempotent merge passes None."""
+    publish_frame(
+        store,
+        lambda cur: delta if cur is None else (
+            delta.sparkSession.read.parquet(cur)
+            .unionByName(delta)
+            .groupBy(*keys)
+            .agg(*aggs)
+        ),
+        batch_id=batch_id,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1053,13 +1024,12 @@ def gate_and_land_batch(
     batch_df: DataFrame, keep_dir: str, rej_dir: str, batch_id: int
 ) -> None:
     """One micro-batch of the corpus gate: apply the Gopher rules and
-    land keepers/rejects under ``<lake>/batch-<id>/`` in overwrite
-    mode.  Re-invoking with the same ``batch_id`` (checkpoint replay
-    after a mid-commit crash) rewrites the same directories — exactly
-    once per batch id, never a double append."""
+    land keepers/rejects through :func:`~.sinks.land_batch`.
+    Re-invoking with the same ``batch_id`` (checkpoint replay after a
+    mid-commit crash) rewrites the same directories — exactly once per
+    batch id, never a double append."""
     from telemetry_streaming_datalake_spark.operators.text import gopher_filter
 
-    sub = f"batch-{batch_id:08d}"
     gated = gopher_filter(batch_df).persist()
     # the split must PARTITION the batch: a NULL keep (text-less doc —
     # every rule comparison is NULL) matches neither `keep` nor
@@ -1067,12 +1037,8 @@ def gate_and_land_batch(
     # lakes (caught by the NULL-text fuzz corpus); they are rejects
     keep_eff = F.coalesce(F.col("keep"), F.lit(False))
     try:
-        gated.filter(keep_eff).write.mode("overwrite").parquet(
-            os.path.join(keep_dir, sub)
-        )
-        gated.filter(~keep_eff).write.mode("overwrite").parquet(
-            os.path.join(rej_dir, sub)
-        )
+        land_batch(gated.filter(keep_eff), keep_dir, batch_id)
+        land_batch(gated.filter(~keep_eff), rej_dir, batch_id)
     finally:
         gated.unpersist()
 
@@ -1089,12 +1055,9 @@ def streaming_corpus_gate(spark: SparkSession, sf_dir: str, work_dir: str) -> Da
     so the drained union equals the batch gate row-for-row (the
     driver oracle).
 
-    Replay idempotency (ADVICE r6): each micro-batch lands in a
-    batchId-scoped subdirectory written in OVERWRITE mode, so a
-    checkpoint restart that re-delivers a partially committed batch
-    rewrites its own directory instead of double-appending — the same
-    contract :class:`..streaming.sinks.InMemoryKVServingStore` keeps
-    via applied-batch tracking.
+    Replay idempotency: each micro-batch lands through
+    :func:`~.sinks.land_batch`, so a re-delivered batch rewrites its
+    own directory instead of double-appending.
     """
     from telemetry_streaming_datalake_spark.operators.text import gopher_filter
 
@@ -1106,8 +1069,6 @@ def streaming_corpus_gate(spark: SparkSession, sf_dir: str, work_dir: str) -> Da
 
     keep_dir = os.path.join(work_dir, "corpus_keep")
     rej_dir = os.path.join(work_dir, "corpus_reject")
-    os.makedirs(keep_dir, exist_ok=True)
-    os.makedirs(rej_dir, exist_ok=True)
     ckpt = os.path.join(work_dir, "gate_ckpt")
 
     drain(
@@ -1285,9 +1246,9 @@ def streaming_ohlc(
     ckpt = os.path.join(work_dir, "ohlc_ckpt")
     drain(
         windowed, ckpt, mode="complete", state_src=(silver_dir,),
-        foreach_batch=lambda batch, _id: batch.write.mode("overwrite").parquet(out),
+        foreach_batch=lambda batch, _id: publish_frame(out, lambda _cur: batch),
     )
-    res = spark.read.parquet(out)
+    res = read_store(spark, out)
     return res.select(
         "serial",
         "metric",
@@ -1318,16 +1279,12 @@ def _merge_hll_store(store: str, agg: DataFrame) -> None:
     bookkeeping: HLL union is idempotent (A ∪ A = A — a sketch records
     register maxima), so a checkpoint restart that re-delivers a
     micro-batch merges the same sketch again with zero effect — the
-    one foreachBatch sink here that publishes without a batch id
-    (pinned in ``tests/test_streaming.py``).
-
-    Durability: each merge lands in a NEW version behind the atomic
-    ``CURRENT`` swap (:func:`~.sinks.publish_version`) — an in-place
-    overwrite would destroy every merged sketch on a mid-write crash,
-    and replay only redelivers UNAPPLIED batches; with the swap the
-    replayed batch re-merges into the intact old version."""
+    one fold here that publishes without a batch id (pinned in
+    ``tests/test_streaming.py``).  A crash mid-merge leaves the previous
+    version current (:func:`~.sinks.publish_frame`), so the replayed
+    batch re-merges into it."""
     _fold_store(
-        store, "sketches", agg, None, ["metric", "datestamp"],
+        store, agg, None, ["metric", "datestamp"],
         [F.hll_union_agg("sketch").alias("sketch")],
     )
 
@@ -1359,7 +1316,7 @@ def streaming_approx_distinct(
         _merge_hll_store(store, agg)
 
     drain(bronze, ckpt, foreach_batch=merge)
-    estimates = read_store(spark, store, "sketches").select(
+    estimates = read_store(spark, store).select(
         "metric",
         F.col("datestamp").alias("bucket"),
         F.hll_sketch_estimate("sketch").alias("approx"),
@@ -1565,9 +1522,9 @@ def streaming_slo_burn(
     ckpt = os.path.join(work_dir, "slo_ckpt")
     drain(
         windowed, ckpt, mode="complete", state_src=(silver_dir,),
-        foreach_batch=lambda batch, _id: batch.write.mode("overwrite").parquet(out),
+        foreach_batch=lambda batch, _id: publish_frame(out, lambda _cur: batch),
     )
-    hourly = spark.read.parquet(out).select(
+    hourly = read_store(spark, out).select(
         F.unix_timestamp(F.col("window.start")).alias("hour_epoch"),
         "hourstamp",
         "n_1h",
@@ -1610,9 +1567,9 @@ def streaming_cdc_apply(
     ckpt = os.path.join(work_dir, "cdc_ckpt")
     drain(
         folded, ckpt, mode="complete", state_src=(silver_dir,),
-        foreach_batch=lambda batch, _id: batch.write.mode("overwrite").parquet(out),
+        foreach_batch=lambda batch, _id: publish_frame(out, lambda _cur: batch),
     )
-    return cdc_project(spark.read.parquet(out))
+    return cdc_project(read_store(spark, out))
 
 
 # --------------------------------------------------------------------------
@@ -1635,7 +1592,7 @@ def _merge_cms_store(store: str, cells: DataFrame, batch_id: int) -> None:
     old version and its id stay current and the replay re-merges.
     """
     _fold_store(
-        store, "cells", cells, batch_id, ["row_idx", "col_idx"],
+        store, cells, batch_id, ["row_idx", "col_idx"],
         [F.sum("cell_count").alias("cell_count")],
     )
 
@@ -1686,7 +1643,7 @@ def streaming_freq_sketch(
         state_src=(os.path.join(sf_dir, "events.parquet"),),
     )
     ground = dedup_exact(parse_bronze(load_table(spark, sf_dir, "events")))
-    return freq_sketch_audit(ground, sketch=read_store(spark, store, "cells"))
+    return freq_sketch_audit(ground, sketch=read_store(spark, store))
 
 
 #: hash-bucket count for the crawl seen-store: admissions land in
@@ -1737,33 +1694,24 @@ def _seen_compact(
     compacted versions go through the publish's own sweep."""
     import shutil
 
-    deltas = [
-        os.path.join(seen_dir, d)
-        for d in os.listdir(seen_dir)
-        if d.startswith("batch=") and int(d.split("=", 1)[1]) < batch_id
-    ]
+    deltas = [d for j, d in landed_batches(seen_dir).items() if j < batch_id]
     if not deltas:
         return
 
-    def populate(cur: str | None, new_dir: str) -> None:
+    def build(cur: str | None) -> DataFrame:
+        # no distinct: per-batch admissions are disjoint by the
+        # anti-join's own contract, so the fold is a pure union.  The
+        # bucket-partitioned publish keys the write on the bucket
+        # (guide §6 small-files): one file per bucket, not (tasks ×
+        # buckets) — the listing/open cost the compaction removes
         folded = _seen_read(spark, seen_dir, deltas, key_col)
         if cur is not None:
             folded = _seen_read(spark, cur, [cur], key_col).unionByName(folded)
-        # no distinct: per-batch admissions are disjoint by the
-        # anti-join's own contract, so the fold is a pure union.
-        # repartition("bucket") before the partitioned write (guide §6
-        # small-files): without it every input task writes a file into
-        # every bucket dir it touches — (tasks × buckets) files per
-        # fold, which is exactly the listing/open cost the compaction
-        # exists to remove.  Keyed on the partition column, each bucket
-        # lands in ONE task → one file per bucket, bounded store-wide.
-        folded.repartition("bucket").write.partitionBy("bucket").mode(
-            "overwrite"
-        ).parquet(new_dir)
+        return folded
 
     comp = os.path.join(seen_dir, "compacted")
     if (
-        publish_version(comp, populate, batch_id=batch_id)
+        publish_frame(comp, build, batch_id=batch_id, partition_by="bucket")
         or version_batch_id(current_version_dir(comp)) == batch_id
     ):
         for d in deltas:
@@ -1795,9 +1743,7 @@ def _seen_probe(
     # store; leftover dirs from a crash mid-sweep are subsumed by it,
     # so reading them would only duplicate work
     resid = [
-        os.path.join(seen_dir, d)
-        for d in os.listdir(seen_dir)
-        if d.startswith("batch=") and int(d[6:]) != batch_id and int(d[6:]) >= fold
+        d for j, d in landed_batches(seen_dir).items() if j != batch_id and j >= fold
     ]
     frames = [_seen_read(s, comp, [comp], key_col)] if comp is not None else []
     if resid:
@@ -1829,19 +1775,16 @@ def _seen_admit(
     (it feeds the touched-bucket collect and the anti-join, so an
     aggregate behind it runs once per batch) and the probed result
     after it (it feeds the delta write and the caller's sinks)."""
-    os.makedirs(seen_dir, exist_ok=True)
     if batch_id > 0 and batch_id % compact_every == 0:
         _seen_compact(keys.sparkSession, seen_dir, batch_id, key_col)
     cand = keys.withColumn("bucket", _seen_bucket_col(key_col)).localCheckpoint(eager=True)
     fresh = _seen_probe(cand, seen_dir, batch_id, key_col)
     if fresh is not cand:
         fresh = fresh.localCheckpoint(eager=True)
-    # delta write keyed on the partition column (guide §6): one file
-    # per touched bucket instead of (tasks × buckets) — the probe's
-    # listing/open cost is bounded at any batch size
-    fresh.select(key_col, "bucket").repartition("bucket").write.partitionBy(
-        "bucket"
-    ).mode("overwrite").parquet(os.path.join(seen_dir, f"batch={batch_id}"))
+    # bucket-partitioned land (guide §6): one file per touched bucket
+    # instead of (tasks × buckets) — the probe's listing/open cost is
+    # bounded at any batch size
+    land_batch(fresh.select(key_col, "bucket"), seen_dir, batch_id, partition_by="bucket")
     return fresh
 
 
@@ -1934,7 +1877,6 @@ def streaming_url_frontier(
     raw = landing_stream(spark, landing, spark.read.parquet(landing).schema, max_files=1)
     seen_dir = os.path.join(work_dir, "frontier_seen")
     admit_dir = os.path.join(work_dir, "frontier_admit")
-    os.makedirs(admit_dir, exist_ok=True)
     ckpt = os.path.join(work_dir, "frontier_ckpt")
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
@@ -1947,9 +1889,7 @@ def streaming_url_frontier(
         # and evaluated once per batch (r14 opt; equality with
         # url_canonicalize's keeper rows pytest-pinned)
         admitted = _seen_admit(WB.url_keepers(batch_df), seen_dir, batch_id, compact_every)
-        admitted.drop("bucket").write.mode("overwrite").parquet(
-            os.path.join(admit_dir, f"batch={batch_id}")
-        )
+        land_batch(admitted.drop("bucket"), admit_dir, batch_id)
 
     drain(raw, ckpt, foreach_batch=_admit)
     return read_batch_lake(
@@ -1995,7 +1935,6 @@ def streaming_web_ingest(
     raw = landing_stream(spark, landing, spark.read.parquet(landing).schema, max_files=1)
     seen_dir = os.path.join(work_dir, "ingest_seen")
     lake_dir = os.path.join(work_dir, "ingest_lake")
-    os.makedirs(lake_dir, exist_ok=True)
     ckpt = os.path.join(work_dir, "ingest_ckpt")
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -2076,9 +2015,7 @@ def streaming_web_ingest(
             "extracted_text",
             "n_blocks",
         )
-        final.write.mode("overwrite").parquet(
-            os.path.join(lake_dir, f"batch={batch_id}")
-        )
+        land_batch(final, lake_dir, batch_id)
 
     drain(raw, ckpt, foreach_batch=_ingest)
     return read_batch_lake(
@@ -2141,7 +2078,6 @@ def streaming_paragraph_dedup(
     raw = landing_stream(spark, landing, spark.read.parquet(landing).schema, max_files=1)
     seen_dir = os.path.join(work_dir, "para_seen")
     out_dir = os.path.join(work_dir, "para_clean")
-    os.makedirs(out_dir, exist_ok=True)
     ckpt = os.path.join(work_dir, "para_ckpt")
 
     def _clean(batch_df: DataFrame, batch_id: int) -> None:
@@ -2187,9 +2123,7 @@ def streaming_paragraph_dedup(
                 F.lit(False),
             ),
         )
-        DD.para_reassemble(ranked).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
+        land_batch(DD.para_reassemble(ranked), out_dir, batch_id)
 
     drain(raw, ckpt, foreach_batch=_clean)
     return read_batch_lake(
@@ -2252,18 +2186,13 @@ def streaming_change_feed(
         ).parquet(feed_dir)
 
     lake_dir = os.path.join(work_dir, "silver_lake")
-    os.makedirs(lake_dir, exist_ok=True)
     ckpt = os.path.join(work_dir, "feed_ckpt")
     mapping = dm.metric_mapping(spark)
 
     def _hop(batch_df: DataFrame, batch_id: int) -> None:
-        # batchId-scoped OVERWRITE, never a blind append: a foreachBatch
-        # replay after a checkpoint restart re-lands the identical dir
-        # instead of double-writing rows (the frontier/corpus-gate
-        # idempotency contract)
-        to_silver(batch_df, mapping).write.mode("overwrite").parquet(
-            os.path.join(lake_dir, f"batch={batch_id}")
-        )
+        # a batch-id land, never a blind append: a replay after a
+        # checkpoint restart re-lands the identical dir
+        land_batch(to_silver(batch_df, mapping), lake_dir, batch_id)
 
     feed = landing_stream(spark, feed_dir, spark.read.parquet(feed_dir).schema)
     drain(feed, ckpt, foreach_batch=_hop)

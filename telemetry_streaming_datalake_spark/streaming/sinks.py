@@ -1,22 +1,26 @@
-"""Streaming sinks: keyed upsert (MERGE-analog) and latest-value store.
+"""Streaming sinks: every ``foreachBatch`` writes through one of two
+primitives, and every lake and store has one layout.
 
-Reference semantics: every aggregate stream lands via ``foreachBatch``
-+ MERGE/ItemOverwrite (``Gold Aggregation/Step 05 ….scala:108-121`` and
-the Cosmos ``ItemOverwrite`` write strategy) — i.e. the sink is a
-keyed upsert, newest batch wins per id.
+Exactly-once comes from a replayable source plus an idempotent sink
+(*Structured Streaming*, SIGMOD 2018); the reference gets it from one
+Delta write per hop (``Gold Aggregation/Step 05 ….scala:108-121``).
 
-Parquet-lake formulation: the store is a *partitioned* directory; an
-upsert micro-batch touches ONLY the partitions its keys live in —
-read those partitions (partition-pruned scan), resolve the winner per
-key (incoming row wins: ItemOverwrite), and land the result through
-Spark's dynamic partition overwrite, which replaces exactly the
-partitions present in the written frame and leaves every other
-partition's files untouched on disk.  That is the parquet analog of a
-Delta ``MERGE``: cost is O(touched partitions), never O(store) — at
-100 TB serving scale a micro-batch touching one hour of one day must
-not rewrite years of history.  (``tests/test_streaming.py`` pins the
-untouched-partition bytes.)  Swapping in Delta turns ``apply_batch``
-into a literal MERGE with the same contract.
+- :func:`land_batch` lands one micro-batch's rows in
+  ``<lake>/batch=<id>``, overwriting, so a replayed batch rewrites its
+  own dir.  :func:`read_batch_lake` reads the lake back (one never
+  landed reads as the empty relation); :func:`landed_batches` lists it.
+- :func:`publish_frame` writes a whole relation (a complete-mode
+  result, a folded store) as the next ``v{n}`` of a versioned store,
+  committed by :func:`publish_version`'s atomic ``CURRENT`` swap: a
+  reader sees the old version or the new one, never a partial dir.  A
+  ``batch_id`` commits with the version and a replayed id is skipped.
+  :func:`read_store` reads the committed relation, which every store
+  keeps at its version root.
+
+A partitioned write repartitions on its column first: one file per
+partition value, not one per input task.  :class:`ParquetUpsertStore`
+calls :func:`publish_version` itself, because it hardlinks the
+partitions a batch does not touch into the new version.
 """
 
 from __future__ import annotations
@@ -32,6 +36,51 @@ from pyspark.sql import Window
 #: the batch-id record inside a version dir; ``_``-prefixed, so Spark
 #: and pyarrow readers of the version never list it
 _BATCH_ID = "_batch_id"
+#: the one spelling of a landed batch's dir inside its lake
+_BATCH_DIR = "batch="
+
+
+def _overwrite(df: DataFrame, path: str, partition_by: str | None) -> None:
+    """Overwrite ``path`` with ``df``; a partitioned write is keyed on
+    its column first, so each partition value lands from one task."""
+    if partition_by:
+        df.repartition(partition_by).write.partitionBy(partition_by).mode(
+            "overwrite"
+        ).parquet(path)
+    else:
+        df.write.mode("overwrite").parquet(path)
+
+
+def land_batch(
+    df: DataFrame, lake: str, batch_id: int, partition_by: str | None = None
+) -> None:
+    """Land one micro-batch as ``<lake>/batch=<batch_id>`` (overwrite:
+    a replayed batch id rewrites its own dir, never appends twice)."""
+    _overwrite(df, os.path.join(lake, f"{_BATCH_DIR}{batch_id}"), partition_by)
+
+
+def landed_batches(lake: str) -> dict[int, str]:
+    """``{batch id: dir}`` of every batch landed in ``lake`` (empty
+    for a lake never landed)."""
+    if not os.path.isdir(lake):
+        return {}
+    return {
+        int(d[len(_BATCH_DIR):]): os.path.join(lake, d)
+        for d in os.listdir(lake)
+        if d.startswith(_BATCH_DIR)
+    }
+
+
+def read_batch_lake(spark: SparkSession, lake: str, schema) -> DataFrame:
+    """Read back a lake of :func:`land_batch` dirs.  The schema is
+    explicit, so a lake that got no rows — a drain of zero batches, or
+    a split whose other side took every row — reads as the empty
+    relation instead of failing schema inference; ``recursiveFileLookup``
+    reads every batch dir as plain files (no ``batch`` partition
+    column)."""
+    if not os.path.isdir(lake):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(lake)
 
 
 def current_version_dir(store: str) -> str | None:
@@ -56,8 +105,8 @@ def version_batch_id(version_dir: str) -> int | None:
 
 
 def publish_version(store: str, populate, *, batch_id: int | None = None) -> bool:
-    """The one commit protocol of every versioned store (upsert, HLL,
-    CMS, grouping sets, the seen store's compacted part):
+    """The one commit protocol of every versioned store (the upsert
+    store directly, every other one through :func:`publish_frame`):
     ``populate(cur, new_dir)`` gets the committed version dir (None
     when empty) and writes the next version into ``v{n+1}``; then the
     ``CURRENT`` pointer swaps atomically (tmp + ``os.replace``).  A
@@ -96,6 +145,29 @@ def publish_version(store: str, populate, *, batch_id: int | None = None) -> boo
         ):
             shutil.rmtree(os.path.join(store, d), ignore_errors=True)
     return True
+
+
+def publish_frame(
+    store: str, build, *, batch_id: int | None = None, partition_by: str | None = None
+) -> bool:
+    """Write ``build(cur)`` — a frame built from the committed version
+    dir ``cur`` (None for an empty store) — as the next version of
+    ``store`` and commit it (:func:`publish_version`; a replayed
+    ``batch_id`` is skipped and returns False).  If building or writing
+    the frame fails, ``CURRENT`` still names the previous version."""
+    return publish_version(
+        store,
+        lambda cur, new_dir: _overwrite(build(cur), new_dir, partition_by),
+        batch_id=batch_id,
+    )
+
+
+def read_store(spark: SparkSession, store: str) -> DataFrame:
+    """The relation of a store's committed version."""
+    cur = current_version_dir(store)
+    if cur is None:
+        raise FileNotFoundError(f"empty store: {store}")
+    return spark.read.parquet(cur)
 
 
 class ServingStoreWriter(abc.ABC):
@@ -174,19 +246,11 @@ class ParquetUpsertStore(ServingStoreWriter):
     use ``partition_col=None`` (full winner rewrite) or a partition
     scheme keyed off the key itself.
 
-    Durability (r8): every apply lands in a fresh ``v{n}`` directory
-    and becomes visible only via an atomic ``CURRENT`` pointer swap
-    (tmp + ``os.replace``) — the pre-r8 layout overwrote the store
-    directory in place, so a query stop or crash mid-apply could leave
-    the store EMPTY with no replay able to restore the lost rows (the
-    checkpoint only re-delivers unapplied batches).  With the swap
-    (:func:`publish_version`, shared with the sketch, grouping-sets and
-    seen stores), an aborted apply leaves an orphan ``v{n}`` that the
-    next apply overwrites, and readers always see the last committed
-    state.  The previous version is kept until the next successful
-    apply so in-flight lazy readers of the prior snapshot stay valid.
-    ItemOverwrite is replay-idempotent, so the store publishes without
-    a batch id and ``CURRENT`` and the version dirs hold nothing else.
+    Durability: every apply lands in a fresh ``v{n}`` and becomes
+    visible only through :func:`publish_version`'s atomic ``CURRENT``
+    swap, so a crash mid-apply leaves the last committed state readable
+    and the next apply overwrites the orphan.  ItemOverwrite is
+    replay-idempotent, so the store publishes without a batch id.
     """
 
     def __init__(

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from telemetry_streaming_datalake_spark.ingest import bronze as B
 from telemetry_streaming_datalake_spark.operators import retention as RT
 from telemetry_streaming_datalake_spark.streaming import pipeline as SP
+from telemetry_streaming_datalake_spark.streaming import sinks as SK
 from telemetry_streaming_datalake_spark.streaming.sinks import ParquetUpsertStore
 
 from tests.conftest import SF_DIR
@@ -446,29 +447,44 @@ def test_streaming_quarantine_split_matches_batch_router(spark, tmp_path):
     reasons = {
         d.split("=", 1)[1]
         for b in os.listdir(dlq)
-        if b.startswith("batch-")
+        if b.startswith("batch=")
         for d in os.listdir(os.path.join(dlq, b))
         if d.startswith("reason_dir=")
     }
     assert reasons and reasons <= {"bad_payload", "stale_ts", "unmapped_metric", "out_of_range"}
 
 
-def test_streaming_quarantine_split_replay_is_idempotent(spark, tmp_path):
+def _drained_rows(drain_fn):
+    return lambda spark, root: sorted(map(tuple, drain_fn(spark, SF_DIR, root).collect()))
+
+
+def _latest_emissions(spark, root):
+    # the emission lake itself, not the max-per-key read-back (which
+    # hides a duplicated emission)
+    SP.streaming_stateful_latest(spark, SF_DIR, root)
+    lake = os.path.join(root, "latest_state_out")
+    return spark.read.option("recursiveFileLookup", "true").parquet(lake).count()
+
+
+@pytest.mark.parametrize(
+    "run, ckpt",
+    [
+        (_drained_rows(SP.streaming_quarantine_split), "quarantine_ckpt"),
+        (_drained_rows(SP.streaming_corpus_gate), "gate_ckpt"),
+        (_latest_emissions, "latest_state_ckpt"),
+    ],
+    ids=["quarantine_split", "corpus_gate", "stateful_latest"],
+)
+def test_streaming_quarantine_split_replay_is_idempotent(spark, tmp_path, run, ckpt):
     """Checkpoint replay must not double-append: re-draining the same
     feed into the same sinks with a WIPED checkpoint re-delivers every
-    batch under the same ids, and the batchId-scoped overwrite dirs
-    must leave the union unchanged (the pre-r9 append form doubled
-    every row here)."""
-    import os
+    batch under the same ids, and the batch-id lands must leave the
+    result unchanged (an append sink doubles every row here)."""
     import shutil
 
-    from telemetry_streaming_datalake_spark.streaming import pipeline as SP
-
-    sf = "/root/testdata/sf0.001"
-    first = SP.streaming_quarantine_split(spark, sf, str(tmp_path)).collect()
-    shutil.rmtree(os.path.join(str(tmp_path), "quarantine_ckpt"))
-    replayed = SP.streaming_quarantine_split(spark, sf, str(tmp_path)).collect()
-    assert sorted(map(tuple, replayed)) == sorted(map(tuple, first))
+    first = run(spark, str(tmp_path))
+    shutil.rmtree(os.path.join(str(tmp_path), ckpt))
+    assert run(spark, str(tmp_path)) == first
 
 
 def test_streaming_grouping_sets_matches_batch(spark, tmp_path):
@@ -1093,9 +1109,9 @@ def test_streaming_hll_union_is_lossless_across_batches(spark, tmp_path):
     rows = out.collect()
     assert rows and all(r.within_tol for r in rows)
     # merged estimates == direct single-sketch estimates over the feed
-    from telemetry_streaming_datalake_spark.streaming.pipeline import read_store
+    from telemetry_streaming_datalake_spark.streaming.sinks import read_store
 
-    merged = read_store(spark, str(tmp_path / "hll_store"), "sketches").select(
+    merged = read_store(spark, str(tmp_path / "hll_store")).select(
         "metric", "datestamp", F.hll_sketch_estimate("sketch").alias("est")
     )
     direct = (
@@ -1119,8 +1135,8 @@ def test_hll_store_merge_is_replay_idempotent(spark, tmp_path):
     from telemetry_streaming_datalake_spark.streaming.pipeline import (
         HLL_STREAM_LG_K,
         _merge_hll_store,
-        read_store,
     )
+    from telemetry_streaming_datalake_spark.streaming.sinks import read_store
 
     store = str(tmp_path / "hll")
     batch = spark.createDataFrame(
@@ -1131,11 +1147,11 @@ def test_hll_store_merge_is_replay_idempotent(spark, tmp_path):
         F.hll_sketch_agg("serial", F.lit(HLL_STREAM_LG_K)).alias("sketch")
     )
     _merge_hll_store(store, agg)
-    first = read_store(spark, store, "sketches").select(
+    first = read_store(spark, store).select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0]
     _merge_hll_store(store, agg)  # replayed batch
-    again = read_store(spark, store, "sketches").select(
+    again = read_store(spark, store).select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0]
     assert first == again
@@ -1151,8 +1167,8 @@ def test_hll_store_crash_mid_write_keeps_previous_version(spark, tmp_path):
     from telemetry_streaming_datalake_spark.streaming.pipeline import (
         HLL_STREAM_LG_K,
         _merge_hll_store,
-        read_store,
     )
+    from telemetry_streaming_datalake_spark.streaming.sinks import read_store
 
     store = str(tmp_path / "hll")
 
@@ -1166,19 +1182,19 @@ def test_hll_store_crash_mid_write_keeps_previous_version(spark, tmp_path):
         )
 
     _merge_hll_store(store, sketch_of([f"s{i}" for i in range(50)]))
-    committed = read_store(spark, store, "sketches").select(
+    committed = read_store(spark, store).select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0]
     # simulate a crash: v1 data lands but CURRENT never moves
-    sketch_of(["zz1", "zz2"]).write.parquet(_os.path.join(store, "v1", "sketches"))
-    assert read_store(spark, store, "sketches").select(
+    sketch_of(["zz1", "zz2"]).write.parquet(_os.path.join(store, "v1"))
+    assert read_store(spark, store).select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0] == committed
     # replayed batch merges into the COMMITTED version, orphan is overwritten
     _merge_hll_store(store, sketch_of([f"t{i}" for i in range(10)]))
     versions = sorted(d for d in _os.listdir(store) if d.startswith("v"))
     assert versions == ["v0", "v1"]
-    final = read_store(spark, store, "sketches").select(
+    final = read_store(spark, store).select(
         F.hll_sketch_estimate("sketch")
     ).collect()[0][0]
     assert final >= committed  # 50 + 10 serials, zz* never merged
@@ -1319,10 +1335,8 @@ def test_streaming_cms_cells_equal_batch_sketch_across_batches(spark, tmp_path):
     )
     from telemetry_streaming_datalake_spark.operators.rollup import cms_sketch
     from telemetry_streaming_datalake_spark.session import load_table
-    from telemetry_streaming_datalake_spark.streaming.pipeline import (
-        read_store,
-        streaming_freq_sketch,
-    )
+    from telemetry_streaming_datalake_spark.streaming.pipeline import streaming_freq_sketch
+    from telemetry_streaming_datalake_spark.streaming.sinks import read_store
 
     sf = "/root/testdata/sf0.001"
     raw = load_table(spark, sf, "events")
@@ -1342,7 +1356,7 @@ def test_streaming_cms_cells_equal_batch_sketch_across_batches(spark, tmp_path):
     assert rows and all(r.within_contract for r in rows)
     merged = {
         (r.row_idx, r.col_idx): r.cell_count
-        for r in read_store(spark, str(tmp_path / "cms_store"), "cells").collect()
+        for r in read_store(spark, str(tmp_path / "cms_store")).collect()
     }
     direct = {
         (r.row_idx, r.col_idx): r.cell_count
@@ -1358,13 +1372,13 @@ def test_streaming_cms_skips_the_no_data_batch(spark, tmp_path, monkeypatch):
     no-data batch; the empty one has no cells, so the store publishes
     exactly one version (no re-read of the store into a copy)."""
     published = []
-    real = SP.publish_version
+    real = SK.publish_version
 
     def spy(store, populate, **kw):
         published.append(store)
         return real(store, populate, **kw)
 
-    monkeypatch.setattr(SP, "publish_version", spy)
+    monkeypatch.setattr(SK, "publish_version", spy)
     out = SP.streaming_freq_sketch(spark, SF_DIR, str(tmp_path))
     rows = out.collect()
     assert rows and all(r.within_contract for r in rows)
@@ -1387,14 +1401,14 @@ def _gs_store(spark, root):
         cur = SP.current_version_dir(store)
         return {
             tuple(r[:6]): (r.p_sum, r.p_min, r.p_max, r.p_n)
-            for r in spark.read.parquet(os.path.join(cur, "partials")).collect()
+            for r in spark.read.parquet(cur).collect()
         }
 
     def twice(one):  # sums and counts double, min/max stay
         return {k: (2 * s, lo, hi, 2 * n) for k, (s, lo, hi, n) in one.items()}
 
     def apply(bid):  # the grouping-sets merge's fold
-        SP._fold_store(store, "partials", delta, bid, SP._GS_KEYS, [
+        SP._fold_store(store, delta, bid, SP._GS_KEYS, [
             F.sum("p_sum").alias("p_sum"),
             F.min("p_min").alias("p_min"),
             F.max("p_max").alias("p_max"),
@@ -1415,7 +1429,7 @@ def _cms_store(spark, root):
     def read():
         return {
             (r.row_idx, r.col_idx): r.cell_count
-            for r in SP.read_store(spark, store, "cells").collect()
+            for r in SK.read_store(spark, store).collect()
         }
 
     def twice(one):  # cell-wise addition of the same batch
@@ -1482,7 +1496,7 @@ def test_batch_id_store_applies_each_batch_exactly_once(spark, tmp_path, monkeyp
     assert _store_snapshot(store) == before
     assert read() == one
 
-    real = SP.publish_version
+    real = SK.publish_version
 
     def crash_before_swap(store_, populate, **kw):
         def partial(cur, new_dir):
@@ -1491,13 +1505,13 @@ def test_batch_id_store_applies_each_batch_exactly_once(spark, tmp_path, monkeyp
 
         return real(store_, partial, **kw)
 
-    monkeypatch.setattr(SP, "publish_version", crash_before_swap)
+    monkeypatch.setattr(SK, "publish_version", crash_before_swap)
     with pytest.raises(RuntimeError):
         apply(2)
     assert os.path.isdir(os.path.join(store, "v1"))  # the uncommitted write
     assert _store_snapshot(store)[0] == before[0] == "v0"
     assert read() == one
-    monkeypatch.setattr(SP, "publish_version", real)
+    monkeypatch.setattr(SK, "publish_version", real)
     apply(2)  # recovery: the retried id lands in v1, once
     assert read() == twice(one)
     apply(2)
@@ -1515,14 +1529,14 @@ def test_cms_store_replay_is_skipped_by_ledger(spark, tmp_path):
     df = spark.createDataFrame([("a",), ("a",), ("b",)], "serial string")
     cells = cms_sketch(df)
     SP._merge_cms_store(store, cells, 0)
-    first = sorted(tuple(r) for r in SP.read_store(spark, store, "cells").collect())
+    first = sorted(tuple(r) for r in SK.read_store(spark, store).collect())
     SP._merge_cms_store(store, cells, 0)  # replayed batch id
-    assert sorted(tuple(r) for r in SP.read_store(spark, store, "cells").collect()) == first
+    assert sorted(tuple(r) for r in SK.read_store(spark, store).collect()) == first
     assert SP.version_batch_id(SP.current_version_dir(store)) == 0
     SP._merge_cms_store(store, cells, 1)  # genuinely new batch
     doubled = {
         (r.row_idx, r.col_idx): r.cell_count
-        for r in SP.read_store(spark, store, "cells").collect()
+        for r in SK.read_store(spark, store).collect()
     }
     assert doubled == {
         (r.row_idx, r.col_idx): 2 * r.cell_count
@@ -1540,16 +1554,35 @@ def test_cms_store_ignores_uncommitted_version_dir(spark, tmp_path):
     df = spark.createDataFrame([("a",), ("b",)], "serial string")
     cells = cms_sketch(df)
     SP._merge_cms_store(store, cells, 0)
-    committed = sorted(tuple(r) for r in SP.read_store(spark, store, "cells").collect())
+    committed = sorted(tuple(r) for r in SK.read_store(spark, store).collect())
     # simulate a crash: v1 data written, pointer never swapped
-    crash_dir = os.path.join(store, "v1", "cells")
+    crash_dir = os.path.join(store, "v1")
     cells.write.mode("overwrite").parquet(crash_dir)
-    assert sorted(tuple(r) for r in SP.read_store(spark, store, "cells").collect()) == committed
+    assert sorted(tuple(r) for r in SK.read_store(spark, store).collect()) == committed
     SP._merge_cms_store(store, cells, 1)  # recovery merge lands in v1
     assert {
         (r.row_idx, r.col_idx): r.cell_count
-        for r in SP.read_store(spark, store, "cells").collect()
+        for r in SK.read_store(spark, store).collect()
     } == {(r.row_idx, r.col_idx): 2 * r.cell_count for r in cells.collect()}
+
+
+def test_publish_frame_failed_build_keeps_the_committed_version(spark, tmp_path):
+    """A whole-result publish is atomic: a frame that fails while it is
+    written leaves CURRENT and the committed relation as they were (an
+    in-place overwrite would have deleted them first), and the next
+    good publish lands."""
+    store = str(tmp_path / "result")
+    good = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    assert SK.publish_frame(store, lambda _cur: good)
+    before = _store_snapshot(store)
+    first = sorted(tuple(r) for r in SK.read_store(spark, store).collect())
+    bad = good.withColumn("v", F.raise_error(F.lit("build failed")).cast("string"))
+    with pytest.raises(Exception, match="build failed"):
+        SK.publish_frame(store, lambda _cur: bad)
+    assert _store_snapshot(store)[0] == before[0] == "v0"
+    assert sorted(tuple(r) for r in SK.read_store(spark, store).collect()) == first
+    assert SK.publish_frame(store, lambda _cur: good.filter("k = 2"))
+    assert [tuple(r) for r in SK.read_store(spark, store).collect()] == [(2, "b")]
 
 
 def test_streaming_cms_drops_cross_batch_duplicates(spark, tmp_path):
@@ -1569,10 +1602,8 @@ def test_streaming_cms_drops_cross_batch_duplicates(spark, tmp_path):
     )
     from telemetry_streaming_datalake_spark.operators.rollup import cms_sketch
     from telemetry_streaming_datalake_spark.session import load_table
-    from telemetry_streaming_datalake_spark.streaming.pipeline import (
-        read_store,
-        streaming_freq_sketch,
-    )
+    from telemetry_streaming_datalake_spark.streaming.pipeline import streaming_freq_sketch
+    from telemetry_streaming_datalake_spark.streaming.sinks import read_store
 
     sf = "/root/testdata/sf0.001"
     raw = load_table(spark, sf, "events")
@@ -1596,7 +1627,7 @@ def test_streaming_cms_drops_cross_batch_duplicates(spark, tmp_path):
     assert all(r.within_contract for r in out.collect())
     merged = {
         (r.row_idx, r.col_idx): r.cell_count
-        for r in read_store(spark, str(tmp_path / "cms_store"), "cells").collect()
+        for r in read_store(spark, str(tmp_path / "cms_store")).collect()
     }
     direct = {
         (r.row_idx, r.col_idx): r.cell_count

@@ -1,6 +1,6 @@
 """Structural guard: one stream-start primitive, one hop library, one
-commit protocol, one scratch owner, one timing loop in the tools, no
-library code only tests reach.
+commit protocol, two sink primitives, one scratch owner, one timing
+loop in the tools, no library code only tests reach.
 
 Every library streaming query starts through
 ``streaming.pipeline.start_stream`` (``drain`` is its availableNow
@@ -9,11 +9,15 @@ runtime; every hop reads through ``streaming.pipeline.landing_stream`` and
 dedups through ``bronze_dedup``;
 every versioned store commits through
 ``streaming.sinks.publish_version``, which also owns the batch-id
-record that makes the additive stores exactly-once; every work dir
+record that makes the additive stores exactly-once; every
+``foreachBatch`` body writes through ``streaming.sinks.land_batch``
+(one ``batch=<id>`` dir per batch) or ``publish_frame`` (a whole
+relation as a store version); every work dir
 comes from ``session.scratch_dir`` and every build-once dir from
 ``session.scratch_cache``.  This test fails when a second
 ``writeStream`` chain, ``readStream``, watermarked dedup, conf window,
-``CURRENT`` writer, batch-id ledger, marker-file commit, temp-dir
+``CURRENT`` writer, batch-id ledger, marker-file commit, sink write
+or batch-dir spelling outside ``sinks.py``, temp-dir
 maker or module-level dir cache appears, when a tool outside
 ``tools/prof.py`` runs its own noop-sink timing loop, or when a library
 def is reached from nothing but the tests.
@@ -111,6 +115,21 @@ def test_batch_id_commits_only_with_the_version():
     # gone; the one batch-id record belongs to publish_version's module
     assert _owners(_const("applied.json", "_SUCCESS", "compacted_v=")) == set()
     assert _owners(_const("_batch_id")) == {("streaming/sinks.py", "")}
+
+
+def test_two_sink_primitives():
+    # under streaming/ only sinks.py writes, plus the batch-side staging
+    # that lays down a drain's input (never a foreachBatch body)
+    writers = {o for o in _owners(_attr("write")) if o[0].startswith("streaming/")}
+    assert {o for o in writers if o[0] != "streaming/sinks.py"} == {
+        ("streaming/pipeline.py", "streaming_bronze_feed_b"),
+        ("streaming/pipeline.py", "_stage_frontier_landing"),
+        ("streaming/pipeline.py", "streaming_change_feed"),
+        ("streaming/runner.py", "always_on_topology"),
+    }
+    # one spelling of a landed batch's dir, owned by the sinks
+    assert {o[0] for o in _owners(_const("batch="))} == {"streaming/sinks.py"}
+    assert _owners(_const("batch-")) == set()
 
 
 def test_one_scratch_owner():

@@ -386,3 +386,12 @@ def test_commit_data_dirs_are_the_versions_added_files_in_place(spark, tmp_path)
 
     with pytest.raises(ValueError):
         store.commit_data_dirs(99)
+    # the diff is against version-1, not the previous SURVIVING manifest:
+    # after vacuuming v0, v1's predecessor is gone, so v1's added files
+    # cannot be told from v0's carried-over dir
+    store.write(spark.range(9, 11).selectExpr("id", "id * 2 AS v"), mode="append")
+    store.vacuum(retain_last=2)
+    assert store.versions() == [1, 2]
+    with pytest.raises(ValueError, match="not an available version"):
+        store.commit_data_dirs(v1)
+    assert len(store.commit_data_dirs(2)) == 1
